@@ -9,10 +9,19 @@ At 100 TB this is a column-pruned scan with a cheap (files-count-sized)
 shuffle; no driver-side footer loop.
 
 Sidecar format: ``<table>/_sfc_stats.json`` —
-``{"columns": [...], "files": {file_uri: {"count": n, "cols":
+``{"columns": [...], "files": {rel_path: {"count": n, "cols":
 {col: {"min": v, "max": v, "nulls": n}}}}}`` with dates/timestamps stored as
 ISO strings (ISO order == chronological order, so string comparison prunes
-correctly).
+correctly).  Keys are decoded file paths relative to the table directory
+(``part-….parquet``, ``cell=3/part-….parquet``), the way Delta and Iceberg
+logs record data files, so a table can be moved or copied as a directory.
+``read_sidecar`` resolves them against the table's absolute path, so every
+caller sees absolute local paths; ``write_sidecar`` turns them back into
+relative keys and publishes the file atomically (a dot-named temp file in
+the table directory, then ``os.replace``), so a crash mid-write leaves the
+previous sidecar intact and readers never see a partial one.
+
+This module is the only one that knows the on-disk name and key format.
 """
 
 from __future__ import annotations
@@ -20,12 +29,19 @@ from __future__ import annotations
 import datetime
 import json
 import os
-from urllib.parse import urlparse
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 SIDECAR_NAME = "_sfc_stats.json"
+
+
+def _local_path(uri: str) -> str:
+    """A ``file:`` URI (what Spark's ``input_file_name()`` returns, and what
+    older sidecars stored as keys) as a decoded local path; anything else is
+    already a path and passes through."""
+    return unquote(urlparse(uri).path) if uri.startswith("file:") else uri
 
 
 def _jsonable(v):
@@ -66,7 +82,7 @@ def collect_file_stats(
     )
     files = {}
     for r in rows:
-        files[r["__file"]] = {
+        files[_local_path(r["__file"])] = {
             "count": r["__count"],
             "cols": {
                 c: {
@@ -84,24 +100,54 @@ def collect_file_stats(
         sidecar["bloom_columns"] = list(bloom_cols)
         blooms = collect_bloom_filters(spark, path, bloom_cols, bloom_fpp)
         for file_uri, per_col in blooms.items():
-            if file_uri in files:
-                files[file_uri]["blooms"] = per_col
-    out_path = os.path.join(path, SIDECAR_NAME)
-    with open(out_path, "w") as f:
-        json.dump(sidecar, f, default=str)
-    return out_path
+            info = files.get(_local_path(file_uri))
+            if info is not None:
+                info["blooms"] = per_col
+    return write_sidecar(path, sidecar)
 
 
-# Parsed-sidecar cache, keyed on the file's (size, mtime_ns): every pruned
-# scan calls read_sidecar at query-BUILD time (twice per layout query: the
-# cache-exists probe plus read_pruned), and re-parsing the JSON is pure
-# driver latency.  Invalidation mirrors loader._TABLE_CACHE: a rewritten
-# sidecar changes (size, mtime_ns) and misses.
+def write_sidecar(path: str, sidecar: dict) -> str:
+    """Publish ``sidecar`` (keys: absolute local paths, as ``read_sidecar``
+    returns them) as the table's sidecar with keys relative to ``path``.
+    Written to a dot-named temp file first — Spark and ``SfcTable.read``
+    skip dot files — then swapped in with ``os.replace``, so readers see
+    the old sidecar or the new one, never a torn write.  Returns the
+    sidecar path."""
+    root = os.path.abspath(path)
+    out = {
+        **sidecar,
+        "files": {
+            os.path.relpath(f, root): info
+            for f, info in sidecar["files"].items()
+        },
+    }
+    final = os.path.join(root, SIDECAR_NAME)
+    tmp = os.path.join(root, f".{SIDECAR_NAME}.{os.getpid()}.tmp")
+    try:
+        with open(tmp, "w") as f:
+            json.dump(out, f, default=str)
+        os.replace(tmp, final)
+    except BaseException:
+        if os.path.exists(tmp):
+            os.remove(tmp)
+        raise
+    return final
+
+
+# Parsed-sidecar cache, keyed on the file's absolute path and (inode, size,
+# mtime_ns): every pruned scan calls read_sidecar at query-BUILD time (twice
+# per layout query: the cache-exists probe plus read_pruned), and re-parsing
+# the JSON is pure driver latency.  Entries hold keys already resolved to
+# absolute paths, so a hit costs no path work.  Invalidation mirrors
+# loader._TABLE_CACHE: write_sidecar's os.replace gives the sidecar a new
+# inode, and a moved or copied table has a new path, so both miss.
 _SIDECAR_CACHE: dict[tuple, dict] = {}
 _SIDECAR_CACHE_MAX = 256
 
 
 def read_sidecar(path: str) -> dict | None:
+    """The sidecar of the table at ``path`` with its keys resolved to
+    absolute local paths, or None when the table has none."""
     import copy
 
     p = os.path.join(path, SIDECAR_NAME)
@@ -109,27 +155,31 @@ def read_sidecar(path: str) -> dict | None:
         st = os.stat(p)
     except OSError:
         return None
-    key = (os.path.abspath(p), st.st_size, st.st_mtime_ns)
+    key = (os.path.abspath(p), st.st_ino, st.st_size, st.st_mtime_ns)
     hit = _SIDECAR_CACHE.get(key)
     if hit is not None:
-        # deep copy: callers mutate the result in place (_rehome_sidecar
-        # rewrites file URIs, upsert merges file maps) — handing out the
-        # cached object would let them poison every later read
+        # deep copy: the result is the caller's to mutate — handing out the
+        # cached object would let one caller poison every later read
         return copy.deepcopy(hit)
     with open(p) as f:
         out = json.load(f)
+    # relative keys join onto the table root; an older sidecar's absolute
+    # file: URI decodes to an absolute path, which join leaves unchanged
+    root = os.path.abspath(path)
+    out["files"] = {
+        os.path.join(root, _local_path(f)): info
+        for f, info in out["files"].items()
+    }
     if len(_SIDECAR_CACHE) >= _SIDECAR_CACHE_MAX:
         _SIDECAR_CACHE.clear()
     _SIDECAR_CACHE[key] = copy.deepcopy(out)
     return out
 
 
-def file_size(file_uri: str) -> int:
-    p = urlparse(file_uri)
-    local = p.path if p.scheme in ("file", "") else None
-    if local is None:
-        return 0
+def file_size(file: str) -> int:
+    """Bytes of a sidecar file (a local path) or a snapshot-manifest
+    ``file:`` URI; 0 when it is missing or not on the local filesystem."""
     try:
-        return os.path.getsize(local)
+        return os.path.getsize(_local_path(file))
     except OSError:
         return 0

@@ -75,9 +75,6 @@ def keyed_upsert(
 
     shutil.rmtree(base_path)
     os.rename(tmp, base_path)
-    from lakehouse_sfc_spark.layout.writer import _rehome_sidecar
-
-    _rehome_sidecar(base_path, old_dir=tmp, new_dir=base_path)
     result["path"] = base_path
     return result
 
@@ -102,9 +99,7 @@ def scoped_upsert(
     ``stats_cols=record_keys + layout_cols`` at write time); falls back to
     the full-table ``keyed_upsert`` when it doesn't.
     """
-    import json
-
-    from lakehouse_sfc_spark.layout.stats import SIDECAR_NAME, read_sidecar
+    from lakehouse_sfc_spark.layout.stats import read_sidecar, write_sidecar
     from lakehouse_sfc_spark.table.pruning import Pred, prune_files
 
     spark = batch.sparkSession
@@ -137,7 +132,8 @@ def scoped_upsert(
             if len(keys) <= _KEYSET_CAP:
                 preds.append(Pred(k, "in", keys))
     affected, _ = prune_files(sidecar, preds)
-    untouched = [f for f in sidecar["files"] if f not in set(affected)]
+    affected_set = set(affected)
+    untouched = [f for f in sidecar["files"] if f not in affected_set]
 
     base_schema_df = spark.read.parquet(base_path)
     aligned = align_schema(batch, base_schema_df)
@@ -164,32 +160,18 @@ def scoped_upsert(
     tmp_sidecar = read_sidecar(tmp)
 
     # Swap: drop rewritten files, move new ones in, merge sidecars.
-    # The swap is LOCAL-FS ONLY (os.remove/os.rename): on an object store
-    # there is no atomic rename, and the equivalent move is write-new +
-    # sidecar-commit + delete-old — i.e. the sidecar becomes the commit
-    # point (exactly how Delta/Iceberg turn a file swap into a metadata
-    # swap).  Guard explicitly rather than corrupting a remote table.
-    from urllib.parse import urlparse
-
-    def _local(uri: str) -> str:
-        p = urlparse(uri)
-        if p.scheme not in ("file", ""):
-            raise NotImplementedError(
-                f"scoped_upsert file swap requires a local filesystem; got "
-                f"scheme {p.scheme!r} ({uri}).  On object stores, commit via "
-                "the sidecar: write new files, publish the merged sidecar, "
-                "then delete the replaced files."
-            )
-        return p.path if p.scheme == "file" else uri
-
+    # The swap is LOCAL-FS ONLY (os.remove/os.rename), like the sidecar
+    # itself: on an object store there is no atomic rename, and the
+    # equivalent move is write-new + sidecar-commit + delete-old — i.e. the
+    # sidecar becomes the commit point (exactly how Delta/Iceberg turn a
+    # file swap into a metadata swap).
     for f in affected:
-        os.remove(_local(f))
+        os.remove(f)
     new_files = {}
-    for i, (uri, info) in enumerate(sorted(tmp_sidecar["files"].items())):
-        src = _local(uri)
-        dst = os.path.join(base_path, f"upsert-{abs(hash(uri)) % 10**8}-{i}.parquet")
+    for i, (src, info) in enumerate(sorted(tmp_sidecar["files"].items())):
+        dst = os.path.join(base_path, f"upsert-{abs(hash(src)) % 10**8}-{i}.parquet")
         os.rename(src, dst)
-        new_files[f"file://{dst}"] = info
+        new_files[dst] = info
     import shutil
 
     shutil.rmtree(tmp)
@@ -202,8 +184,7 @@ def scoped_upsert(
     }
     if bloom_cols:
         merged_sidecar["bloom_columns"] = list(bloom_cols)
-    with open(os.path.join(base_path, SIDECAR_NAME), "w") as fh:
-        json.dump(merged_sidecar, fh, default=str)
+    write_sidecar(base_path, merged_sidecar)
     return {
         "scoped": True,
         "path": base_path,

@@ -279,7 +279,6 @@ def compact(
     )
     shutil.rmtree(path)
     os.rename(tmp, path)
-    _rehome_sidecar(path, old_dir=tmp, new_dir=path)
     result["path"] = path
     result["sidecar"] = result["sidecar"] and os.path.join(
         path, os.path.basename(result["sidecar"])
@@ -287,23 +286,3 @@ def compact(
     result["files_before"] = before
     result["files_after"] = len(spark.read.parquet(path).inputFiles())
     return result
-
-
-def _rehome_sidecar(table_path: str, old_dir: str, new_dir: str) -> None:
-    """Rewrite sidecar file URIs after a directory rename."""
-    import json
-
-    from lakehouse_sfc_spark.layout.stats import SIDECAR_NAME, read_sidecar
-
-    sidecar = read_sidecar(table_path)
-    if sidecar is None:
-        return
-    old_abs = os.path.abspath(old_dir)
-    new_abs = os.path.abspath(new_dir)
-    files = {
-        uri.replace(old_abs, new_abs, 1): info
-        for uri, info in sidecar["files"].items()
-    }
-    sidecar["files"] = files
-    with open(os.path.join(table_path, SIDECAR_NAME), "w") as fh:
-        json.dump(sidecar, fh, default=str)

@@ -191,29 +191,12 @@ def _read_utf8_coded(r: _BitReader) -> int:
     return n
 
 
-_FIXED_COEFFS = {
-    0: [],
-    1: [1],
-    2: [2, -1],
-    3: [3, -3, 1],
-    4: [4, -6, 4, -1],
-}
-
-
 def _fixed_residual(samples, order: int):
     """FLAC fixed-predictor residual = order-th binomial difference (the
     fixed coefficients ARE the binomial rows), as one np.diff."""
     import numpy as np
 
     return np.diff(np.asarray(samples, dtype=np.int64), n=order)
-
-
-def _zigzag(n: int) -> int:
-    return (n << 1) ^ (n >> 63) if n < 0 else n << 1
-
-
-def _unzigzag(u: int) -> int:
-    return (u >> 1) ^ -(u & 1)
 
 
 def _rice_param(residual) -> int:

@@ -703,13 +703,6 @@ def _band_explode(mh):
     ).select("doc_id", "bs.band", "bs.sig")
 
 
-def _mh_bands(ngr):
-    """MinHash signatures exploded into 16 banded (doc_id, band, sig) rows —
-    the shared candidate-generation front end of the LSH family (see
-    dedup_minhash_lsh for the full cost discipline notes)."""
-    return _band_explode(_mh_signatures(ngr))
-
-
 # --- D1: exact dedup --------------------------------------------------------
 
 
@@ -2892,10 +2885,6 @@ def sample_mixture_draw(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: temperature exponent for sample_mixture_temperature: weight ∝ mass^0.5
-#: (sqrt is the canonical "flatten the mixture" setting; α=1 degenerates to
-#: sample_mixture's proportional apportionment, α=0 to uniform-per-source)
-_MIXT_ALPHA_SQRT = True
 #: the mixture's char budget = total_chars // _MIXT_BUDGET_DIV
 _MIXT_BUDGET_DIV = 2
 

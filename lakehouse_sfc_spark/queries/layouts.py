@@ -20,7 +20,7 @@ from lakehouse_sfc_spark.queries.registry import dsum, register, sql_dsum
 from lakehouse_sfc_spark.sources.loader import load_table
 from lakehouse_sfc_spark.table import Pred, SfcTable, prune_files
 
-_VERSION = "v1"  # bump when key/layout semantics change
+_VERSION = "v2"  # bump when key/layout semantics change
 _LAYOUT_COLS = ["l_shipdate", "l_quantity"]
 _PREDS = [
     Pred(
@@ -288,7 +288,7 @@ def layout_skipping_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _DRIFT_BATCHES = 3
 _DRIFT_QTY_BUMP = 25  # update slice: l_quantity += 25 (moves rows out of box)
-_DRIFT_VERSION = "v2"  # bump when the state build or artifact shape changes
+_DRIFT_VERSION = "v3"  # bump when the state build or artifact shape changes
 
 
 def _drift_upd_mod(k: int) -> int:
@@ -430,32 +430,14 @@ def _drift_states_dir(spark: SparkSession, sf_dir: str) -> str:
                 {"batch": k, "ingest_s": round(_time.perf_counter() - t0, 3),
                  "bytes_table": _bytes(st)}
             )
-        # The sidecars recorded absolute file paths under the tmp build
-        # dir; after the atomic rename those would dangle (PATH_NOT_FOUND
-        # on the first pruned scan).  Rehome every state to the final
-        # cache path BEFORE publishing — a lost rename race is then still
-        # safe because the winner rehomed its own tree the same way.
+        # RQ7's second observable: bytes the S1 box probe scans after each
+        # ingest (the reference series grows 1 061 -> ~1 689 MB across
+        # batches).
         from lakehouse_sfc_spark.layout.stats import read_sidecar
-        from lakehouse_sfc_spark.layout.writer import _rehome_sidecar
 
         for k in range(_DRIFT_BATCHES + 1):
-            st_k = os.path.join(p, f"state_{k}")
-            # RQ7's second observable: bytes the S1 box probe scans after
-            # each ingest (the reference series grows 1 061 -> ~1 689 MB
-            # across batches).  Probe BEFORE the rehome — the sidecar's
-            # file paths must point at files that exist (still the tmp
-            # tree here) for the byte counters to be real sizes.
-            sc = read_sidecar(st_k)
-            _, pm = prune_files(sc, _PREDS)
-            _rehome_sidecar(st_k, old_dir=p, new_dir=path)
-            metrics[k].update(
-                {
-                    "files_total": pm["files_total"],
-                    "files_scanned": pm["files_scanned"],
-                    "bytes_total": pm["bytes_total"],
-                    "bytes_scanned": pm["bytes_scanned"],
-                }
-            )
+            sc = read_sidecar(os.path.join(p, f"state_{k}"))
+            metrics[k].update(prune_files(sc, _PREDS)[1])
         with open(os.path.join(p, "drift_metrics.json"), "w") as fh:
             json.dump({"sf_dir": sf_dir, "batches": metrics}, fh, indent=1)
         open(os.path.join(p, "_SUCCESS"), "w").close()
@@ -588,7 +570,7 @@ def _drift_census_lazy(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (delta_write_layout.py:137,201-203).  Until round 12 it was pytest-only;
 # this census puts the scale claim itself under the driver's oracle gate.
 
-_SCOPED_VERSION = "v1"
+_SCOPED_VERSION = "v2"
 _SCOPED_QTY_BUMP = 25
 #: update band: l_orderkey in [40%, 45%] of MAX(l_orderkey) — integer
 #: arithmetic on both engines, contiguous in key space so a linear layout
@@ -697,9 +679,6 @@ def _scoped_table_dir(spark: SparkSession, sf_dir: str) -> str:
             "files_rewritten", len(before)
         ) < len(before)
         res["band"] = [int(lo), int(hi)]
-        from lakehouse_sfc_spark.layout.writer import _rehome_sidecar
-
-        _rehome_sidecar(tbl, old_dir=p, new_dir=root)
         with open(os.path.join(p, "scoped_metrics.json"), "w") as fh:
             json.dump(res, fh, indent=1, default=str)
         open(os.path.join(p, "_SUCCESS"), "w").close()

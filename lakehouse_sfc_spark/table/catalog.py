@@ -52,11 +52,10 @@ class SfcTable:
         sc = self.sidecar
         if sc and sc.get("files"):
             import os
-            from urllib.parse import urlparse
 
             listed: set[str] = set()
             partitioned = False
-            for root, dirs, fnames in os.walk(self.path):
+            for root, dirs, fnames in os.walk(os.path.abspath(self.path)):
                 dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
                 if any("=" in d for d in dirs):
                     partitioned = True
@@ -64,8 +63,7 @@ class SfcTable:
                 for f in fnames:
                     if f.endswith(".parquet") and not f.startswith(("_", ".")):
                         listed.add(os.path.join(root, f))
-            side = {urlparse(u).path or u for u in sc["files"]}
-            if not partitioned and side == listed:
+            if not partitioned and set(sc["files"]) == listed:
                 from lakehouse_sfc_spark.table.pruning import (
                     _survivors_relation,
                 )

@@ -91,7 +91,9 @@ def _may_match(pred: Pred, mn, mx) -> bool:
 
 
 def prune_files(sidecar: dict, predicates: list[Pred]) -> tuple[list[str], dict]:
-    """Surviving file URIs + metrics.  Predicates on columns without stats
+    """Surviving files + metrics.  ``sidecar["files"]`` keys come back as the
+    survivors unchanged: absolute local paths from ``read_sidecar``, or a
+    snapshot manifest's ``file:`` URIs.  Predicates on columns without stats
     never prune (conservative) — both when the whole sidecar lacks the
     column and PER FILE, because after partition-spec evolution a manifest
     mixes files written under different specs: pre-evolution files carry no
@@ -101,8 +103,8 @@ def prune_files(sidecar: dict, predicates: list[Pred]) -> tuple[list[str], dict]
     survivors: list[str] = []
     total_bytes = 0
     scanned_bytes = 0
-    for file_uri, info in sidecar["files"].items():
-        sz = file_size(file_uri)
+    for f, info in sidecar["files"].items():
+        sz = file_size(f)
         total_bytes += sz
         keep = True
         for p in predicates:
@@ -123,7 +125,7 @@ def prune_files(sidecar: dict, predicates: list[Pred]) -> tuple[list[str], dict]
                     keep = False
                     break
         if keep:
-            survivors.append(file_uri)
+            survivors.append(f)
             scanned_bytes += sz
     metrics = {
         "files_total": len(sidecar["files"]),
@@ -171,14 +173,11 @@ _PRUNED_CACHE_MAX = 256
 
 
 def _survivors_relation(spark: SparkSession, survivors: list[str]) -> DataFrame:
-    from urllib.parse import urlparse
-
     key_parts = []
     try:
-        for uri in sorted(survivors):
-            local = urlparse(uri).path or uri
-            st = os.stat(local)
-            key_parts.append((uri, st.st_size, st.st_mtime_ns))
+        for f in sorted(survivors):
+            st = os.stat(f)
+            key_parts.append((f, st.st_size, st.st_mtime_ns))
         key = (spark.sparkContext.applicationId, tuple(key_parts))
     except OSError:
         key = None

@@ -11,7 +11,7 @@ Model
 ``<table>/_log/v<NNNNN>.json``      one manifest per version
 
 A manifest is the COMPLETE file listing for its version plus per-file
-min/max/count stats (the same shape as the ``_sfc_stats.json`` sidecar, so
+min/max/count stats (the same shape as the layout stats sidecar, so
 `table.pruning.prune_files` works on any historical version unchanged).
 Every mutation stages new files, then publishes a new manifest — the
 manifest write IS the commit point, files are never mutated or renamed

@@ -69,6 +69,23 @@ def test_pruned_equals_unpruned(spark, layout_tables):
     assert pruned == unpruned > 0
 
 
+def test_scan_under_path_with_space(spark, tmp_path):
+    """Spark reports input files as percent-encoded URIs; the sidecar must
+    hold decoded paths, or a table under a directory whose name has a
+    space cannot be scanned (PATH_NOT_FOUND on ``dir%20with%20space``)."""
+    from lakehouse_sfc_spark.table.pruning import preds_to_column
+
+    li = load_table(spark, SF, "lineitem")
+    tbl = SfcTable.write(
+        li, str(tmp_path / "dir with space" / "zorder"), layout="zorder",
+        layout_cols=LAYOUT_COLS, num_files=8,
+    )
+    got = sorted(map(tuple, tbl.scan(PREDS).collect()))
+    expect = sorted(map(tuple, li.filter(preds_to_column(PREDS)).collect()))
+    assert got == expect and got
+    assert tbl.last_scan_metrics["bytes_total"] > 0
+
+
 def test_sfc_layouts_skip_files(spark, layout_tables):
     scanned = {}
     for layout, tbl in layout_tables.items():
