@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 SIDECAR_NAME = "_sfc_stats.json"
 
 
-def _local_path(uri: str) -> str:
+def local_path(uri: str) -> str:
     """A ``file:`` URI (what Spark's ``input_file_name()`` returns, and what
     older sidecars stored as keys) as a decoded local path; anything else is
     already a path and passes through."""
@@ -82,7 +82,7 @@ def collect_file_stats(
     )
     files = {}
     for r in rows:
-        files[_local_path(r["__file"])] = {
+        files[local_path(r["__file"])] = {
             "count": r["__count"],
             "cols": {
                 c: {
@@ -100,7 +100,7 @@ def collect_file_stats(
         sidecar["bloom_columns"] = list(bloom_cols)
         blooms = collect_bloom_filters(spark, path, bloom_cols, bloom_fpp)
         for file_uri, per_col in blooms.items():
-            info = files.get(_local_path(file_uri))
+            info = files.get(local_path(file_uri))
             if info is not None:
                 info["blooms"] = per_col
     return write_sidecar(path, sidecar)
@@ -167,7 +167,7 @@ def read_sidecar(path: str) -> dict | None:
     # file: URI decodes to an absolute path, which join leaves unchanged
     root = os.path.abspath(path)
     out["files"] = {
-        os.path.join(root, _local_path(f)): info
+        os.path.join(root, local_path(f)): info
         for f, info in out["files"].items()
     }
     if len(_SIDECAR_CACHE) >= _SIDECAR_CACHE_MAX:
@@ -177,9 +177,11 @@ def read_sidecar(path: str) -> dict | None:
 
 
 def file_size(file: str) -> int:
-    """Bytes of a sidecar file (a local path) or a snapshot-manifest
-    ``file:`` URI; 0 when it is missing or not on the local filesystem."""
+    """Bytes of a local path or a ``file:`` URI (a sidecar file, a
+    snapshot-manifest entry, or a Spark ``inputFiles()`` /
+    ``input_file_name()`` value); 0 when it is missing or not on the local
+    filesystem."""
     try:
-        return os.path.getsize(_local_path(file))
+        return os.path.getsize(local_path(file))
     except OSError:
         return 0

@@ -25,7 +25,7 @@ from urllib.parse import urlparse
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from lakehouse_sfc_spark.layout.stats import collect_file_stats
+from lakehouse_sfc_spark.layout.stats import collect_file_stats, local_path
 from lakehouse_sfc_spark.sfc.keys import add_sfc_key
 
 LAYOUTS = ("baseline", "hashed", "linear", "zorder", "hilbert", "kdtree")
@@ -45,12 +45,10 @@ def estimate_bytes(df: DataFrame) -> int | None:
     if not files:
         return None
     for f in files:
-        p = urlparse(f)
-        path = p.path if p.scheme in ("file", "") else None
-        if path is None:
+        if urlparse(f).scheme not in ("file", ""):
             return None  # non-local FS: caller should pass num_files
         try:
-            total += os.path.getsize(path)
+            total += os.path.getsize(local_path(f))
         except OSError:
             return None
     return total

@@ -42,7 +42,12 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from lakehouse_sfc_spark.queries.registry import register
-from lakehouse_sfc_spark.sources.loader import load_table, materialize_once
+from lakehouse_sfc_spark.sources.loader import (
+    build_once,
+    load_table,
+    materialize_once,
+    scratch_dir,
+)
 
 # --- shared text kernels ----------------------------------------------------
 
@@ -1599,31 +1604,14 @@ def ann_ivf_partitioned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cost is O(data in probed cells), not O(table); the write pays one
     shuffle on ``cell``.  ``tests/test_plan_quality.py`` asserts the final
     plan's PartitionFilters carry the cell predicate."""
-    import os as _os
 
-    from lakehouse_sfc_spark.queries.layouts import (
-        _atomic_cache_write,
-        _fingerprinted_dir,
-    )
-
-    repo = _os.path.dirname(_os.path.dirname(_os.path.dirname(__file__)))
-    # fingerprint-keyed (stale same-basename siblings pruned): regenerated
-    # datasets never hit a stale cell cache and old copies don't accumulate
-    path = _fingerprinted_dir(
-        _os.path.join(repo, ".scratch", "ivf_cells", "v1"),
-        sf_dir,
-        ("embeddings",),
-    )
-    if not _os.path.exists(_os.path.join(path, "_SUCCESS")):
+    def build(p: str) -> None:
         src = _emb(spark, sf_dir).withColumn("cell", _cell(F.col("emb")))
-        _atomic_cache_write(
-            src.repartition("cell")
-            .write.mode("overwrite")
-            .partitionBy("cell")
-            .parquet,
-            path,
-        )
-    c = spark.read.parquet(path)
+        src.repartition("cell").write.partitionBy("cell").parquet(p)
+
+    c = spark.read.parquet(
+        build_once(scratch_dir("ivf_cells/v1", sf_dir, ("embeddings",)), build)
+    )
     q = (
         _emb(spark, sf_dir)
         .withColumn("qcell", _cell(F.col("emb")))
@@ -2097,34 +2085,18 @@ def _component_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     verdict task 2): `dedup_keep_canonical` used to call the full LSH +
     pointer-doubling chain inline, so the sweep's #1 slowest entry re-ran
     everything `dedup_components` had just computed.  Same discipline as
-    the edge caches (queries/graphq.py::_edges_recent): fingerprint-keyed
-    dir, `_atomic_cache_write` + `_SUCCESS` gate, `SPARK_GRAFT_LAZY_BUILD`
-    escape (the component loop runs jobs during plan construction, which
-    the lazy-build contract forbids).  At 100 TB this is exactly what a
+    the edge caches (queries/graphq.py::_edges_recent): a fingerprint-keyed
+    ``sources.loader.scratch_dir`` published once by ``build_once`` (the
+    component loop runs its jobs on the first build only; later builds
+    read the labels).  At 100 TB this is exactly what a
     production dedup pipeline does: label the corpus once, persist the
     |clustered|-sized relation, and let every consumer (canonical filter,
     shrinkage accounting, incremental merges) read the labels, not re-run
     the graph."""
-    import os as _os
-
-    from lakehouse_sfc_spark.queries.layouts import (
-        _atomic_cache_write,
-        _fingerprinted_dir,
+    path = build_once(
+        scratch_dir("dedup_labels/v1", sf_dir, ("documents",)),
+        lambda p: _component_labels_build(spark, sf_dir).write.parquet(p),
     )
-
-    repo = _os.path.dirname(_os.path.dirname(_os.path.dirname(__file__)))
-    path = _fingerprinted_dir(
-        _os.path.join(repo, ".scratch", "dedup_labels", "v1"),
-        sf_dir,
-        ("documents",),
-    )
-    if not _os.path.exists(_os.path.join(path, "_SUCCESS")):
-        if _os.environ.get("SPARK_GRAFT_LAZY_BUILD"):
-            return _component_labels_build(spark, sf_dir)
-        _atomic_cache_write(
-            _component_labels_build(spark, sf_dir).write.mode("overwrite").parquet,
-            path,
-        )
     return spark.read.parquet(path)
 
 

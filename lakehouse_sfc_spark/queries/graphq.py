@@ -13,16 +13,16 @@ scales linearly with orders — never all-pairs.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lakehouse_sfc_spark.queries.registry import register
 from lakehouse_sfc_spark.sources.loader import (
+    build_once,
     compute_width,
     load_table,
     materialize_once,
+    scratch_dir,
 )
 
 _SQL_EDGES = """
@@ -60,23 +60,10 @@ def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     cache key folds the source dataset's (mtime, size) fingerprint, so a
     regenerated dataset never serves stale edges — same discipline as the
     IVF cell cache (queries/datapipe.py::ann_ivf_partitioned_topk)."""
-    import os as _os
-
-    from lakehouse_sfc_spark.queries.layouts import (
-        _atomic_cache_write,
-        _fingerprinted_dir,
+    path = build_once(
+        scratch_dir("graph_edges/v1", sf_dir, ("lineitem",)),
+        lambda p: _edges_build(spark, sf_dir).write.parquet(p),
     )
-
-    repo = _os.path.dirname(_os.path.dirname(_os.path.dirname(__file__)))
-    path = _fingerprinted_dir(
-        _os.path.join(repo, ".scratch", "graph_edges", "v1"),
-        sf_dir,
-        ("lineitem",),
-    )
-    if not _os.path.exists(_os.path.join(path, "_SUCCESS")):
-        _atomic_cache_write(
-            _edges_build(spark, sf_dir).write.mode("overwrite").parquet, path
-        )
     return spark.read.parquet(path)
 
 
@@ -443,29 +430,10 @@ def _edges_recent(spark: SparkSession, sf_dir: str) -> DataFrame:
     dominated, not the graph math).  One parquet write per fingerprint
     converts every later execution into an |E|-sized columnar read —
     exactly what a production pipeline does with its edge extraction."""
-    import os as _os
-
-    from lakehouse_sfc_spark.queries.layouts import (
-        _atomic_cache_write,
-        _fingerprinted_dir,
+    path = build_once(
+        scratch_dir("graph_edges_recent/v1", sf_dir, ("lineitem", "orders")),
+        lambda p: _edges_recent_build(spark, sf_dir).write.parquet(p),
     )
-
-    repo = _os.path.dirname(_os.path.dirname(_os.path.dirname(__file__)))
-    path = _fingerprinted_dir(
-        _os.path.join(repo, ".scratch", "graph_edges_recent", "v1"),
-        sf_dir,
-        ("lineitem", "orders"),
-    )
-    if not _os.path.exists(_os.path.join(path, "_SUCCESS")):
-        if _os.environ.get("SPARK_GRAFT_LAZY_BUILD"):
-            # lazy-build contract: no job may run during plan
-            # construction, so skip cache materialization and hand back
-            # the underlying lazy derivation
-            return _edges_recent_build(spark, sf_dir)
-        _atomic_cache_write(
-            _edges_recent_build(spark, sf_dir).write.mode("overwrite").parquet,
-            path,
-        )
     return spark.read.parquet(path)
 
 
@@ -537,8 +505,7 @@ def graph_common_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     BUILD-TIME EXECUTION: constructing this DataFrame runs one scalar
     Spark job (degree-sum probe) because two physical decisions — agg
     partition count and anti-join strategy — need |E| and the wedge
-    volume before the plan exists.  Set SPARK_GRAFT_LAZY_BUILD=1 for a
-    fully lazy builder (static 8x-width agg sizing, un-hinted anti-join).
+    volume before the plan exists.
 
     Two scale controls on the deg²-sized wedge volume:
     1. CONTRACT-VISIBLE hub cap (oracle-mirrored): vertices with degree >
@@ -572,26 +539,21 @@ def graph_common_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     # NOTE this makes plan CONSTRUCTION eager (a Spark job runs inside this
     # builder) — deliberate, because both the agg partitioning and the
     # anti-join strategy are physical-plan decisions that need the numbers
-    # before the plan exists.  SPARK_GRAFT_LAZY_BUILD=1 restores a fully
-    # lazy builder with static heuristics (schema inspection / dry runs).
-    if os.environ.get("SPARK_GRAFT_LAZY_BUILD"):
-        wedge_volume, n_edges = None, None
-        agg_parts = 8 * width
-    else:
-        probe = deg.agg(
-            F.sum(
-                F.when(
-                    F.col("dg") <= _CN_HUB_CAP,
-                    F.col("dg") * (F.col("dg") - 1) / 2,
-                )
-            ).alias("wv"),
-            F.sum("dg").alias("sum_dg"),
-        ).collect()[0]
-        wedge_volume = probe["wv"] or 0
-        n_edges = int(probe["sum_dg"] or 0) // 2
-        agg_parts = int(
-            max(width, min(64 * width, -(-int(wedge_volume) // 350_000)))
-        )
+    # before the plan exists.
+    probe = deg.agg(
+        F.sum(
+            F.when(
+                F.col("dg") <= _CN_HUB_CAP,
+                F.col("dg") * (F.col("dg") - 1) / 2,
+            )
+        ).alias("wv"),
+        F.sum("dg").alias("sum_dg"),
+    ).collect()[0]
+    wedge_volume = probe["wv"] or 0
+    n_edges = int(probe["sum_dg"] or 0) // 2
+    agg_parts = int(
+        max(width, min(64 * width, -(-int(wedge_volume) // 350_000)))
+    )
     centers = deg.filter(F.col("dg") <= _CN_HUB_CAP).select("s")
     undc = und.join(F.broadcast(centers), "s", "left_semi")
     a, b = undc.alias("a"), undc.alias("b")
@@ -614,10 +576,10 @@ def graph_common_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     # Adjacency exclusion: broadcast the |E|-sized build side only while it
-    # fits (_CN_BCAST_MAX_EDGES); `e` grows with data, so above the gate —
-    # or in lazy-build mode, where |E| is unknown — leave the join
-    # un-hinted and let the optimizer/AQE pick from its own size estimates.
-    if n_edges is not None and n_edges <= _CN_BCAST_MAX_EDGES:
+    # fits (_CN_BCAST_MAX_EDGES); `e` grows with data, so above the gate
+    # leave the join un-hinted and let the optimizer/AQE pick from its own
+    # size estimates.
+    if n_edges <= _CN_BCAST_MAX_EDGES:
         cand = wedge.join(F.broadcast(e), ["p1", "p2"], "left_anti")
     else:
         cand = wedge.join(e, ["p1", "p2"], "left_anti")

@@ -3,9 +3,11 @@ file-pruned scan over it, and aggregate — the result must match the oracle's
 plain filter over the raw table (the reference's correctness-by-invariance
 strategy, SURVEY.md §5, as an explicit driver-checked query).
 
-The layout copy is cached under .scratch/layout_cache/<sf>/<layout> and
-rebuilt when absent (keyed by a version tag so stale layouts from older
-kernel revisions never leak into results).
+The layout copy is cached under
+``.scratch/layout_cache/<version>/<dataset-basename>/<fingerprint>/<layout>``
+(``sources.loader.scratch_dir``) and rebuilt when absent: the version tag
+keeps stale layouts from older kernel revisions out of results, and the
+dataset fingerprint keeps a regenerated dataset from reading an old copy.
 """
 
 from __future__ import annotations
@@ -17,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lakehouse_sfc_spark.queries.registry import dsum, register, sql_dsum
-from lakehouse_sfc_spark.sources.loader import load_table
+from lakehouse_sfc_spark.sources.loader import build_once, load_table, scratch_dir
 from lakehouse_sfc_spark.table import Pred, SfcTable, prune_files
 
 _VERSION = "v2"  # bump when key/layout semantics change
@@ -38,104 +40,15 @@ _ORACLE = f"""
     """
 
 
-def _scratch_root() -> str:
-    repo = os.path.dirname(os.path.dirname(os.path.dirname(__file__)))
-    return os.path.join(repo, ".scratch", "layout_cache", _VERSION)
-
-
-def _fingerprinted_dir(root: str, sf_dir: str, tables: tuple[str, ...]) -> str:
-    """<root>/<dataset-basename>/<fingerprint>: fingerprint-keyed so a
-    regenerated (or same-named) dataset never serves a stale cache, with
-    stale sibling fingerprints of the SAME basename pruned on first miss —
-    the cache footprint stays one copy per dataset, not one per mtime."""
-    import shutil
-
-    from lakehouse_sfc_spark.sources.loader import dataset_fingerprint
-
-    base = os.path.basename(os.path.normpath(sf_dir))
-    fp = dataset_fingerprint(sf_dir, tables)
-    parent = os.path.join(root, base)
-    path = os.path.join(parent, fp)
-    if not os.path.exists(path) and os.path.isdir(parent):
-        for stale in os.listdir(parent):
-            # Keep in-flight tmp siblings of the CURRENT fingerprint
-            # (``<fp>.tmp.<pid>``, see _atomic_cache_write) — pruning them
-            # mid-write would race a concurrent builder of the same cache —
-            # UNLESS the builder pid is dead (crash leftover: prune, else
-            # the scratch dir leaks across rounds until the fp changes).
-            if stale.startswith(fp + ".tmp."):
-                if _tmp_builder_dead(stale, fp):
-                    shutil.rmtree(os.path.join(parent, stale), ignore_errors=True)
-            elif stale != fp:
-                shutil.rmtree(os.path.join(parent, stale), ignore_errors=True)
-    return path
-
-
-def _tmp_builder_dead(name: str, fp: str) -> bool:
-    """True when a ``<fp>.tmp.<pid>`` scratch dir's builder process is no
-    longer alive (or the suffix is malformed) — safe to prune."""
-    suffix = name[len(fp + ".tmp.") :]
-    try:
-        pid = int(suffix)
-    except ValueError:
-        return True
-    try:
-        os.kill(pid, 0)
-    except ProcessLookupError:
-        return True
-    except PermissionError:
-        return False  # alive, owned by someone else
-    return False
-
-
-def _atomic_cache_write(write_to, path: str) -> None:
-    """Publish a fingerprint-keyed cache dir atomically: materialize into a
-    tmp sibling, then os.rename into place (atomic on one filesystem), so a
-    concurrent reader either misses (_SUCCESS absent) or sees the complete
-    directory — never a partial write.  ``write_to`` is a callable taking
-    the destination path (e.g. ``lambda p: df.write.parquet(p)``).  Losing
-    the rename race to another builder of the same fingerprint is fine:
-    their result is equivalent; ours is discarded.
-
-    Rename failure is adjudicated by errno, not swallowed: losing the race
-    to a COMPLETE sibling (``_SUCCESS`` present) discards our copy, but a
-    partial dir already at ``path`` without ``_SUCCESS`` (e.g. a crash from
-    a pre-atomic writer) is evicted and the rename retried once — otherwise
-    every run would rebuild, fail ENOTEMPTY, discard, and read the stale
-    partial forever.  Unexpected errnos re-raise."""
-    import errno
-    import shutil
-
-    tmp = f"{path}.tmp.{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
-    write_to(tmp)
-    try:
-        os.rename(tmp, path)
-        return
-    except OSError as exc:
-        if exc.errno not in (errno.ENOTEMPTY, errno.EEXIST, errno.EISDIR):
-            shutil.rmtree(tmp, ignore_errors=True)
-            raise
-        if os.path.exists(os.path.join(path, "_SUCCESS")):
-            # Lost the race to a complete equivalent build: ours is surplus.
-            shutil.rmtree(tmp, ignore_errors=True)
-            return
-    # Incomplete dir squatting on the cache path: evict and retry once.
-    shutil.rmtree(path, ignore_errors=True)
-    try:
-        os.rename(tmp, path)
-    except OSError:
-        # Second loss: only plausible cause is a concurrent builder that
-        # just published; verify completeness rather than guess.
-        shutil.rmtree(tmp, ignore_errors=True)
-        if not os.path.exists(os.path.join(path, "_SUCCESS")):
-            raise
+def _layout_cache(sf_dir: str) -> str:
+    """Cache dir of the layout and Bloom tables.  Each table is committed
+    by its sidecar, so it is written in place rather than by
+    ``build_once``."""
+    return scratch_dir(f"layout_cache/{_VERSION}", sf_dir, ("lineitem",))
 
 
 def _layout_table(spark: SparkSession, sf_dir: str, layout: str) -> SfcTable:
-    path = os.path.join(
-        _fingerprinted_dir(_scratch_root(), sf_dir, ("lineitem",)), layout
-    )
+    path = os.path.join(_layout_cache(sf_dir), layout)
     from lakehouse_sfc_spark.layout.stats import read_sidecar
 
     if read_sidecar(path) is None:
@@ -392,11 +305,6 @@ def _drift_states_dir(spark: SparkSession, sf_dir: str) -> str:
 
     from lakehouse_sfc_spark.layout.upsert import keyed_upsert
 
-    path = os.path.dirname(drift_metrics_path(sf_dir))
-    if os.path.exists(os.path.join(path, "_SUCCESS")):
-        return path
-
-    base, batches = _drift_base_and_batches(spark, sf_dir)
     wkw = dict(
         layout="zorder",
         layout_cols=list(_LAYOUT_COLS),
@@ -412,6 +320,7 @@ def _drift_states_dir(spark: SparkSession, sf_dir: str) -> str:
         )
 
     def build(p: str) -> None:
+        base, batches = _drift_base_and_batches(spark, sf_dir)
         os.makedirs(p)
         metrics = []
         t0 = _time.perf_counter()
@@ -440,10 +349,8 @@ def _drift_states_dir(spark: SparkSession, sf_dir: str) -> str:
             metrics[k].update(prune_files(sc, _PREDS)[1])
         with open(os.path.join(p, "drift_metrics.json"), "w") as fh:
             json.dump({"sf_dir": sf_dir, "batches": metrics}, fh, indent=1)
-        open(os.path.join(p, "_SUCCESS"), "w").close()
 
-    _atomic_cache_write(build, path)
-    return path
+    return build_once(os.path.dirname(drift_metrics_path(sf_dir)), build)
 
 
 def drift_metrics_path(sf_dir: str) -> str:
@@ -451,12 +358,8 @@ def drift_metrics_path(sf_dir: str) -> str:
     state cache (exists only after a build; bench.py maps it to the
     published RQ7 series)."""
     return os.path.join(
-        _fingerprinted_dir(
-            os.path.join(
-                os.path.dirname(_scratch_root()), "drift_states", _DRIFT_VERSION
-            ),
-            sf_dir,
-            ("lineitem",),
+        scratch_dir(
+            f"layout_cache/drift_states/{_DRIFT_VERSION}", sf_dir, ("lineitem",)
         ),
         "drift_metrics.json",
     )
@@ -493,8 +396,6 @@ def layout_drift_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``layout_skipping_stats``.  At 100 TB the rewrite is the scoped
     variant (layout/upsert.py::scoped_upsert) and the census reads the
     manifest — the per-batch loop shape is unchanged."""
-    if os.environ.get("SPARK_GRAFT_LAZY_BUILD"):
-        return _drift_census_lazy(spark, sf_dir)
     root = _drift_states_dir(spark, sf_dir)
     parts = []
     for k in range(_DRIFT_BATCHES + 1):
@@ -519,10 +420,11 @@ def layout_drift_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _drift_census_lazy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Plan-construction-safe twin of the census (SPARK_GRAFT_LAZY_BUILD):
-    the same per-state counts derived straight from lineitem — no state
-    materialization, no jobs before the plan exists.  skips_files is the
-    layout contract constant (what the materialized path asserts)."""
+    """Test reference for the census (tests/test_drift.py): the same
+    per-state counts derived closed-form from lineitem, with no state
+    materialization, so the real ingest loop has an independent twin to
+    agree with.  skips_files is the layout contract constant (what the
+    materialized path asserts)."""
     li = load_table(spark, sf_dir, "lineitem")
     in_base = ~(F.col("l_orderkey") % 10).isin(1, 2, 3)
     box = (
@@ -607,22 +509,12 @@ def _scoped_table_dir(spark: SparkSession, sf_dir: str) -> str:
 
     from lakehouse_sfc_spark.layout.upsert import scoped_upsert
 
-    root = _fingerprinted_dir(
-        os.path.join(
-            os.path.dirname(_scratch_root()), "scoped_upsert", _SCOPED_VERSION
-        ),
-        sf_dir,
-        ("lineitem",),
-    )
-    if os.path.exists(os.path.join(root, "_SUCCESS")):
-        return root
-
-    li = _with_rid(load_table(spark, sf_dir, "lineitem")).withColumn(
-        "__v", F.lit(0)
-    )
     stats_cols = ["l_orderkey", "__rid", "l_shipdate", "l_quantity"]
 
     def build(p: str) -> None:
+        li = _with_rid(load_table(spark, sf_dir, "lineitem")).withColumn(
+            "__v", F.lit(0)
+        )
         os.makedirs(p)
         tbl = os.path.join(p, "table")
         SfcTable.write(
@@ -681,10 +573,13 @@ def _scoped_table_dir(spark: SparkSession, sf_dir: str) -> str:
         res["band"] = [int(lo), int(hi)]
         with open(os.path.join(p, "scoped_metrics.json"), "w") as fh:
             json.dump(res, fh, indent=1, default=str)
-        open(os.path.join(p, "_SUCCESS"), "w").close()
 
-    _atomic_cache_write(build, root)
-    return root
+    return build_once(
+        scratch_dir(
+            f"layout_cache/scoped_upsert/{_SCOPED_VERSION}", sf_dir, ("lineitem",)
+        ),
+        build,
+    )
 
 
 @register("layout_scoped_upsert_stats", oracle=_SCOPED_ORACLE)
@@ -716,8 +611,6 @@ def layout_scoped_upsert_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     (delta_write_layout.py:137,201-203) expressed natively; at sf1 the
     batch's distinct-key count exceeds the IN-set cap and pruning falls
     back to pure key-range bounds, which still localize to the band."""
-    if os.environ.get("SPARK_GRAFT_LAZY_BUILD"):
-        return _scoped_census_lazy(spark, sf_dir)
     root = _scoped_table_dir(spark, sf_dir)
     import json
 
@@ -742,9 +635,9 @@ def layout_scoped_upsert_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _scoped_census_lazy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Plan-construction-safe twin (SPARK_GRAFT_LAZY_BUILD): the updated
-    state reconstructed closed-form from lineitem; booleans are the
-    contract constants the materialized path proves."""
+    """Test reference for the scoped census (tests/test_drift.py): the
+    updated state reconstructed closed-form from lineitem; booleans are
+    the contract constants the materialized path proves."""
     li = load_table(spark, sf_dir, "lineitem")
     mx = li.agg(F.max("l_orderkey").alias("m"))
     j = li.crossJoin(F.broadcast(mx))
@@ -793,27 +686,14 @@ def layout_partitioned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale notes: partition pruning composes with the SFC sidecar pruning
     (directories first, then per-file min/max within surviving
     partitions) — the standard two-level skipping stack at 100 TB."""
-    path = os.path.join(
-        _fingerprinted_dir(
-            os.path.join(
-                os.path.dirname(_scratch_root()), "month_partitioned"
-            ),
-            sf_dir,
-            ("lineitem",),
-        ),
-        "lineitem",
-    )
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+    def build(p: str) -> None:
         li = load_table(spark, sf_dir, "lineitem").withColumn(
             "ship_month", F.date_format("l_shipdate", "yyyy-MM")
         )
-        (
-            li.repartition("ship_month")
-            .write.mode("overwrite")
-            .partitionBy("ship_month")
-            .parquet(path)
-        )
-    t = spark.read.parquet(path)
+        li.repartition("ship_month").write.partitionBy("ship_month").parquet(p)
+
+    root = scratch_dir("layout_cache/month_partitioned", sf_dir, ("lineitem",))
+    t = spark.read.parquet(build_once(os.path.join(root, "lineitem"), build))
     return (
         # partition window widened one month each side: date_format renders
         # in the SESSION timezone, so a non-UTC driver session could shift a
@@ -945,9 +825,7 @@ def layout_bloom_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     point lookup from a table scan into a handful of file reads.  Result
     must equal the oracle's plain IN-filter over the raw table
     (correctness-by-invariance, like the SFC layout scans)."""
-    path = os.path.join(
-        _fingerprinted_dir(_scratch_root(), sf_dir, ("lineitem",)), "bloom"
-    )
+    path = os.path.join(_layout_cache(sf_dir), "bloom")
     from lakehouse_sfc_spark.layout.stats import read_sidecar
 
     sidecar = read_sidecar(path)
@@ -993,23 +871,12 @@ def layout_docs_partitioned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     Same two-level skipping stack as layout_partitioned_scan, pointed at
     the documents table; the PartitionFilters guard lives in
     tests/test_plan_quality.py."""
-    path = os.path.join(
-        _fingerprinted_dir(
-            os.path.join(os.path.dirname(_scratch_root()), "docs_by_lang"),
-            sf_dir,
-            ("documents",),
-        ),
-        "documents",
-    )
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+    def build(p: str) -> None:
         d = load_table(spark, sf_dir, "documents")
-        (
-            d.repartition("lang")
-            .write.mode("overwrite")
-            .partitionBy("lang")
-            .parquet(path)
-        )
-    t = spark.read.parquet(path)
+        d.repartition("lang").write.partitionBy("lang").parquet(p)
+
+    root = scratch_dir("layout_cache/docs_by_lang", sf_dir, ("documents",))
+    t = spark.read.parquet(build_once(os.path.join(root, "documents"), build))
     return (
         t.filter(F.col("lang").isin("en", "es"))
         .filter(F.col("n_chars") >= 200)

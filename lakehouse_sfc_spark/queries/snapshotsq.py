@@ -27,9 +27,9 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from lakehouse_sfc_spark.queries.layouts import _fingerprinted_dir
+from lakehouse_sfc_spark.layout.stats import local_path
 from lakehouse_sfc_spark.queries.registry import dsum, register, sql_dsum
-from lakehouse_sfc_spark.sources.loader import load_table
+from lakehouse_sfc_spark.sources.loader import load_table, scratch_dir
 from lakehouse_sfc_spark.table import Pred
 from lakehouse_sfc_spark.table.snapshots import (
     SnapshotTable,
@@ -42,13 +42,15 @@ _CUTOFF = datetime.datetime(1997, 1, 1)
 _COLS = ["o_orderkey", "o_custkey", "o_totalprice", "o_orderdate"]
 
 
-def _scratch_root() -> str:
-    repo = os.path.dirname(os.path.dirname(os.path.dirname(__file__)))
-    return os.path.join(repo, ".scratch", "snap_cache", _VERSION)
+def _chain_root(sf_dir: str) -> str:
+    """Cache dir of the shared commit chain and its sibling tables.  They
+    are committed by their last manifest, not ``_SUCCESS``, and manifests
+    hold absolute file URIs, so they are built in place."""
+    return scratch_dir(f"snap_cache/{_VERSION}", sf_dir, ("orders",))
 
 
 def _snapshot_table(spark: SparkSession, sf_dir: str) -> SnapshotTable:
-    root = _fingerprinted_dir(_scratch_root(), sf_dir, ("orders",))
+    root = _chain_root(sf_dir)
     path = os.path.join(root, "orders_snap")
     if os.path.exists(_manifest_path(path, 3)):
         return SnapshotTable(spark, path)
@@ -349,13 +351,9 @@ def _merge_table(spark: SparkSession, sf_dir: str) -> SnapshotTable:
     4-version chain so the two caches never interfere): v0 = all orders,
     v1 = one MERGE batch carrying updates (%11 keys, +500), deletes
     (%13 keys, matched_delete condition) and inserts (%17 keys + 5e7)."""
-    root = _fingerprinted_dir(
-        # under _scratch_root() so a _VERSION bump invalidates this cache
-        # along with the shared chain — semantics changes rebuild tables.
-        os.path.join(_scratch_root(), "merge_chain"),
-        sf_dir,
-        ("orders",),
-    )
+    # under the chain's _VERSION so a bump invalidates this cache along
+    # with the shared chain — semantics changes rebuild tables.
+    root = scratch_dir(f"snap_cache/{_VERSION}/merge_chain", sf_dir, ("orders",))
     path = os.path.join(root, "orders_merge")
     if os.path.exists(_manifest_path(path, 1)):
         return SnapshotTable(spark, path)
@@ -463,7 +461,7 @@ def _restore_table(spark: SparkSession, sf_dir: str) -> SnapshotTable:
     """CREATE → UPSERT → DELETE → RESTORE(1) chain for snap_restore, cached
     like the main chain (own root — restore mutates history, so it must not
     share the table the other snapshot queries replay)."""
-    root = _fingerprinted_dir(_scratch_root(), sf_dir, ("orders",))
+    root = _chain_root(sf_dir)
     path = os.path.join(root, "orders_restore")
     if os.path.exists(_manifest_path(path, 3)):
         return SnapshotTable(spark, path)
@@ -496,7 +494,7 @@ def _wap_table(spark: SparkSession, sf_dir: str) -> SnapshotTable:
     """CREATE → stage_append(good) → publish_branch chain for snap_wap
     (own root; the published chain is immutable after the build, and the
     query stages/re-stages a throwaway AUDIT branch on top per run)."""
-    root = _fingerprinted_dir(_scratch_root(), sf_dir, ("orders",))
+    root = _chain_root(sf_dir)
     path = os.path.join(root, "orders_wap")
     if os.path.exists(_manifest_path(path, 1)):
         return SnapshotTable(spark, path)
@@ -596,7 +594,7 @@ def _vacuum_table(spark: SparkSession, sf_dir: str) -> SnapshotTable:
     """CREATE → DELETE → APPEND → VACUUM(retain_last=2) chain (own root —
     vacuum physically deletes files and manifests, so it must never touch
     the chain the other snapshot queries replay)."""
-    root = _fingerprinted_dir(_scratch_root(), sf_dir, ("orders",))
+    root = _chain_root(sf_dir)
     path = os.path.join(root, "orders_vacuum")
     if os.path.exists(_manifest_path(path, 2)) and not os.path.exists(
         _manifest_path(path, 0)
@@ -799,7 +797,7 @@ def snap_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``SnapshotTable.clone_to``; ``snap_vacuum`` runs on an isolated chain
     for exactly that reason."""
     src = _snapshot_table(spark, sf_dir)
-    root = _fingerprinted_dir(_scratch_root(), sf_dir, ("orders",))
+    root = _chain_root(sf_dir)
     cpath = os.path.join(root, "orders_clone")
     if not os.path.exists(_manifest_path(cpath, 1)):
         import shutil
@@ -817,7 +815,7 @@ def snap_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
     def _refs_foreign(t: SnapshotTable) -> bool:
         own = os.path.abspath(t.path)
         return any(
-            not os.path.abspath(u.replace("file://", "")).startswith(own)
+            not os.path.abspath(local_path(u)).startswith(own)
             for u in t.manifest()["files"]
         )
 
@@ -849,7 +847,7 @@ def _specevo_table(spark: SparkSession, sf_dir: str) -> SnapshotTable:
     per-customer lookups — the canonical reason Iceberg grew spec
     evolution).  v2 APPEND: the remaining orders land under spec B.  The
     chain is cached per dataset fingerprint like every snap_* chain."""
-    root = _fingerprinted_dir(_scratch_root(), sf_dir, ("orders",))
+    root = _chain_root(sf_dir)
     path = os.path.join(root, "orders_specevo")
     if os.path.exists(_manifest_path(path, 2)):
         return SnapshotTable(spark, path)
@@ -932,7 +930,7 @@ def _lineage_table(spark: SparkSession, sf_dir: str) -> SnapshotTable:
     on %7 keys, inserts %97 shifted +100M); v2 UPSERT (+5000 updates on
     %13 keys — strictly beats any prior value so latest-wins is
     key-arithmetic-predictable, inserts %89 shifted +200M)."""
-    root = _fingerprinted_dir(_scratch_root(), sf_dir, ("orders",))
+    root = _chain_root(sf_dir)
     path = os.path.join(root, "orders_lineage")
     if os.path.exists(_manifest_path(path, 2)):
         return SnapshotTable(spark, path)
@@ -1055,7 +1053,7 @@ def snap_row_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _orphan_table(spark: SparkSession, sf_dir: str) -> SnapshotTable:
-    root = _fingerprinted_dir(_scratch_root(), sf_dir, ("orders",))
+    root = _chain_root(sf_dir)
     path = os.path.join(root, "orders_orphan")
     if os.path.exists(_manifest_path(path, 1)):
         return SnapshotTable(spark, path)
@@ -1147,7 +1145,7 @@ def _cherry_table(spark: SparkSession, sf_dir: str) -> SnapshotTable:
     """v0 CREATE; v1 UPSERT (+1000 on %7 keys); v2 APPEND (%101, +300M
     keys); v3 RESTORE to v0 (wipes v1+v2 from the head); v4 CHERRY-PICK
     of v1 (selectively recovers ONLY the upsert, not the append)."""
-    root = _fingerprinted_dir(_scratch_root(), sf_dir, ("orders",))
+    root = _chain_root(sf_dir)
     path = os.path.join(root, "orders_cherry")
     if os.path.exists(_manifest_path(path, 4)):
         return SnapshotTable(spark, path)
@@ -1409,7 +1407,7 @@ def snap_history_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _constraint_table(spark: SparkSession, sf_dir: str) -> SnapshotTable:
-    root = _fingerprinted_dir(_scratch_root(), sf_dir, ("orders",))
+    root = _chain_root(sf_dir)
     path = os.path.join(root, "orders_constraints")
     if os.path.exists(_manifest_path(path, 2)):
         return SnapshotTable(spark, path)

@@ -28,6 +28,8 @@ import time
 import urllib.request
 from urllib.parse import urlsplit, urlunsplit
 
+from lakehouse_sfc_spark.layout.stats import file_size
+
 
 # --- M1: executed-plan walk -------------------------------------------------
 
@@ -155,13 +157,7 @@ def input_files_bytes(df) -> dict:
         files = list(df.inputFiles())
     except Exception:
         pass
-    total = 0
-    for f in files:
-        p = f[7:] if f.startswith("file://") else f
-        try:
-            total += os.path.getsize(p)
-        except OSError:
-            pass
+    total = sum(file_size(f) for f in files)
     return {"n_input_files": len(files), "bytes_input_files": total}
 
 
@@ -176,14 +172,7 @@ def probe_files(df) -> dict:
         rows = df.select(F.input_file_name().alias("f")).distinct().collect()
     except Exception:
         return {"files_probe": 0, "bytes_probe": 0}
-    total = 0
-    for r in rows:
-        p = r["f"]
-        p = p[7:] if p.startswith("file://") else p
-        try:
-            total += os.path.getsize(p)
-        except OSError:
-            pass
+    total = sum(file_size(r["f"]) for r in rows)
     return {"files_probe": len(rows), "bytes_probe": total}
 
 

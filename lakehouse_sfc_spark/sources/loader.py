@@ -340,7 +340,6 @@ def dataset_fingerprint(sf_dir: str, tables: tuple[str, ...] = TABLES) -> str:
     different directory sharing the same basename — can never serve a stale
     cache."""
     import hashlib
-    import os
 
     h = hashlib.sha256(os.path.abspath(sf_dir).encode())
     for name in sorted(tables):
@@ -351,6 +350,133 @@ def dataset_fingerprint(sf_dir: str, tables: tuple[str, ...] = TABLES) -> str:
         except OSError:
             h.update(f"{name}:absent".encode())
     return h.hexdigest()[:12]
+
+
+# --- Derived-dataset caches -------------------------------------------------
+#
+# Layout copies, upsert states, snapshot chains, edge lists, IVF cells and
+# dedup labels are built once per dataset and reused by every later query
+# build.  This section is the only code that knows where they live
+# (``<repo>/.scratch/<kind>/<dataset-basename>/<fingerprint>``) and how a
+# directory cache is published (tmp sibling + atomic rename + ``_SUCCESS``).
+
+_SCRATCH = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
+    ".scratch",
+)
+
+
+def scratch_dir(kind: str, sf_dir: str, tables: tuple[str, ...]) -> str:
+    """``<repo>/.scratch/<kind>/<dataset-basename>/<fingerprint>`` for the
+    derived cache ``kind`` (a slash path carrying its version tag, e.g.
+    ``"graph_edges/v1"``).  Fingerprint-keyed on ``tables`` of ``sf_dir``
+    so a regenerated (or same-named) dataset never serves a stale cache;
+    stale sibling fingerprints of the SAME basename are pruned on first
+    miss, so the footprint stays one copy per dataset, not one per mtime."""
+    import shutil
+
+    fp = dataset_fingerprint(sf_dir, tables)
+    parent = os.path.join(
+        _SCRATCH, kind, os.path.basename(os.path.normpath(sf_dir))
+    )
+    path = os.path.join(parent, fp)
+    if not os.path.exists(path) and os.path.isdir(parent):
+        for stale in os.listdir(parent):
+            # Keep in-flight tmp siblings of the CURRENT fingerprint
+            # (``<fp>.tmp.<pid>``, see _atomic_cache_write) — pruning them
+            # mid-write would race a concurrent builder of the same cache —
+            # UNLESS the builder pid is dead (crash leftover: prune, else
+            # the scratch dir leaks across rounds until the fp changes).
+            if stale.startswith(fp + ".tmp."):
+                if _tmp_builder_dead(stale, fp):
+                    shutil.rmtree(os.path.join(parent, stale), ignore_errors=True)
+            elif stale != fp:
+                shutil.rmtree(os.path.join(parent, stale), ignore_errors=True)
+    return path
+
+
+def build_once(path: str, build) -> str:
+    """Return ``path`` at once when ``path/_SUCCESS`` exists; otherwise run
+    ``build(tmp)`` into a tmp sibling (``build`` creates the directory,
+    e.g. ``df.write.parquet`` or ``os.makedirs``), add ``_SUCCESS`` if the
+    build did not, and publish it atomically at ``path``.  A build that
+    raises leaves nothing behind, so the next call rebuilds."""
+    if os.path.exists(os.path.join(path, "_SUCCESS")):
+        return path
+
+    def write_to(tmp: str) -> None:
+        build(tmp)
+        marker = os.path.join(tmp, "_SUCCESS")
+        if not os.path.exists(marker):
+            open(marker, "w").close()
+
+    _atomic_cache_write(write_to, path)
+    return path
+
+
+def _tmp_builder_dead(name: str, fp: str) -> bool:
+    """True when a ``<fp>.tmp.<pid>`` scratch dir's builder process is no
+    longer alive (or the suffix is malformed) — safe to prune."""
+    suffix = name[len(fp + ".tmp.") :]
+    try:
+        pid = int(suffix)
+    except ValueError:
+        return True
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return True
+    except PermissionError:
+        return False  # alive, owned by someone else
+    return False
+
+
+def _atomic_cache_write(write_to, path: str) -> None:
+    """Publish a fingerprint-keyed cache dir atomically: materialize into a
+    tmp sibling, then os.rename into place (atomic on one filesystem), so a
+    concurrent reader either misses (_SUCCESS absent) or sees the complete
+    directory — never a partial write.  ``write_to`` is a callable taking
+    the destination path.  A ``write_to`` that raises takes its tmp dir
+    with it.  Losing the rename race to another builder of the same
+    fingerprint is fine: their result is equivalent; ours is discarded.
+
+    Rename failure is adjudicated by errno, not swallowed: losing the race
+    to a COMPLETE sibling (``_SUCCESS`` present) discards our copy, but a
+    partial dir already at ``path`` without ``_SUCCESS`` (e.g. a crash from
+    a pre-atomic writer) is evicted and the rename retried once — otherwise
+    every run would rebuild, fail ENOTEMPTY, discard, and read the stale
+    partial forever.  Unexpected errnos re-raise."""
+    import errno
+    import shutil
+
+    tmp = f"{path}.tmp.{os.getpid()}"
+    shutil.rmtree(tmp, ignore_errors=True)
+    try:
+        write_to(tmp)
+    except BaseException:
+        shutil.rmtree(tmp, ignore_errors=True)
+        raise
+    try:
+        os.rename(tmp, path)
+        return
+    except OSError as exc:
+        if exc.errno not in (errno.ENOTEMPTY, errno.EEXIST, errno.EISDIR):
+            shutil.rmtree(tmp, ignore_errors=True)
+            raise
+        if os.path.exists(os.path.join(path, "_SUCCESS")):
+            # Lost the race to a complete equivalent build: ours is surplus.
+            shutil.rmtree(tmp, ignore_errors=True)
+            return
+    # Incomplete dir squatting on the cache path: evict and retry once.
+    shutil.rmtree(path, ignore_errors=True)
+    try:
+        os.rename(tmp, path)
+    except OSError:
+        # Second loss: only plausible cause is a concurrent builder that
+        # just published; verify completeness rather than guess.
+        shutil.rmtree(tmp, ignore_errors=True)
+        if not os.path.exists(os.path.join(path, "_SUCCESS")):
+            raise
 
 
 def register_tables(

@@ -1,6 +1,7 @@
-"""Unit tests for the fingerprint-cache publish/prune protocol in
-lakehouse_sfc_spark/queries/layouts.py: errno-adjudicated atomic rename
-(ADVICE r11 medium) and dead-pid tmp pruning (ADVICE r11 low).
+"""Unit tests for the derived-dataset cache protocol in
+lakehouse_sfc_spark/sources/loader.py: errno-adjudicated atomic rename
+(ADVICE r11 medium), dead-pid tmp pruning (ADVICE r11 low), and the
+``build_once`` gate every directory cache goes through.
 
 Pure-filesystem tests — no Spark session; write_to is a plain directory
 maker so the protocol is exercised in isolation.
@@ -10,9 +11,10 @@ import os
 
 import pytest
 
-from lakehouse_sfc_spark.queries.layouts import (
+from lakehouse_sfc_spark.sources.loader import (
     _atomic_cache_write,
     _tmp_builder_dead,
+    build_once,
 )
 
 
@@ -84,3 +86,43 @@ def test_tmp_builder_dead_detection():
     # a pid far above pid_max on this box: dead
     dead = 2**22 + 12345
     assert _tmp_builder_dead(f"{fp}.tmp.{dead}", fp)
+
+
+def _tmp_siblings(parent) -> list[str]:
+    return [d for d in os.listdir(parent) if ".tmp." in d]
+
+
+def test_build_once_skips_build_when_complete(tmp_path):
+    path = str(tmp_path / "fp")
+    _make("cached")(path)
+
+    def build(p: str) -> None:
+        raise AssertionError("build ran over a complete cache")
+
+    assert build_once(path, build) == path
+    assert open(os.path.join(path, "part-0")).read() == "cached"
+
+
+def test_build_once_failed_build_leaves_nothing(tmp_path):
+    path = str(tmp_path / "fp")
+
+    def build(p: str) -> None:
+        _make("half", success=False)(p)
+        raise RuntimeError("build died mid-write")
+
+    with pytest.raises(RuntimeError, match="mid-write"):
+        build_once(path, build)
+    assert not os.path.exists(path)
+    assert not _tmp_siblings(tmp_path)
+    # nothing was published, so the next call builds
+    build_once(path, _make("rebuilt"))
+    assert open(os.path.join(path, "part-0")).read() == "rebuilt"
+    assert os.path.exists(os.path.join(path, "_SUCCESS"))
+
+
+def test_build_once_adds_missing_success_marker(tmp_path):
+    path = str(tmp_path / "nested" / "fp")
+    build_once(path, _make("bare", success=False))
+    assert os.path.exists(os.path.join(path, "_SUCCESS"))
+    assert open(os.path.join(path, "part-0")).read() == "bare"
+    assert not _tmp_siblings(tmp_path / "nested")

@@ -1,8 +1,10 @@
 """layout_drift_stats (r11 verdict task 4): the RQ7-style incremental-
 ingest census.  The oracle sweep checks the materialized path against
-DuckDB; these tests pin what the sweep can't see — the lazy twin staying
-equivalent to the real ingest loop, the census invariants, and the
-ingest-observables artifact bench.py maps to the RQ7 baseline series.
+DuckDB; these tests pin what the sweep can't see — the real ingest loop
+agreeing with an independent closed-form reference (``_drift_census_lazy``
+and ``_scoped_census_lazy`` in queries/layouts.py, which exist only for
+these comparisons), the census invariants, and the ingest-observables
+artifact bench.py maps to the RQ7 baseline series.
 """
 
 from __future__ import annotations

@@ -6,6 +6,7 @@ SFC layouts than baseline."""
 from __future__ import annotations
 
 import datetime
+import math
 import os
 
 import pytest
@@ -84,6 +85,24 @@ def test_scan_under_path_with_space(spark, tmp_path):
     expect = sorted(map(tuple, li.filter(preds_to_column(PREDS)).collect()))
     assert got == expect and got
     assert tbl.last_scan_metrics["bytes_total"] > 0
+
+
+def test_estimate_bytes_under_path_with_space(spark, tmp_path):
+    """Output sizing reads the input's bytes from inputFiles(), which are
+    percent-encoded URIs: undecoded, a table under a directory whose name
+    has a space sized to None and fell back to defaultParallelism."""
+    from lakehouse_sfc_spark.layout.writer import estimate_bytes, plan_num_files
+
+    path = str(tmp_path / "dir with space" / "lineitem")
+    load_table(spark, SF, "lineitem").repartition(4).write.parquet(path)
+    on_disk = sum(
+        os.path.getsize(os.path.join(path, f))
+        for f in os.listdir(path)
+        if f.endswith(".parquet")
+    )
+    df = spark.read.parquet(path)
+    assert estimate_bytes(df) == on_disk > 0
+    assert plan_num_files(df, 1) == math.ceil(on_disk / (1024 * 1024))
 
 
 def test_sfc_layouts_skip_files(spark, layout_tables):

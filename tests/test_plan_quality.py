@@ -504,34 +504,6 @@ def test_common_neighbors_broadcast_is_size_gated(spark, monkeypatch):
         spark.conf.set(key, saved)
 
 
-def test_common_neighbors_lazy_build_never_collects(spark, monkeypatch):
-    """SPARK_GRAFT_LAZY_BUILD=1 must make the builder lazy: no data job
-    (collect) may run during plan construction — the advisor's dry-run /
-    schema-inspection concern.  (Parquet footer schema reads still happen;
-    those are metadata, not data jobs.)  Verified by making collect()
-    explode: the lazy build must survive, the default build must not."""
-    def _boom(self, *a, **k):
-        raise AssertionError("collect() during plan construction")
-
-    # patch the CONCRETE class (pyspark>=4 routes the abstract
-    # pyspark.sql.DataFrame to a classic/connect subclass with its own
-    # collect), discovered from a live instance
-    concrete = type(spark.range(1))
-    monkeypatch.setattr(concrete, "collect", _boom)
-
-    monkeypatch.setenv("SPARK_GRAFT_LAZY_BUILD", "1")
-    df = QUERIES["graph_common_neighbors"].fn(spark, SF)
-    # schema is inspectable without execution
-    assert set(df.columns) == {"p1", "p2", "cn", "jaccard"}
-
-    # sanity: the default (eager) builder DOES probe — the guard is live
-    monkeypatch.delenv("SPARK_GRAFT_LAZY_BUILD")
-    import pytest as _pytest
-
-    with _pytest.raises(AssertionError, match="plan construction"):
-        QUERIES["graph_common_neighbors"].fn(spark, SF)
-
-
 def test_kcore_rounds_reuse_cached_edges(spark):
     """graph_kcore's three peel rounds run on the materialized edge
     relation: the fact table must never be rescanned, and the survivor

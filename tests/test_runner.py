@@ -4,6 +4,7 @@ bounds, file probe, statement splitting, CSV shape."""
 from __future__ import annotations
 
 import csv
+import os
 
 import pytest
 
@@ -43,6 +44,26 @@ def test_probe_files(spark):
     m = probe_files(df)
     assert m["files_probe"] >= 1
     assert m["bytes_probe"] > 0
+
+
+def test_file_metrics_decode_uris_under_path_with_space(spark, tmp_path):
+    """inputFiles() and input_file_name() return percent-encoded file URIs;
+    M2 and M3 must decode them, or a table under a directory whose name has
+    a space reports 0 bytes."""
+    path = str(tmp_path / "dir with space" / "orders")
+    load_table(spark, SF, "orders").repartition(4).write.parquet(path)
+    on_disk = sum(
+        os.path.getsize(os.path.join(path, f))
+        for f in os.listdir(path)
+        if f.endswith(".parquet")
+    )
+    df = spark.read.parquet(path)
+    m2 = input_files_bytes(df)
+    assert m2["n_input_files"] == 4
+    assert m2["bytes_input_files"] == on_disk > 0
+    m3 = probe_files(df)
+    assert m3["files_probe"] == 4
+    assert m3["bytes_probe"] == on_disk
 
 
 def test_run_one_query_sql_and_df(spark):
