@@ -22,6 +22,8 @@ the table directory, then ``os.replace``), so a crash mid-write leaves the
 previous sidecar intact and readers never see a partial one.
 
 This module is the only one that knows the on-disk name and key format.
+Snapshot manifests and WAP branch files (``table/snapshots.py``) key their
+file lists the same way, through ``relative_keys`` / ``absolute_keys``.
 """
 
 from __future__ import annotations
@@ -42,6 +44,27 @@ def local_path(uri: str) -> str:
     older sidecars stored as keys) as a decoded local path; anything else is
     already a path and passes through."""
     return unquote(urlparse(uri).path) if uri.startswith("file:") else uri
+
+
+def relative_keys(files: dict, root: str) -> dict:
+    """``files`` keyed by absolute local paths, re-keyed relative to the
+    table directory ``root`` — the on-disk form of a sidecar, snapshot
+    manifest or branch file.  A file outside ``root`` (a shallow clone's
+    source) keeps a ``../`` key."""
+    root = os.path.abspath(root)
+    return {os.path.relpath(f, root): v for f, v in files.items()}
+
+
+def absolute_keys(files: dict, root: str) -> dict:
+    """The inverse of ``relative_keys``: on-disk keys resolved against
+    ``root`` to normalized absolute local paths, so file sets from
+    different manifests compare equal.  An older file's absolute ``file:``
+    URI decodes to an absolute path, which the join leaves unchanged."""
+    root = os.path.abspath(root)
+    return {
+        os.path.normpath(os.path.join(root, local_path(f))): v
+        for f, v in files.items()
+    }
 
 
 def _jsonable(v):
@@ -114,13 +137,7 @@ def write_sidecar(path: str, sidecar: dict) -> str:
     the old sidecar or the new one, never a torn write.  Returns the
     sidecar path."""
     root = os.path.abspath(path)
-    out = {
-        **sidecar,
-        "files": {
-            os.path.relpath(f, root): info
-            for f, info in sidecar["files"].items()
-        },
-    }
+    out = {**sidecar, "files": relative_keys(sidecar["files"], root)}
     final = os.path.join(root, SIDECAR_NAME)
     tmp = os.path.join(root, f".{SIDECAR_NAME}.{os.getpid()}.tmp")
     try:
@@ -163,13 +180,7 @@ def read_sidecar(path: str) -> dict | None:
         return copy.deepcopy(hit)
     with open(p) as f:
         out = json.load(f)
-    # relative keys join onto the table root; an older sidecar's absolute
-    # file: URI decodes to an absolute path, which join leaves unchanged
-    root = os.path.abspath(path)
-    out["files"] = {
-        os.path.join(root, local_path(f)): info
-        for f, info in out["files"].items()
-    }
+    out["files"] = absolute_keys(out["files"], path)
     if len(_SIDECAR_CACHE) >= _SIDECAR_CACHE_MAX:
         _SIDECAR_CACHE.clear()
     _SIDECAR_CACHE[key] = copy.deepcopy(out)

@@ -41,27 +41,35 @@ _ORACLE = f"""
 
 
 def _layout_cache(sf_dir: str) -> str:
-    """Cache dir of the layout and Bloom tables.  Each table is committed
-    by its sidecar, so it is written in place rather than by
-    ``build_once``."""
+    """Cache dir of the layout and Bloom tables, each published whole by
+    ``build_once`` (sidecar keys are relative, so the tmp-sibling rename
+    keeps them valid)."""
     return scratch_dir(f"layout_cache/{_VERSION}", sf_dir, ("lineitem",))
 
 
-def _layout_table(spark: SparkSession, sf_dir: str, layout: str) -> SfcTable:
-    path = os.path.join(_layout_cache(sf_dir), layout)
-    from lakehouse_sfc_spark.layout.stats import read_sidecar
+def _lineitem_table(
+    spark: SparkSession, sf_dir: str, name: str, **write_kwargs
+) -> SfcTable:
+    """The cached lineitem layout ``name``, written by ``SfcTable.write``
+    with ``write_kwargs`` on first use."""
 
-    if read_sidecar(path) is None:
+    def build(path: str) -> None:
         li = load_table(spark, sf_dir, "lineitem")
-        return SfcTable.write(
-            li,
-            path,
-            layout=layout,
-            layout_cols=_LAYOUT_COLS,
-            stats_cols=_LAYOUT_COLS,
-            num_files=16,
-        )
+        SfcTable.write(li, path, num_files=16, **write_kwargs)
+
+    path = build_once(os.path.join(_layout_cache(sf_dir), name), build)
     return SfcTable(spark, path)
+
+
+def _layout_table(spark: SparkSession, sf_dir: str, layout: str) -> SfcTable:
+    return _lineitem_table(
+        spark,
+        sf_dir,
+        layout,
+        layout=layout,
+        layout_cols=_LAYOUT_COLS,
+        stats_cols=_LAYOUT_COLS,
+    )
 
 
 def _pruned_box_agg(spark: SparkSession, sf_dir: str, layout: str) -> DataFrame:
@@ -825,23 +833,15 @@ def layout_bloom_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     point lookup from a table scan into a handful of file reads.  Result
     must equal the oracle's plain IN-filter over the raw table
     (correctness-by-invariance, like the SFC layout scans)."""
-    path = os.path.join(_layout_cache(sf_dir), "bloom")
-    from lakehouse_sfc_spark.layout.stats import read_sidecar
-
-    sidecar = read_sidecar(path)
-    if sidecar is None or "bloom_columns" not in sidecar:
-        li = load_table(spark, sf_dir, "lineitem")
-        tbl = SfcTable.write(
-            li,
-            path,
-            layout="hashed",
-            layout_cols=["l_orderkey"],
-            stats_cols=["l_orderkey"],
-            bloom_cols=["l_orderkey"],
-            num_files=16,
-        )
-    else:
-        tbl = SfcTable(spark, path)
+    tbl = _lineitem_table(
+        spark,
+        sf_dir,
+        "bloom",
+        layout="hashed",
+        layout_cols=["l_orderkey"],
+        stats_cols=["l_orderkey"],
+        bloom_cols=["l_orderkey"],
+    )
     return tbl.scan([Pred("l_orderkey", "in", _BLOOM_KEYS)]).agg(
         F.count(F.lit(1)).alias("cnt"), dsum("l_quantity", "sum_qty")
     )

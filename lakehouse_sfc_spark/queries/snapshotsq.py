@@ -4,7 +4,7 @@ driver-checkable parity with Delta `versionAsOf`/CDF, Hudi incremental
 pull, and Iceberg snapshot reads (the features the reference gets from its
 engines' transaction logs, SURVEY.md §1.4).
 
-Each query replays a deterministic four-commit history over `orders`:
+Each query replays a deterministic five-commit history over `orders`:
 
   v0  CREATE   all orders (linear layout on o_orderkey, 8 files)
   v1  UPSERT   update  o_orderkey % 7 == 0  → o_totalprice + 1000
@@ -12,11 +12,13 @@ Each query replays a deterministic four-commit history over `orders`:
   v2  DELETE   o_orderdate < 1997-01-01   (retention delete, COW)
   v3  APPEND   o_orderkey % 101 == 0 → key + 200_000_000, NEW column
                o_channel = 'evolved'  (schema evolution)
+  v4  OPTIMIZE z-order on (o_orderkey, o_custkey), 4 files (rows unchanged)
 
 and the oracle reconstructs every version closed-form from the raw table —
 the same correctness-by-invariance strategy as the layout queries.  The
-built table chain is cached per dataset fingerprint and reused by all
-three queries (and across runs).
+chain and its sibling tables are each built once per dataset fingerprint
+(``sources.loader.build_once``) and never gain a commit afterwards, so the
+queries sharing one see the same history whatever order they run in.
 """
 
 from __future__ import annotations
@@ -27,39 +29,38 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from lakehouse_sfc_spark.layout.stats import local_path
 from lakehouse_sfc_spark.queries.registry import dsum, register, sql_dsum
-from lakehouse_sfc_spark.sources.loader import load_table, scratch_dir
+from lakehouse_sfc_spark.sources.loader import build_once, load_table, scratch_dir
 from lakehouse_sfc_spark.table import Pred
-from lakehouse_sfc_spark.table.snapshots import (
-    SnapshotTable,
-    _local,
-    _manifest_path,
-)
+from lakehouse_sfc_spark.table.snapshots import SnapshotTable
 
-_VERSION = "v2"  # bump when the commit-chain semantics change
+_VERSION = "v3"  # bump when the commit-chain semantics change
 _CUTOFF = datetime.datetime(1997, 1, 1)
 _COLS = ["o_orderkey", "o_custkey", "o_totalprice", "o_orderdate"]
 
 
 def _chain_root(sf_dir: str) -> str:
-    """Cache dir of the shared commit chain and its sibling tables.  They
-    are committed by their last manifest, not ``_SUCCESS``, and manifests
-    hold absolute file URIs, so they are built in place."""
+    """Cache dir of the shared commit chain and its sibling tables.  Each
+    table is built into a tmp sibling and published whole by
+    ``build_once``; manifests key files relative to the table directory,
+    so the rename keeps every version readable (a clone's ``../`` keys
+    to its source included)."""
     return scratch_dir(f"snap_cache/{_VERSION}", sf_dir, ("orders",))
 
 
-def _snapshot_table(spark: SparkSession, sf_dir: str) -> SnapshotTable:
-    root = _chain_root(sf_dir)
-    path = os.path.join(root, "orders_snap")
-    if os.path.exists(_manifest_path(path, 3)):
-        return SnapshotTable(spark, path)
+def _chain(spark: SparkSession, sf_dir: str, name: str, build) -> SnapshotTable:
+    """The cached table ``name``, built by ``build(path)`` on first use."""
+    path = build_once(os.path.join(_chain_root(sf_dir), name), build)
+    return SnapshotTable(spark, path)
 
-    import shutil
 
-    shutil.rmtree(path, ignore_errors=True)
-    orders = load_table(spark, sf_dir, "orders").select(*_COLS)
-    t = SnapshotTable.create(
+def _orders(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return load_table(spark, sf_dir, "orders").select(*_COLS)
+
+
+def _create_linear(orders: DataFrame, path: str) -> SnapshotTable:
+    """v0 CREATE: all of ``orders``, 8 files linear on o_orderkey."""
+    return SnapshotTable.create(
         orders,
         path,
         stats_cols=["o_orderkey", "o_orderdate"],
@@ -67,23 +68,40 @@ def _snapshot_table(spark: SparkSession, sf_dir: str) -> SnapshotTable:
         layout_cols=["o_orderkey"],
         num_files=8,
     )
+
+
+def _upsert_then_delete(t: SnapshotTable, orders: DataFrame) -> None:
+    """v1 UPSERT (+1000 on %7 keys, %97 keys inserted shifted +100M) and
+    v2 retention DELETE (o_orderdate < 1997-01-01)."""
     updates = orders.filter(F.col("o_orderkey") % 7 == 0).withColumn(
         "o_totalprice", F.col("o_totalprice") + 1000.0
     )
     inserts = orders.filter(F.col("o_orderkey") % 97 == 0).withColumn(
         "o_orderkey", F.col("o_orderkey") + 100_000_000
     )
-    t.upsert(
-        updates.unionByName(inserts), ["o_orderkey"], "o_totalprice"
-    )
+    t.upsert(updates.unionByName(inserts), ["o_orderkey"], "o_totalprice")
     t.delete_where([Pred("o_orderdate", "<", _CUTOFF)])
-    appended = (
-        orders.filter(F.col("o_orderkey") % 101 == 0)
-        .withColumn("o_orderkey", F.col("o_orderkey") + 200_000_000)
-        .withColumn("o_channel", F.lit("evolved"))
-    )
-    t.append(appended)
-    return t
+
+
+def _snapshot_table(spark: SparkSession, sf_dir: str) -> SnapshotTable:
+    """The shared v0-v4 chain of the module docstring."""
+
+    def build(path: str) -> None:
+        orders = _orders(spark, sf_dir)
+        t = _create_linear(orders, path)
+        _upsert_then_delete(t, orders)
+        t.append(
+            orders.filter(F.col("o_orderkey") % 101 == 0)
+            .withColumn("o_orderkey", F.col("o_orderkey") + 200_000_000)
+            .withColumn("o_channel", F.lit("evolved"))
+        )
+        t.optimize(
+            layout="zorder",
+            layout_cols=["o_orderkey", "o_custkey"],
+            num_files=4,
+        )
+
+    return _chain(spark, sf_dir, "orders_snap", build)
 
 
 _SQL_STATES = f"""
@@ -320,19 +338,14 @@ def snap_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def snap_optimize_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OPTIMIZE as a snapshot commit (Delta ``OPTIMIZE ZORDER BY`` /
-    Iceberg ``rewrite_data_files``): the v3 table is rewritten into 4
-    z-ordered files as version 4, and the aggregate over the optimized
-    version must equal the closed-form final state — rewriting is a pure
-    physical operation, rows bit-identical, history intact (v0-v3 stay
-    time-travelable because their manifests still reference the old
-    files).  The emitted n_files_opt pins the rewrite's file budget."""
+    Iceberg ``rewrite_data_files``): the chain's v3 table was rewritten
+    into 4 z-ordered files as version 4, and the aggregate over the
+    optimized version must equal the closed-form final state — rewriting
+    is a pure physical operation, rows bit-identical, history intact
+    (v0-v3 stay time-travelable because their manifests still reference
+    the old files).  The emitted n_files_opt pins the rewrite's file
+    budget."""
     t = _snapshot_table(spark, sf_dir)
-    if 4 not in t.versions():
-        t.optimize(
-            layout="zorder",
-            layout_cols=["o_orderkey", "o_custkey"],
-            num_files=4,
-        )
     n_files = len(t.manifest(4)["files"])
     return (
         t.read(4)
@@ -348,43 +361,28 @@ def snap_optimize_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _merge_table(spark: SparkSession, sf_dir: str) -> SnapshotTable:
     """A dedicated chain for the MERGE demo (separate from the shared
-    4-version chain so the two caches never interfere): v0 = all orders,
+    5-version chain so the two caches never interfere): v0 = all orders,
     v1 = one MERGE batch carrying updates (%11 keys, +500), deletes
     (%13 keys, matched_delete condition) and inserts (%17 keys + 5e7)."""
-    # under the chain's _VERSION so a bump invalidates this cache along
-    # with the shared chain — semantics changes rebuild tables.
-    root = scratch_dir(f"snap_cache/{_VERSION}/merge_chain", sf_dir, ("orders",))
-    path = os.path.join(root, "orders_merge")
-    if os.path.exists(_manifest_path(path, 1)):
-        return SnapshotTable(spark, path)
 
-    import shutil
+    def build(path: str) -> None:
+        orders = _orders(spark, sf_dir)
+        t = _create_linear(orders, path)
+        k = F.col("o_orderkey")
+        updates = orders.filter((k % 11 == 0) & (k % 13 != 0)).withColumn(
+            "o_totalprice", F.col("o_totalprice") + 500.0
+        )
+        deletes = orders.filter(k % 13 == 0)
+        inserts = orders.filter(k % 17 == 0).withColumn(
+            "o_orderkey", k + 50_000_000
+        )
+        t.merge_into(
+            updates.unionByName(deletes).unionByName(inserts),
+            ["o_orderkey"],
+            matched_delete=(k % 13 == 0),
+        )
 
-    shutil.rmtree(path, ignore_errors=True)
-    orders = load_table(spark, sf_dir, "orders").select(*_COLS)
-    t = SnapshotTable.create(
-        orders,
-        path,
-        stats_cols=["o_orderkey", "o_orderdate"],
-        layout="linear",
-        layout_cols=["o_orderkey"],
-        num_files=8,
-    )
-    k = F.col("o_orderkey")
-    updates = orders.filter((k % 11 == 0) & (k % 13 != 0)).withColumn(
-        "o_totalprice", F.col("o_totalprice") + 500.0
-    )
-    deletes = orders.filter(k % 13 == 0)
-    inserts = orders.filter(k % 17 == 0).withColumn(
-        "o_orderkey", k + 50_000_000
-    )
-    src = updates.unionByName(deletes).unionByName(inserts)
-    t.merge_into(
-        src,
-        ["o_orderkey"],
-        matched_delete=(F.col("o_orderkey") % 13 == 0),
-    )
-    return t
+    return _chain(spark, sf_dir, "orders_merge", build)
 
 
 @register(
@@ -461,62 +459,31 @@ def _restore_table(spark: SparkSession, sf_dir: str) -> SnapshotTable:
     """CREATE → UPSERT → DELETE → RESTORE(1) chain for snap_restore, cached
     like the main chain (own root — restore mutates history, so it must not
     share the table the other snapshot queries replay)."""
-    root = _chain_root(sf_dir)
-    path = os.path.join(root, "orders_restore")
-    if os.path.exists(_manifest_path(path, 3)):
-        return SnapshotTable(spark, path)
 
-    import shutil
+    def build(path: str) -> None:
+        orders = _orders(spark, sf_dir)
+        t = _create_linear(orders, path)
+        _upsert_then_delete(t, orders)
+        t.restore(1)
 
-    shutil.rmtree(path, ignore_errors=True)
-    orders = load_table(spark, sf_dir, "orders").select(*_COLS)
-    t = SnapshotTable.create(
-        orders,
-        path,
-        stats_cols=["o_orderkey", "o_orderdate"],
-        layout="linear",
-        layout_cols=["o_orderkey"],
-        num_files=8,
-    )
-    updates = orders.filter(F.col("o_orderkey") % 7 == 0).withColumn(
-        "o_totalprice", F.col("o_totalprice") + 1000.0
-    )
-    inserts = orders.filter(F.col("o_orderkey") % 97 == 0).withColumn(
-        "o_orderkey", F.col("o_orderkey") + 100_000_000
-    )
-    t.upsert(updates.unionByName(inserts), ["o_orderkey"], "o_totalprice")
-    t.delete_where([Pred("o_orderdate", "<", _CUTOFF)])
-    t.restore(1)
-    return t
+    return _chain(spark, sf_dir, "orders_restore", build)
 
 
 def _wap_table(spark: SparkSession, sf_dir: str) -> SnapshotTable:
     """CREATE → stage_append(good) → publish_branch chain for snap_wap
     (own root; the published chain is immutable after the build, and the
     query stages/re-stages a throwaway AUDIT branch on top per run)."""
-    root = _chain_root(sf_dir)
-    path = os.path.join(root, "orders_wap")
-    if os.path.exists(_manifest_path(path, 1)):
-        return SnapshotTable(spark, path)
 
-    import shutil
+    def build(path: str) -> None:
+        orders = _orders(spark, sf_dir)
+        t = _create_linear(orders, path)
+        good = orders.filter(F.col("o_orderkey") % 17 == 0).withColumn(
+            "o_orderkey", F.col("o_orderkey") + 400_000_000
+        )
+        t.stage_append("etl-good", good, num_files=2)
+        t.publish_branch("etl-good")
 
-    shutil.rmtree(path, ignore_errors=True)
-    orders = load_table(spark, sf_dir, "orders").select(*_COLS)
-    t = SnapshotTable.create(
-        orders,
-        path,
-        stats_cols=["o_orderkey", "o_orderdate"],
-        layout="linear",
-        layout_cols=["o_orderkey"],
-        num_files=8,
-    )
-    good = orders.filter(F.col("o_orderkey") % 17 == 0).withColumn(
-        "o_orderkey", F.col("o_orderkey") + 400_000_000
-    )
-    t.stage_append("etl-good", good, num_files=2)
-    t.publish_branch("etl-good")
-    return t
+    return _chain(spark, sf_dir, "orders_wap", build)
 
 
 @register(
@@ -562,7 +529,7 @@ def snap_wap(spark: SparkSession, sf_dir: str) -> DataFrame:
     every published version (table/snapshots.py::stage_append/
     read_branch/publish_branch/discard_branch)."""
     t = _wap_table(spark, sf_dir)
-    orders = load_table(spark, sf_dir, "orders").select(*_COLS)
+    orders = _orders(spark, sf_dir)
     bad = (
         orders.filter(F.col("o_orderkey") % 13 == 0)
         .withColumn("o_orderkey", F.col("o_orderkey") + 300_000_000)
@@ -594,33 +561,18 @@ def _vacuum_table(spark: SparkSession, sf_dir: str) -> SnapshotTable:
     """CREATE → DELETE → APPEND → VACUUM(retain_last=2) chain (own root —
     vacuum physically deletes files and manifests, so it must never touch
     the chain the other snapshot queries replay)."""
-    root = _chain_root(sf_dir)
-    path = os.path.join(root, "orders_vacuum")
-    if os.path.exists(_manifest_path(path, 2)) and not os.path.exists(
-        _manifest_path(path, 0)
-    ):
-        return SnapshotTable(spark, path)
 
-    import shutil
+    def build(path: str) -> None:
+        orders = _orders(spark, sf_dir)
+        t = _create_linear(orders, path)
+        t.delete_where([Pred("o_orderdate", "<", _CUTOFF)])
+        t.append(
+            orders.filter(F.col("o_orderkey") % 101 == 0)
+            .withColumn("o_orderkey", F.col("o_orderkey") + 200_000_000)
+        )
+        t.vacuum(retain_last=2)
 
-    shutil.rmtree(path, ignore_errors=True)
-    orders = load_table(spark, sf_dir, "orders").select(*_COLS)
-    t = SnapshotTable.create(
-        orders,
-        path,
-        stats_cols=["o_orderkey", "o_orderdate"],
-        layout="linear",
-        layout_cols=["o_orderkey"],
-        num_files=8,
-    )
-    t.delete_where([Pred("o_orderdate", "<", _CUTOFF)])
-    appended = (
-        orders.filter(F.col("o_orderkey") % 101 == 0)
-        .withColumn("o_orderkey", F.col("o_orderkey") + 200_000_000)
-    )
-    t.append(appended)
-    t.vacuum(retain_last=2)
-    return t
+    return _chain(spark, sf_dir, "orders_vacuum", build)
 
 
 @register(
@@ -785,7 +737,7 @@ def snap_tags(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def snap_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SHALLOW CLONE + divergence (Delta CLONE parity): clone the
-    4-commit orders chain at its head — a metadata-only commit that
+    5-commit orders chain at its head — a metadata-only commit that
     references the source's files, zero data copied — append a divergent
     slice to the clone, and read BOTH tables back: the source must be
     bit-unchanged and the clone must equal source ∪ extra.
@@ -797,27 +749,20 @@ def snap_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``SnapshotTable.clone_to``; ``snap_vacuum`` runs on an isolated chain
     for exactly that reason."""
     src = _snapshot_table(spark, sf_dir)
-    root = _chain_root(sf_dir)
-    cpath = os.path.join(root, "orders_clone")
-    if not os.path.exists(_manifest_path(cpath, 1)):
-        import shutil
 
-        shutil.rmtree(cpath, ignore_errors=True)
-        clone = src.clone_to(cpath)
-        orders = load_table(spark, sf_dir, "orders").select(*_COLS)
-        extra = orders.filter(F.col("o_orderkey") % 103 == 0).withColumn(
-            "o_orderkey", F.col("o_orderkey") + 300_000_000
+    def build(path: str) -> None:
+        clone = src.clone_to(path)
+        clone.append(
+            _orders(spark, sf_dir)
+            .filter(F.col("o_orderkey") % 103 == 0)
+            .withColumn("o_orderkey", F.col("o_orderkey") + 300_000_000)
         )
-        clone.append(extra)
-    else:
-        clone = SnapshotTable(spark, cpath)
+
+    clone = _chain(spark, sf_dir, "orders_clone", build)
 
     def _refs_foreign(t: SnapshotTable) -> bool:
-        own = os.path.abspath(t.path)
-        return any(
-            not os.path.abspath(local_path(u)).startswith(own)
-            for u in t.manifest()["files"]
-        )
+        own = os.path.abspath(t.path) + os.sep
+        return any(not f.startswith(own) for f in t.manifest()["files"])
 
     def _summary(t: SnapshotTable, rel: str) -> DataFrame:
         return t.read().agg(
@@ -847,32 +792,25 @@ def _specevo_table(spark: SparkSession, sf_dir: str) -> SnapshotTable:
     per-customer lookups — the canonical reason Iceberg grew spec
     evolution).  v2 APPEND: the remaining orders land under spec B.  The
     chain is cached per dataset fingerprint like every snap_* chain."""
-    root = _chain_root(sf_dir)
-    path = os.path.join(root, "orders_specevo")
-    if os.path.exists(_manifest_path(path, 2)):
-        return SnapshotTable(spark, path)
 
-    import shutil
+    def build(path: str) -> None:
+        orders = load_table(spark, sf_dir, "orders").select(
+            *_COLS, "o_orderpriority"
+        )
+        t = SnapshotTable.create(
+            orders.filter(F.col("o_orderdate") < _EVO_CUT),
+            path,
+            stats_cols=["o_orderdate"],
+            layout="linear",
+            layout_cols=["o_orderdate"],
+            num_files=8,
+        )
+        t.evolve_spec(
+            layout="linear", layout_cols=["o_custkey"], stats_cols=["o_custkey"]
+        )
+        t.append(orders.filter(F.col("o_orderdate") >= _EVO_CUT), num_files=8)
 
-    shutil.rmtree(path, ignore_errors=True)
-    cols = [
-        "o_orderkey", "o_custkey", "o_totalprice", "o_orderdate",
-        "o_orderpriority",
-    ]
-    orders = load_table(spark, sf_dir, "orders").select(*cols)
-    t = SnapshotTable.create(
-        orders.filter(F.col("o_orderdate") < _EVO_CUT),
-        path,
-        stats_cols=["o_orderdate"],
-        layout="linear",
-        layout_cols=["o_orderdate"],
-        num_files=8,
-    )
-    t.evolve_spec(
-        layout="linear", layout_cols=["o_custkey"], stats_cols=["o_custkey"]
-    )
-    t.append(orders.filter(F.col("o_orderdate") >= _EVO_CUT), num_files=8)
-    return t
+    return _chain(spark, sf_dir, "orders_specevo", build)
 
 
 @register(
@@ -930,45 +868,40 @@ def _lineage_table(spark: SparkSession, sf_dir: str) -> SnapshotTable:
     on %7 keys, inserts %97 shifted +100M); v2 UPSERT (+5000 updates on
     %13 keys — strictly beats any prior value so latest-wins is
     key-arithmetic-predictable, inserts %89 shifted +200M)."""
-    root = _chain_root(sf_dir)
-    path = os.path.join(root, "orders_lineage")
-    if os.path.exists(_manifest_path(path, 2)):
-        return SnapshotTable(spark, path)
 
-    import shutil
-
-    shutil.rmtree(path, ignore_errors=True)
-    orders = load_table(spark, sf_dir, "orders").select(*_COLS)
-    t = SnapshotTable.create(
-        orders,
-        path,
-        stats_cols=["o_orderkey"],
-        layout="linear",
-        layout_cols=["o_orderkey"],
-        num_files=8,
-        lineage_keys=["o_orderkey"],
-    )
-    up1 = (
-        orders.filter(F.col("o_orderkey") % 7 == 0)
-        .withColumn("o_totalprice", F.col("o_totalprice") + 1000.0)
-        .unionByName(
-            orders.filter(F.col("o_orderkey") % 97 == 0).withColumn(
-                "o_orderkey", F.col("o_orderkey") + 100_000_000
+    def build(path: str) -> None:
+        orders = _orders(spark, sf_dir)
+        t = SnapshotTable.create(
+            orders,
+            path,
+            stats_cols=["o_orderkey"],
+            layout="linear",
+            layout_cols=["o_orderkey"],
+            num_files=8,
+            lineage_keys=["o_orderkey"],
+        )
+        up1 = (
+            orders.filter(F.col("o_orderkey") % 7 == 0)
+            .withColumn("o_totalprice", F.col("o_totalprice") + 1000.0)
+            .unionByName(
+                orders.filter(F.col("o_orderkey") % 97 == 0).withColumn(
+                    "o_orderkey", F.col("o_orderkey") + 100_000_000
+                )
             )
         )
-    )
-    t.upsert(up1, ["o_orderkey"], "o_totalprice")
-    up2 = (
-        orders.filter(F.col("o_orderkey") % 13 == 0)
-        .withColumn("o_totalprice", F.col("o_totalprice") + 5000.0)
-        .unionByName(
-            orders.filter(F.col("o_orderkey") % 89 == 0).withColumn(
-                "o_orderkey", F.col("o_orderkey") + 200_000_000
+        t.upsert(up1, ["o_orderkey"], "o_totalprice")
+        up2 = (
+            orders.filter(F.col("o_orderkey") % 13 == 0)
+            .withColumn("o_totalprice", F.col("o_totalprice") + 5000.0)
+            .unionByName(
+                orders.filter(F.col("o_orderkey") % 89 == 0).withColumn(
+                    "o_orderkey", F.col("o_orderkey") + 200_000_000
+                )
             )
         )
-    )
-    t.upsert(up2, ["o_orderkey"], "o_totalprice")
-    return t
+        t.upsert(up2, ["o_orderkey"], "o_totalprice")
+
+    return _chain(spark, sf_dir, "orders_lineage", build)
 
 
 @register(
@@ -1053,25 +986,19 @@ def snap_row_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _orphan_table(spark: SparkSession, sf_dir: str) -> SnapshotTable:
-    root = _chain_root(sf_dir)
-    path = os.path.join(root, "orders_orphan")
-    if os.path.exists(_manifest_path(path, 1)):
-        return SnapshotTable(spark, path)
+    def build(path: str) -> None:
+        orders = _orders(spark, sf_dir)
+        t = SnapshotTable.create(
+            orders, path, stats_cols=["o_orderkey"], num_files=4
+        )
+        t.append(
+            orders.filter(F.col("o_orderkey") % 101 == 0).withColumn(
+                "o_orderkey", F.col("o_orderkey") + 300_000_000
+            ),
+            num_files=4,
+        )
 
-    import shutil
-
-    shutil.rmtree(path, ignore_errors=True)
-    orders = load_table(spark, sf_dir, "orders").select(*_COLS)
-    t = SnapshotTable.create(
-        orders, path, stats_cols=["o_orderkey"], num_files=4
-    )
-    t.append(
-        orders.filter(F.col("o_orderkey") % 101 == 0).withColumn(
-            "o_orderkey", F.col("o_orderkey") + 300_000_000
-        ),
-        num_files=4,
-    )
-    return t
+    return _chain(spark, sf_dir, "orders_orphan", build)
 
 
 @register(
@@ -1112,7 +1039,7 @@ def snap_orphan_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     # plant fresh orphans EVERY run (idempotent: removed again below)
     import shutil
 
-    src = _local(next(iter(t.manifest()["files"])))
+    src = next(iter(t.manifest()["files"]))
     for i in range(3):
         shutil.copyfile(src, os.path.join(t.path, f"orphan-{i:02d}.parquet"))
     # older_than_s=0: single-writer demo context (the grace window
@@ -1145,33 +1072,28 @@ def _cherry_table(spark: SparkSession, sf_dir: str) -> SnapshotTable:
     """v0 CREATE; v1 UPSERT (+1000 on %7 keys); v2 APPEND (%101, +300M
     keys); v3 RESTORE to v0 (wipes v1+v2 from the head); v4 CHERRY-PICK
     of v1 (selectively recovers ONLY the upsert, not the append)."""
-    root = _chain_root(sf_dir)
-    path = os.path.join(root, "orders_cherry")
-    if os.path.exists(_manifest_path(path, 4)):
-        return SnapshotTable(spark, path)
 
-    import shutil
-
-    shutil.rmtree(path, ignore_errors=True)
-    orders = load_table(spark, sf_dir, "orders").select(*_COLS)
-    t = SnapshotTable.create(
-        orders, path, stats_cols=["o_orderkey"], num_files=4
-    )
-    t.upsert(
-        orders.filter(F.col("o_orderkey") % 7 == 0).withColumn(
-            "o_totalprice", F.col("o_totalprice") + 1000.0
-        ),
-        ["o_orderkey"],
-        "o_totalprice",
-    )
-    t.append(
-        orders.filter(F.col("o_orderkey") % 101 == 0).withColumn(
-            "o_orderkey", F.col("o_orderkey") + 300_000_000
+    def build(path: str) -> None:
+        orders = _orders(spark, sf_dir)
+        t = SnapshotTable.create(
+            orders, path, stats_cols=["o_orderkey"], num_files=4
         )
-    )
-    t.restore(0)
-    t.cherry_pick(1, ["o_orderkey"], "o_totalprice")
-    return t
+        t.upsert(
+            orders.filter(F.col("o_orderkey") % 7 == 0).withColumn(
+                "o_totalprice", F.col("o_totalprice") + 1000.0
+            ),
+            ["o_orderkey"],
+            "o_totalprice",
+        )
+        t.append(
+            orders.filter(F.col("o_orderkey") % 101 == 0).withColumn(
+                "o_orderkey", F.col("o_orderkey") + 300_000_000
+            )
+        )
+        t.restore(0)
+        t.cherry_pick(1, ["o_orderkey"], "o_totalprice")
+
+    return _chain(spark, sf_dir, "orders_cherry", build)
 
 
 @register(
@@ -1377,10 +1299,8 @@ def snap_history_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     norm is the fat-finger this table catches before anyone queries the
     data.
 
-    The audit covers the chain's deterministic creation prefix
-    (versions 0-3); sibling entries may append further commits (e.g.
-    snap_optimize_layout's OPTIMIZE) to the shared cached chain, so an
-    unbounded history would depend on sweep order.
+    The audit covers the commits that change rows (versions 0-3); v4 is
+    the chain's OPTIMIZE re-layout, which snap_optimize_layout reads.
 
     100-TB shape: O(versions) manifest reads on the driver, one tiny
     createDataFrame — no executor work at all."""
@@ -1407,29 +1327,23 @@ def snap_history_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _constraint_table(spark: SparkSession, sf_dir: str) -> SnapshotTable:
-    root = _chain_root(sf_dir)
-    path = os.path.join(root, "orders_constraints")
-    if os.path.exists(_manifest_path(path, 2)):
-        return SnapshotTable(spark, path)
+    def build(path: str) -> None:
+        orders = _orders(spark, sf_dir)
+        t = SnapshotTable.create(
+            orders.filter(F.col("o_orderkey") % 7 == 0),
+            path,
+            stats_cols=["o_orderkey"],
+            num_files=4,
+        )
+        t.set_constraint("positive_price", "o_totalprice > 0")  # v1
+        t.append(  # v2: every row satisfies the constraint
+            orders.filter(F.col("o_orderkey") % 11 == 0).withColumn(
+                "o_orderkey", F.col("o_orderkey") + 500_000_000
+            ),
+            num_files=4,
+        )
 
-    import shutil
-
-    shutil.rmtree(path, ignore_errors=True)
-    orders = load_table(spark, sf_dir, "orders").select(*_COLS)
-    t = SnapshotTable.create(
-        orders.filter(F.col("o_orderkey") % 7 == 0),
-        path,
-        stats_cols=["o_orderkey"],
-        num_files=4,
-    )
-    t.set_constraint("positive_price", "o_totalprice > 0")  # v1
-    t.append(  # v2: every row satisfies the constraint
-        orders.filter(F.col("o_orderkey") % 11 == 0).withColumn(
-            "o_orderkey", F.col("o_orderkey") + 500_000_000
-        ),
-        num_files=4,
-    )
-    return t
+    return _chain(spark, sf_dir, "orders_constraints", build)
 
 
 @register(
@@ -1478,7 +1392,7 @@ def snap_constraints(spark: SparkSession, sf_dir: str) -> DataFrame:
     rejected writes cost no rewrite.  At 100 TB the same plan: metadata
     commit + O(batch) validation."""
     t = _constraint_table(spark, sf_dir)
-    orders = load_table(spark, sf_dir, "orders").select(*_COLS)
+    orders = _orders(spark, sf_dir)
 
     def _state(
         step: int, op: str, accepted: bool, n_batch, version: int

@@ -206,11 +206,6 @@ def jdbc_options(
     return opts
 
 
-def jdbc_scan(spark: SparkSession, **kwargs) -> DataFrame:
-    """Build the JDBC DataFrame (connects lazily at first action)."""
-    return spark.read.format("jdbc").options(**jdbc_options(**kwargs)).load()
-
-
 # --- Test-table registry ----------------------------------------------------
 
 
@@ -359,6 +354,9 @@ def dataset_fingerprint(sf_dir: str, tables: tuple[str, ...] = TABLES) -> str:
 # build.  This section is the only code that knows where they live
 # (``<repo>/.scratch/<kind>/<dataset-basename>/<fingerprint>``) and how a
 # directory cache is published (tmp sibling + atomic rename + ``_SUCCESS``).
+# Every one of them publishes through ``build_once``: stats sidecars and
+# snapshot manifests name files relative to the table directory, so a
+# table built in the tmp sibling stays readable after the rename.
 
 _SCRATCH = os.path.join(
     os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),

@@ -92,8 +92,8 @@ def _may_match(pred: Pred, mn, mx) -> bool:
 
 def prune_files(sidecar: dict, predicates: list[Pred]) -> tuple[list[str], dict]:
     """Surviving files + metrics.  ``sidecar["files"]`` keys come back as the
-    survivors unchanged: absolute local paths from ``read_sidecar``, or a
-    snapshot manifest's ``file:`` URIs.  Predicates on columns without stats
+    survivors unchanged: absolute local paths, as ``read_sidecar`` and
+    ``SnapshotTable.manifest`` return them.  Predicates on columns without stats
     never prune (conservative) — both when the whole sidecar lacks the
     column and PER FILE, because after partition-spec evolution a manifest
     mixes files written under different specs: pre-evolution files carry no

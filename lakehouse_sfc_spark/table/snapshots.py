@@ -13,11 +13,21 @@ Model
 A manifest is the COMPLETE file listing for its version plus per-file
 min/max/count stats (the same shape as the layout stats sidecar, so
 `table.pruning.prune_files` works on any historical version unchanged).
+Its keys are file paths relative to the table directory, like the
+sidecar's (``layout.stats.relative_keys``; a shallow clone's carried files
+are ``../<source>/...``), so a table — or a table together with its clones
+— can be moved or copied as a directory; in memory they are normalized
+absolute local paths.  Manifests keyed by older absolute ``file:`` URIs
+still read.  WAP branch files use the same key format.
+
 Every mutation stages new files, then publishes a new manifest — the
 manifest write IS the commit point, files are never mutated or renamed
 after publish, so readers of any version are isolated from concurrent
 writers (the same metadata-swap trick that lets Delta/Iceberg commit on
-object stores without atomic rename).
+object stores without atomic rename).  Publishing never replaces: the
+manifest is hard-linked into place from a per-process temp file, so when
+two writers commit the same version the second one fails instead of
+silently dropping the first one's commit (Delta's put-if-absent rule).
 
 Scale notes (100 TB)
 --------------------
@@ -44,34 +54,60 @@ import json
 import os
 import shutil
 import time
-from urllib.parse import urlparse
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from lakehouse_sfc_spark.layout.stats import collect_file_stats, read_sidecar
+from lakehouse_sfc_spark.layout.stats import (
+    absolute_keys,
+    read_sidecar,
+    relative_keys,
+)
 from lakehouse_sfc_spark.layout.upsert import dedup_latest
 from lakehouse_sfc_spark.layout.writer import layout_write
 from lakehouse_sfc_spark.table.pruning import Pred, prune_files
 
 _LOG_DIR = "_log"
-
-
-def _local(uri: str) -> str:
-    p = urlparse(uri)
-    if p.scheme not in ("file", ""):
-        raise NotImplementedError(
-            f"SnapshotTable requires a local filesystem; got scheme "
-            f"{p.scheme!r} ({uri}).  On object stores the same protocol "
-            "works as-is (stage under a unique prefix, publish the "
-            "manifest) — only this path-join helper assumes local paths."
-        )
-    return p.path if p.scheme == "file" else uri
+_FILE_LISTS = ("files", "staged_files")  # keyed by data file
 
 
 def _manifest_path(path: str, version: int) -> str:
     return os.path.join(path, _LOG_DIR, f"v{version:05d}.json")
+
+
+def _read_log(p: str, root: str) -> dict:
+    """A manifest or branch file, its file lists keyed by absolute paths."""
+    with open(p) as fh:
+        m = json.load(fh)
+    for key in _FILE_LISTS:
+        if key in m:
+            m[key] = absolute_keys(m[key], root)
+    return m
+
+
+def _write_log(p: str, m: dict, root: str) -> None:
+    """Publish ``m`` at ``p`` with file lists keyed relative to ``root``.
+    Never replaces: written to a per-process temp file, then hard-linked
+    into place, so an existing manifest stays as it is and the losing
+    writer gets ``FileExistsError``."""
+    out = {
+        k: relative_keys(v, root) if k in _FILE_LISTS else v
+        for k, v in m.items()
+    }
+    os.makedirs(os.path.dirname(p), exist_ok=True)
+    tmp = f"{p}.{os.getpid()}.tmp"
+    try:
+        with open(tmp, "w") as fh:
+            json.dump(out, fh, default=str)
+        os.link(tmp, p)
+    except FileExistsError:
+        raise FileExistsError(
+            f"{p} is already committed; another writer published it"
+        ) from None
+    finally:
+        if os.path.exists(tmp):
+            os.remove(tmp)
 
 
 class SnapshotTable:
@@ -106,8 +142,7 @@ class SnapshotTable:
 
     def manifest(self, version: int | None = None) -> dict:
         v = self.latest_version() if version is None else version
-        with open(_manifest_path(self.path, v)) as fh:
-            return json.load(fh)
+        return _read_log(_manifest_path(self.path, v), self.path)
 
     def history(self) -> list[dict]:
         """Commit history, oldest first (Delta `DESCRIBE HISTORY` parity)."""
@@ -143,11 +178,7 @@ class SnapshotTable:
             "files": files,
             **(extra or {}),
         }
-        os.makedirs(os.path.join(self.path, _LOG_DIR), exist_ok=True)
-        tmp = _manifest_path(self.path, version) + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(m, fh, default=str)
-        os.rename(tmp, _manifest_path(self.path, version))
+        _write_log(_manifest_path(self.path, version), m, self.path)
         return m
 
     # ----------------------------------------------------------- constraints
@@ -251,7 +282,7 @@ class SnapshotTable:
     ) -> dict:
         """Write df's files into the table dir under this commit's prefix
         (or an explicit ``prefix``, e.g. a WAP branch namespace); return
-        their {uri: stats} entries.  Files are immutable afterwards."""
+        their {path: stats} entries.  Files are immutable afterwards."""
         if df.isEmpty():  # e.g. DELETE emptied every overlapping file
             return {}
         prefix = prefix or f"commit-{version:05d}"
@@ -267,10 +298,11 @@ class SnapshotTable:
         )
         sidecar = read_sidecar(stage) or {"files": {}}
         out = {}
-        for i, (uri, info) in enumerate(sorted(sidecar["files"].items())):
-            dst = os.path.join(self.path, f"{prefix}-{i:04d}.parquet")
-            os.rename(_local(uri), dst)
-            out[f"file://{dst}"] = info
+        root = os.path.abspath(self.path)
+        for i, (src, info) in enumerate(sorted(sidecar["files"].items())):
+            dst = os.path.join(root, f"{prefix}-{i:04d}.parquet")
+            os.rename(src, dst)
+            out[dst] = info
         shutil.rmtree(stage)
         return out
 
@@ -913,19 +945,14 @@ class SnapshotTable:
             "schema": json.loads(df.schema.json()),
             "stats_cols": parent["stats_cols"],
         }
-        os.makedirs(os.path.join(self.path, _LOG_DIR), exist_ok=True)
-        tmp = self._branch_path(name) + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(b, fh, default=str)
-        os.rename(tmp, self._branch_path(name))
+        _write_log(self._branch_path(name), b, self.path)
         return b
 
     def read_branch(self, name: str) -> DataFrame:
         """WAP step 2 (audit): the table AS IF the branch were published —
         main's files plus the staged ones — for DQ checks, row counts,
         reconciliation queries.  Reading never publishes."""
-        with open(self._branch_path(name)) as fh:
-            b = json.load(fh)
+        b = _read_log(self._branch_path(name), self.path)
         files = sorted(b["files"])
         if not files:
             return self.spark.createDataFrame(
@@ -939,8 +966,7 @@ class SnapshotTable:
         main advanced past the branch's base version (the staged state was
         audited against a table that no longer exists — re-stage), which
         is exactly Iceberg's cherry-pick conflict rule for WAP."""
-        with open(self._branch_path(name)) as fh:
-            b = json.load(fh)
+        b = _read_log(self._branch_path(name), self.path)
         parent = self.manifest()
         if parent["version"] != b["base_version"]:
             raise ValueError(
@@ -972,11 +998,10 @@ class SnapshotTable:
         """Failed audit: physically delete the staged files (they were
         never referenced by any manifest) and drop the branch ref — main
         never knew."""
-        with open(self._branch_path(name)) as fh:
-            b = json.load(fh)
-        for uri in b["staged_files"]:
+        b = _read_log(self._branch_path(name), self.path)
+        for f in b["staged_files"]:
             try:
-                os.remove(_local(uri))
+                os.remove(f)
             except FileNotFoundError:
                 pass
         os.remove(self._branch_path(name))
@@ -998,11 +1023,8 @@ class SnapshotTable:
         A deep clone is ``clone_to(...)`` followed by ``optimize()`` on
         the clone, which rewrites every referenced file locally."""
         m = self.manifest(version)
-        os.makedirs(dest, exist_ok=True)
         t = SnapshotTable(self.spark, dest)
-        if t.versions():
-            raise FileExistsError(f"clone target {dest} already has a log")
-        t._publish(
+        t._publish(  # FileExistsError when dest already has a v0
             0,
             "CLONE",
             dict(m["files"]),
@@ -1056,17 +1078,16 @@ class SnapshotTable:
         for bp in _glob.glob(
             os.path.join(self.path, _LOG_DIR, "branch-*.json")
         ):
-            with open(bp) as fh:
-                b = json.load(fh)
+            b = _read_log(bp, self.path)
             live |= set(b.get("files", []))
             live |= set(b.get("staged_files", []))
         dead: set[str] = set()
         for v in drop_vs:
             dead |= set(self.manifest(v)["files"])
         dead -= live
-        for uri in dead:
+        for f in dead:
             try:
-                os.remove(_local(uri))
+                os.remove(f)
             except FileNotFoundError:
                 pass
         for v in drop_vs:
@@ -1137,31 +1158,29 @@ class SnapshotTable:
         for bp in _glob.glob(
             os.path.join(self.path, _LOG_DIR, "branch-*.json")
         ):
-            with open(bp) as fh:
-                b = json.load(fh)
+            b = _read_log(bp, self.path)
             live |= set(b.get("files", []))
             live |= set(b.get("staged_files", []))
-        on_disk = {
-            f"file://{p}"
-            for p in _glob.glob(os.path.join(self.path, "*.parquet"))
-        }
+        on_disk = set(
+            _glob.glob(os.path.join(os.path.abspath(self.path), "*.parquet"))
+        )
         cutoff = time.time() - older_than_s
 
-        def _past_grace(uri: str) -> bool:
+        def _past_grace(f: str) -> bool:
             # A file can vanish between the glob and the stat (another GC
             # pass, or a writer aborting its own staging file) — treat a
             # vanished file as not-ours-to-collect this pass instead of
             # aborting the whole GC with FileNotFoundError.
             try:
-                return os.path.getmtime(_local(uri)) <= cutoff
+                return os.path.getmtime(f) <= cutoff
             except OSError:
                 return False
 
-        orphans = sorted(uri for uri in on_disk - live if _past_grace(uri))
+        orphans = sorted(f for f in on_disk - live if _past_grace(f))
         if not dry_run:
-            for uri in orphans:
+            for f in orphans:
                 try:
-                    os.remove(_local(uri))
+                    os.remove(f)
                 except FileNotFoundError:
                     pass  # already collected concurrently
         return {

@@ -5,8 +5,10 @@ live (``.scratch/<kind>/<dataset-basename>/<fingerprint>``) and how a
 directory cache is published (``scratch_dir`` / ``build_once``).  When the
 query modules each found the repo root, keyed the directory and checked
 ``_SUCCESS`` themselves, two of the copies skipped the atomic publish and
-an environment knob forked five builders into a cache-bypass path.  This
-test statically keeps the protocol in one place."""
+an environment knob forked five builders into a cache-bypass path.  The
+snapshot chains kept a second protocol — probing for their last manifest
+and rebuilding in place — because their manifests held absolute
+``file://`` URIs.  This test statically keeps the protocol in one place."""
 
 from __future__ import annotations
 
@@ -54,3 +56,36 @@ def test_query_modules_import_no_private_layouts_names():
                     if a.name.startswith("_")
                 ]
     assert not bad, f"private names imported from {LAYOUTS}: {bad}"
+
+
+SNAPSHOTS = "lakehouse_sfc_spark.table.snapshots"
+
+
+def test_query_modules_import_no_private_snapshots_names():
+    bad = []
+    for p in sorted((PKG / "queries").glob("*.py")):
+        for node in ast.walk(ast.parse(p.read_text(encoding="utf-8"))):
+            if isinstance(node, ast.ImportFrom) and node.module == SNAPSHOTS:
+                bad += [
+                    f"{p.name}: {a.name}"
+                    for a in node.names
+                    if a.name.startswith("_")
+                ]
+    assert not bad, f"private names imported from {SNAPSHOTS}: {bad}"
+
+
+def test_query_modules_probe_no_manifests():
+    bad = _offenders((PKG / "queries").glob("*.py"), ("_manifest_path(",))
+    assert not bad, (
+        f"{bad} probe snapshot manifests to decide whether a cached chain "
+        "is complete; publish the chain with build_once instead"
+    )
+
+
+def test_no_file_uri_keys_in_tables_or_queries():
+    paths = [*(PKG / "table").glob("*.py"), *(PKG / "queries").glob("*.py")]
+    bad = _offenders(paths, ("file:" + "//",))
+    assert not bad, (
+        f"{bad} build file:// keys; manifests and sidecars key files "
+        "relative to the table directory (layout.stats.relative_keys)"
+    )

@@ -763,7 +763,7 @@ def test_row_lineage_append_and_merge_guard(spark, orders, tmp_path):
 def test_remove_orphans_spares_all_referenced_files(table, orders, spark):
     import shutil
 
-    from lakehouse_sfc_spark.table.snapshots import _local
+    from lakehouse_sfc_spark.layout.stats import local_path as _local
 
     # rewrite some files so OLD versions reference files the head does not
     table.upsert(
@@ -803,7 +803,7 @@ def test_remove_orphans_spares_all_referenced_files(table, orders, spark):
 def test_remove_orphans_keeps_staged_branch_files(table, orders):
     import shutil
 
-    from lakehouse_sfc_spark.table.snapshots import _local
+    from lakehouse_sfc_spark.layout.stats import local_path as _local
 
     table.stage_append(
         "audit",
@@ -846,3 +846,148 @@ def test_cherry_pick_refuses_deletes(table, orders):
     table.restore(0)
     with pytest.raises(NotImplementedError, match="delete"):
         table.cherry_pick(1, ["o_orderkey"], "o_totalprice")
+
+
+# --- relocatable manifests and the no-replace commit ------------------------
+
+
+def _rows(df) -> list[tuple]:
+    return sorted(map(tuple, df.collect()), key=repr)
+
+
+def _state(t: SnapshotTable, key_preds) -> dict:
+    """Everything a reader sees: each version's rows, the CDF from v0 to
+    the head, and a pruned scan's rows and surviving file names."""
+    from lakehouse_sfc_spark.table.pruning import prune_files
+
+    m = t.manifest()
+    kept, _ = prune_files(
+        {"columns": m["stats_cols"], "files": m["files"]}, key_preds
+    )
+    return {
+        "versions": {v: _rows(t.read(v)) for v in t.versions()},
+        "changes": _rows(t.changes(0, t.latest_version(), ["o_orderkey"])),
+        "scan": _rows(t.scan(key_preds)),
+        "kept": sorted(os.path.relpath(f, t.path) for f in kept),
+    }
+
+
+def _raw_manifest(t: SnapshotTable, v: int) -> dict:
+    import json
+
+    with open(os.path.join(t.path, "_log", f"v{v:05d}.json")) as fh:
+        return json.load(fh)
+
+
+def test_copied_table_and_clone_read_the_same(spark, orders, tmp_path):
+    """A table with upsert, delete and a shallow clone, copied elsewhere as
+    a directory (the original then removed): every version, the CDF and
+    a pruned scan read the same, from the copy's own files."""
+    lake = tmp_path / "lake"
+    t = SnapshotTable.create(
+        orders, str(lake / "src"), stats_cols=["o_orderkey"],
+        layout="linear", layout_cols=["o_orderkey"], num_files=8,
+    )
+    t.upsert(
+        orders.filter(F.col("o_orderkey") % 7 == 0)
+        .withColumn("o_totalprice", F.col("o_totalprice") + 1.0),
+        ["o_orderkey"], "o_totalprice",
+    )
+    t.delete_where([Pred("o_orderkey", "<=", 300)])
+    c = t.clone_to(str(lake / "clone"))
+    c.append(orders.limit(5).withColumn(
+        "o_orderkey", F.col("o_orderkey") + 9_000_000
+    ))
+    preds = [Pred("o_orderkey", "between", (1000, 2000))]
+    expect = {n: _state(x, preds) for n, x in (("src", t), ("clone", c))}
+    assert expect["src"]["kept"] and len(expect["src"]["kept"]) < 8
+
+    import shutil
+
+    copy = tmp_path / "copy"
+    shutil.copytree(lake, copy)
+    shutil.rmtree(lake)
+    for name in ("src", "clone"):
+        moved = SnapshotTable(spark, str(copy / name))
+        assert _state(moved, preds) == expect[name], name
+        for v in moved.versions():
+            assert all(
+                f.startswith(f"{copy}{os.sep}")
+                for f in moved.manifest(v)["files"]
+            )
+
+
+def test_old_format_manifest_still_reads_and_prunes(table, orders):
+    """New manifests hold relative keys; a manifest keyed the old way —
+    absolute ``file://`` URIs — resolves to the same files and reads,
+    diffs and prunes the same."""
+    import json
+
+    table.upsert(
+        orders.filter(F.col("o_orderkey") <= 100)
+        .withColumn("o_totalprice", F.col("o_totalprice") + 5.0),
+        ["o_orderkey"], "o_totalprice",
+    )
+    preds = [Pred("o_orderkey", "<=", 500)]
+    expect = _state(table, preds)
+    for v in table.versions():
+        raw = _raw_manifest(table, v)
+        assert not any(k.startswith(("file:", "/")) for k in raw["files"])
+        raw["files"] = {
+            "file://" + os.path.abspath(os.path.join(table.path, k)): info
+            for k, info in raw["files"].items()
+        }
+        with open(os.path.join(table.path, "_log", f"v{v:05d}.json"),
+                  "w") as fh:
+            json.dump(raw, fh)
+    assert _state(table, preds) == expect
+
+
+def test_clone_built_in_tmp_sibling_then_renamed(spark, tmp_path):
+    """``build_once`` builds into ``<path>.tmp.<pid>`` and renames it into
+    place; a clone built that way still resolves its source's files and
+    its own appended ones."""
+    from lakehouse_sfc_spark.sources.loader import build_once
+
+    df = spark.range(100).select(
+        F.col("id").alias("k"), (F.col("id") * 2).alias("v")
+    )
+    src = SnapshotTable.create(
+        df, str(tmp_path / "src"), stats_cols=["k"], num_files=2
+    )
+
+    def build(path: str) -> None:
+        src.clone_to(path).append(
+            spark.range(5).select(
+                (F.col("id") + 1000).alias("k"),
+                F.lit(0).cast("long").alias("v"),
+            )
+        )
+
+    clone = SnapshotTable(spark, build_once(str(tmp_path / "clone"), build))
+    assert clone.read(0).count() == 100
+    assert clone.read().count() == 105
+    src_dir = f"{tmp_path / 'src'}{os.sep}"
+    assert all(f.startswith(src_dir) for f in clone.manifest(0)["files"])
+    assert all(os.path.exists(f) for f in clone.manifest()["files"])
+
+
+def test_publish_never_replaces_a_committed_version(table):
+    """Two writers committing the same version: the second raises, the
+    first one's manifest stays byte-identical, and no temp file is left."""
+    from pyspark.sql.types import StructType
+
+    log = os.path.join(table.path, "_log")
+    final = os.path.join(log, "v00000.json")
+    with open(final, "rb") as fh:
+        before = fh.read()
+    m = table.manifest(0)
+    with pytest.raises(FileExistsError):
+        table._publish(
+            0, "CREATE", {}, StructType.fromJson(m["schema"]),
+            m["stats_cols"],
+        )
+    with open(final, "rb") as fh:
+        assert fh.read() == before
+    assert not [f for f in os.listdir(log) if f.endswith(".tmp")]
+    assert table.versions() == [0]
