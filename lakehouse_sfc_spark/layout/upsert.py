@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from lakehouse_sfc_spark.layout.writer import layout_write
+from lakehouse_sfc_spark.sources.loader import materialize_once
 
 
 def align_schema(batch: DataFrame, target: DataFrame) -> DataFrame:
@@ -236,15 +237,13 @@ def _ranged_batch_assignment(
     b = df.withColumn("__r", F.rand(seed)).withColumn(
         "__bk", F.floor(F.col("__r") * n_buckets).cast("int")
     )
-    b = b.repartition(n_buckets, "__bk")
     # Materialize the (__r, __bk) assignment ONCE: rand(seed) is only
     # deterministic for a fixed partitioning, and a prior shuffle / AQE
     # re-plan in `df` could make the write job recompute different values
     # than the counts job collected — silently breaking the exact ntile
-    # size contract.  localCheckpoint pins the evaluated partitions so both
-    # jobs read the same rows.  (On a real cluster with lossy executors,
-    # persist to reliable storage instead.)
-    b = b.localCheckpoint(eager=False)
+    # size contract.  The checkpoint pins the evaluated partitions so both
+    # jobs read the same rows.
+    b = materialize_once(b.repartition(n_buckets, "__bk"))
     counts = {
         r["__bk"]: r["cnt"]
         for r in b.groupBy("__bk").agg(F.count(F.lit(1)).alias("cnt")).collect()

@@ -7,15 +7,17 @@ edge join + groupBy — then, once the graph has proven deep, (b) one
 label-lookup self-join compresses chains (label <- label(label)).  Path
 halving bounds the rounds at O(log diameter), so the 24-round cap covers
 diameter ~2^24; the loop exits early via a monotone checksum (sum(labels)
-strictly decreases until fixpoint).  ``localCheckpoint`` truncates lineage
-each round — at 100 TB this is the GraphX/GraphFrames dance with the
-standard log-round compression.
+strictly decreases until fixpoint).  ``materialize_once`` truncates
+lineage each round — at 100 TB this is the GraphX/GraphFrames dance with
+the standard log-round compression.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from lakehouse_sfc_spark.sources.loader import materialize_once
 
 
 def connected_components(
@@ -26,18 +28,16 @@ def connected_components(
     Returns (node, label).  Raises if ``max_rounds`` is exhausted — never
     returns partially propagated labels."""
     edges = edges.toDF("u", "v")
-    # eager=False everywhere in the loop: the checkpoint is materialized by
-    # the round's OWN checksum job (one Spark job per round, not two); the
-    # plan barrier (fresh LogicalRDD, so self-joins get distinct attribute
-    # ids and lineage is truncated) is identical to the eager form.
-    edges = edges.union(
-        edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).localCheckpoint(eager=False)
-    labels = (
+    # Every checkpoint in the loop is materialized by the round's OWN
+    # checksum job (one Spark job per round, not two); the plan barrier
+    # (fresh LogicalRDD) gives self-joins distinct attribute ids.
+    edges = materialize_once(
+        edges.union(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
+    )
+    labels = materialize_once(
         edges.select(F.col("u").alias("node"))
         .distinct()
         .withColumn("label", F.col("node"))
-        .localCheckpoint(eager=False)
     )
     prev_sum = labels.agg(F.sum("label")).collect()[0][0]
     converged = False
@@ -45,14 +45,13 @@ def connected_components(
         neigh = edges.join(
             labels, edges["u"] == labels["node"], "inner"
         ).select(F.col("v").alias("node"), "label")
-        propagated = (
+        # checkpoint BEFORE any self-join: fresh attribute ids per side
+        # (Catalyst's union-constraint rewrite trips over a self-join
+        # of the un-materialized union lineage)
+        propagated = materialize_once(
             labels.union(neigh)
             .groupBy("node")
             .agg(F.min("label").alias("label"))
-            # checkpoint BEFORE any self-join: fresh attribute ids per side
-            # (Catalyst's union-constraint rewrite trips over a self-join
-            # of the un-materialized union lineage)
-            .localCheckpoint(eager=False)
         )
         if rnd < warmup_rounds:
             # shallow graphs (the near-dup norm) converge on propagation
@@ -66,10 +65,9 @@ def connected_components(
             # self-join is total; path halving makes remaining rounds
             # O(log diameter).
             lookup = propagated.toDF("lnode", "llabel")
-            labels = (
+            labels = materialize_once(
                 propagated.join(lookup, propagated["label"] == lookup["lnode"])
                 .select(propagated["node"], F.col("llabel").alias("label"))
-                .localCheckpoint(eager=False)
             )
         cur_sum = labels.agg(F.sum("label")).collect()[0][0]
         if cur_sum == prev_sum:

@@ -5,7 +5,7 @@ Shape (the same two-job pattern as layout/upsert._ranged_batch_assignment):
 1. ``repartitionByRange(order_col)`` — partitions are order-contiguous, so
    a global prefix sum decomposes into per-partition offsets + an
    in-partition running sum.
-2. ``localCheckpoint`` pins the partitioning: the offsets job and the
+2. ``materialize_once`` pins the partitioning: the offsets job and the
    consuming job must see identical partitions (range boundaries come from
    sampling, so re-evaluation could shift rows between partitions).
 3. Per-partition totals -> driver (one row per partition, not data) ->
@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from lakehouse_sfc_spark.sources.loader import compute_width, materialize_once
+
 
 def exclusive_prefix_sum(
     df: DataFrame,
@@ -35,13 +37,10 @@ def exclusive_prefix_sum(
     a unique key).  Fully distributed: no single-partition exchange."""
     spark = df.sparkSession
     if num_partitions is None:
-        from lakehouse_sfc_spark.sources.loader import compute_width
-
         num_partitions = compute_width(spark)
-    b = (
+    b = materialize_once(
         df.repartitionByRange(num_partitions, F.col(order_col))
         .withColumn("__pid", F.spark_partition_id())
-        .localCheckpoint(eager=False)
     )
     totals = {
         r["__pid"]: r["t"]

@@ -30,7 +30,7 @@ import hashlib
 from pyspark.sql import DataFrame, SparkSession
 
 from lakehouse_sfc_spark.queries.registry import register
-from lakehouse_sfc_spark.sources.loader import load_table
+from lakehouse_sfc_spark.sources.loader import load_table, materialize_once
 
 #: fixed advisory workload: 10 queries exercising every predicate class
 #: (eq/in/range/like/null), OR-halving, joins, and 5 tables — the
@@ -366,7 +366,7 @@ def advisor_table_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: whole pool derivation re-run once per combos/members/cps reference —
 #: measured 514 s at sf1 vs seconds with the hints.  Spark never parses
 #: this text (it has no MATERIALIZED syntax); its two-step path
-#: localCheckpoints the pool instead.
+#: materializes the pool once instead.
 _COMBO_SQL_ORACLE = (
     _COMBO_SQL
     .replace("listats AS (", "listats AS MATERIALIZED (")
@@ -403,15 +403,13 @@ def advisor_column_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Spark inlines deterministic multi-referenced CTEs, so running the
     # monolithic oracle text would re-derive the pool (and re-scan
     # lineitem) once per combos/members/cps reference.  Materialize the
-    # <=12-row pool ONCE (localCheckpoint) and let the combo body read it
-    # as a view; the oracle keeps the monolith (DuckDB reuses CTEs).
+    # <=12-row pool ONCE and let the combo body read it as a view; the
+    # oracle keeps the monolith (DuckDB reuses CTEs).
     pool_sql = (
         _COMBO_SQL.split("combos AS (", 1)[0].rstrip().rstrip(",")
         + "\nSELECT * FROM pool"
     )
-    pool = spark.sql(
-        pool_sql.format(EV=ev, LI="_adv_li")
-    ).localCheckpoint(eager=False)
+    pool = materialize_once(spark.sql(pool_sql.format(EV=ev, LI="_adv_li")))
     pool.createOrReplaceTempView("_adv_pool")
     body = (
         "WITH ev AS (SELECT * FROM _adv_ev),\n"

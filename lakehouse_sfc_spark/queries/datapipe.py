@@ -406,32 +406,6 @@ def _hashed_jaccard_survivors(
     )
 
 
-def _mh_signatures(ngr, barrier: bool = True):
-    """MinHash(64) signature relation (doc_id, mh: array<long>) folded in
-    one aggregate pass — each n-gram is md5-hashed exactly once, the 64
-    affine permutations are integer maps inside a single traversal.  The
-    repartition is a deliberate projection barrier (see dedup_minhash_lsh);
-    callers that place their own barrier (a localCheckpoint) pass
-    ``barrier=False`` and save the shuffle."""
-    coef = F.array(
-        *[
-            F.struct(
-                F.lit(a).cast("long").alias("a"), F.lit(b).cast("long").alias("b")
-            )
-            for a, b in _MH_COEF
-        ]
-    )
-    mh_expr = F.aggregate(
-        F.transform(F.col("ng"), lambda g: _h32(g) % F.lit(_MH_P)),
-        F.array_repeat(F.lit(_MH_P).cast("long"), _MH_K),
-        lambda acc, h: F.zip_with(
-            acc, coef, lambda m, c: F.least(m, (h * c["a"] + c["b"]) % F.lit(_MH_P))
-        ),
-    )
-    out = ngr.select("doc_id", mh_expr.alias("mh"))
-    return out.repartition("doc_id") if barrier else out
-
-
 def _mh_arrow_kernel(batches):
     """Arrow/NumPy twin of the JVM signature fold (guide §4.2): Spark's
     higher-order-function lambdas run INTERPRETED (no codegen), so the
@@ -483,8 +457,8 @@ def _mh_signatures_arrow(ngr):
     """MinHash(64) signatures via the vectorized kernel: the base gram hash
     (one md5 per n-gram) stays in the JVM, only (doc_id, hg) crosses the
     Arrow boundary (columns the kernel needs and nothing else — guide
-    §4.1), and the 64 affine permutations + min run in NumPy.  Same
-    (doc_id, mh) relation as ``_mh_signatures``, bit-identical."""
+    §4.1), and the 64 affine permutations + min run in NumPy.  Bit-identical
+    to the JVM fold kept in tests/test_dedup_minhash_kernel.py."""
     hg = ngr.select(
         "doc_id",
         F.transform(F.col("ng"), lambda g: _h32(g) % F.lit(_MH_P)).alias("hg"),
@@ -688,7 +662,7 @@ def _py_l2(a, b):
 
 def _band_explode(mh):
     """(doc_id, mh) -> 16 banded (doc_id, band, sig) rows.  ``mh`` must sit
-    behind a projection barrier (repartition or localCheckpoint) or
+    behind a projection barrier (repartition or materialize_once) or
     CollapseProject inlines the signature fold into each of the 16 slices."""
     return mh.select(
         "doc_id",
@@ -778,14 +752,14 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``(a_i*h + b_i) mod p`` folded in a single ``F.aggregate`` pass, so the
     signature is O(|ngrams| * K) integer ops, not K md5 passes.  The n-gram
     relation and the signature relation are each materialized ONCE per run
-    via ``localCheckpoint(eager=False)``: the band self-join and the two
+    via ``materialize_once``: the band self-join and the two
     verify joins otherwise re-derive the tokenize + n-gram + 64-permutation
     subtree per side (4 scans / 4 tokenizations / 2 signature folds in the
     static plan — exchange reuse cannot dedup a broadcast side against a
     shuffle side).  The checkpoint doubles as the projection barrier that
     keeps CollapseProject from inlining the signature fold into each of the
-    16 band slices (16x the work), so the intra-signature ``repartition``
-    barrier is skipped (``barrier=False``) — one less shuffle.  Measured at
+    16 band slices (16x the work), so no ``repartition`` barrier is
+    needed — one less shuffle.  Measured at
     sf0.1/local[32], noop sink: 2.63 s -> 1.76 s median, byte-identical
     output (guide §2.4 remove shuffles, §1.4 noop measurement)."""
     ngr = materialize_once(_docs_ngrams(spark, sf_dir))
@@ -855,13 +829,12 @@ def dedup_minhash_estimate_error(
     gram drop, oracle-mirrored) + two-phase hashed verify (candidate-
     bounded, never all-pairs); signatures are one aggregate pass over the
     exploded grams; the error join touches pair rows only."""
-    ngr = (
+    ngr = materialize_once(
         _docs_ngrams(spark, sf_dir)
         .withColumn(
             "hg", F.array_distinct(F.transform("ng", lambda g: F.xxhash64(g)))
         )
         .repartition("doc_id")
-        .localCheckpoint(eager=False)
     )
     cand = _prefix_candidates(ngr, _MH_TAU, symmetric=True)
     surv = _hashed_jaccard_survivors(ngr, cand, _MH_TAU)
@@ -1058,8 +1031,9 @@ def dedup_saturation_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the inlined n-gram expression to the narrow pre-repartition side of
     # the plan (single task, per-row re-derivation — guide §2.4/§7.2).
     ngr = materialize_once(_docs_ngrams(spark, sf_dir))
-    e = ngr.select("doc_id", F.explode("ng").alias("gr")).repartition("gr")
-    e = e.localCheckpoint(eager=False)  # census + per-doc both consume it
+    e = materialize_once(  # census + per-doc both consume it
+        ngr.select("doc_id", F.explode("ng").alias("gr")).repartition("gr")
+    )
     dfq = e.groupBy("gr").agg(F.count(F.lit(1)).alias("df"))
     gram_stats = dfq.agg(
         F.count(F.lit(1)).alias("n_grams"),
@@ -1150,11 +1124,11 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     see the constant's note.  The occupancy count rides the SAME hash
     partitioning the self-join needs (window count over the join key), so
     the cap adds no exchange."""
-    # localCheckpoint: the band self-join below otherwise re-runs the
+    # materialized once: the band self-join below otherwise re-runs the
     # tokenize + kernel stage once per side (guide §2.4)
-    sh = _simhash_relation(
-        load_table(spark, sf_dir, "documents")
-    ).localCheckpoint(eager=False)
+    sh = materialize_once(
+        _simhash_relation(load_table(spark, sf_dir, "documents"))
+    )
 
     bands = sh.select(
         "doc_id",
@@ -1227,7 +1201,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     Exchange discipline: the n-gram relation feeds FOUR consumers (document
     frequencies, the ranked index, and both verification sides), and the
     token relation two — without barriers each consumer would recompute the
-    regex/3-gram pipeline from the scan.  ``localCheckpoint`` materializes
+    regex/3-gram pipeline from the scan.  ``materialize_once`` materializes
     the n-gram relation exactly once (ReuseExchange only dedupes identical
     sibling subtrees within one stage graph, not across all four consumer
     paths), and partitioning the exploded tokens by ``g`` means the
@@ -1238,13 +1212,12 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     Verification is two-phase (_hashed_jaccard_survivors): candidates are
     filtered on hashed gram arrays first, then the survivors — ≈ the true
     pairs — re-verify on the exact string grams."""
-    ngr = (
+    ngr = materialize_once(
         _docs_ngrams(spark, sf_dir)
         .withColumn(
             "hg", F.array_distinct(F.transform("ng", lambda g: F.xxhash64(g)))
         )
         .repartition("doc_id")
-        .localCheckpoint(eager=False)
     )
     cand = _prefix_candidates(ngr, _NJ_TAU, symmetric=True)
     surv = _hashed_jaccard_survivors(ngr, cand, _NJ_TAU)
@@ -1729,7 +1702,7 @@ def ann_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     this declarative twin is the oracle-matched correctness contract.
 
     Round 12: the valid-vector relation is width-repartitioned and
-    localCheckpointed — it feeds SIX consumers (K sizing, seeds, both
+    materialized once — it feeds SIX consumers (K sizing, seeds, both
     Lloyd assignment passes, the query row, the final scan) which each
     re-derived the scan + norm filter, and the interpreted L2 folds ran
     at the narrow scan width (guide §2.4/§2).  Noop median at sf0.01:
@@ -1882,7 +1855,7 @@ def sample_kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
     so there is NO driver collect) plus one global argmax aggregate —
     k·O(n) total work, the canonical distributed farthest-point shape.
     Lineage is checkpoint-truncated per round."""
-    c = (
+    c = materialize_once(
         load_table(spark, sf_dir, "embeddings")
         # NULL embeddings have no position in the metric space (a NULL
         # distance would also make the argmax NULL-placement-dependent,
@@ -1892,7 +1865,6 @@ def sample_kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "vec_id", F.col("embedding").cast("array<double>").alias("emb")
         )
-        .localCheckpoint(eager=False)
     )
 
     def d2(a, b):
@@ -1903,9 +1875,11 @@ def sample_kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     c0 = c.filter(F.col("vec_id") == 0).select(F.col("emb").alias("cemb"))
-    r = c.crossJoin(F.broadcast(c0)).select(
-        "vec_id", "emb", d2(F.col("emb"), F.col("cemb")).alias("md")
-    ).localCheckpoint(eager=False)
+    r = materialize_once(
+        c.crossJoin(F.broadcast(c0)).select(
+            "vec_id", "emb", d2(F.col("emb"), F.col("cemb")).alias("md")
+        )
+    )
     rows = [
         spark.range(1).select(
             F.lit(0).alias("sel_round"),
@@ -1914,19 +1888,21 @@ def sample_kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     ]
     for rnd in range(1, _KC_K):
-        s = r.agg(
-            F.max(
-                F.struct(
-                    F.col("md").alias("score"),
-                    (-F.col("vec_id")).alias("neg_id"),
-                    F.col("emb").alias("cemb"),
-                )
-            ).alias("best")
-        ).select(
-            (-F.col("best.neg_id")).alias("cid"),
-            F.col("best.score").alias("rad"),
-            F.col("best.cemb").alias("cemb"),
-        ).localCheckpoint(eager=False)
+        s = materialize_once(
+            r.agg(
+                F.max(
+                    F.struct(
+                        F.col("md").alias("score"),
+                        (-F.col("vec_id")).alias("neg_id"),
+                        F.col("emb").alias("cemb"),
+                    )
+                ).alias("best")
+            ).select(
+                (-F.col("best.neg_id")).alias("cid"),
+                F.col("best.score").alias("rad"),
+                F.col("best.cemb").alias("cemb"),
+            )
+        )
         rows.append(
             s.select(
                 F.lit(rnd).alias("sel_round"),
@@ -1934,7 +1910,7 @@ def sample_kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("rad").alias("radius2"),
             )
         )
-        r = (
+        r = materialize_once(
             r.crossJoin(F.broadcast(s.select("cemb")))
             .select(
                 "vec_id",
@@ -1943,7 +1919,6 @@ def sample_kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.col("md"), d2(F.col("emb"), F.col("cemb"))
                 ).alias("md"),
             )
-            .localCheckpoint(eager=False)
         )
     out = rows[0]
     for df in rows[1:]:
@@ -2114,7 +2089,7 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the 24-round cap handles components of diameter ~16M — effectively
     any real graph — and the loop still exits early on the monotone
     checksum (sum(labels) strictly decreases until fixpoint).
-    `localCheckpoint` truncates the growing lineage each round; at 100 TB
+    `materialize_once` truncates the growing lineage each round; at 100 TB
     this is the GraphX/GraphFrames dance with the standard log-round
     compression.  The oracle is a DuckDB recursive CTE computing min
     reachable label over the same exact pair graph.  The label relation is
@@ -2300,7 +2275,7 @@ def dedup_embedding_topk(
 
     Round-12 shape (guide §2.3 "shuffle keys and metadata instead of
     payloads", §2 parallelism): the valid-vector relation is repartitioned
-    to full width and localCheckpointed — the single-row-group scan
+    to full width and materialized once — the single-row-group scan
     otherwise ran the whole interpreted cosine fold on ONE task, and the
     count()/probe/candidate sides re-parsed the scan each — and the probe
     explosion carries only (a_id, pcell) 16-byte rows instead of hauling
@@ -2646,7 +2621,7 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     exhaustive cross-side comparison was not).
 
     Like ``dedup_minhash_lsh``, the n-gram and signature relations are
-    localCheckpointed so the batch/corpus band split and both verify joins
+    materialized once so the batch/corpus band split and both verify joins
     read one materialization instead of re-deriving the tokenize + n-gram +
     signature subtree per side (guide §2.4)."""
     ngr = materialize_once(_docs_ngrams(spark, sf_dir))
@@ -3001,7 +2976,7 @@ def text_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     width = compute_width(spark)
     if d.rdd.getNumPartitions() < width:
         d = d.repartition(width)  # heavy shingle projection at full width
-    # localCheckpoint is load-bearing, not a cache nicety: the shingle
+    # The checkpoint is load-bearing, not a cache nicety: the shingle
     # expression is a higher-order function (CodegenFallback), and a
     # consumer that references `ng` more than once (size + explode here)
     # re-evaluates the whole tokenize+shingle tree per reference in
@@ -3009,10 +2984,9 @@ def text_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the 2×-consumed relation is the right call at 100 TB too.
     # tokens materialized in their own projection: inlining _tokens into
     # _ngrams re-splits the text per array element (O(tokens²) per doc)
-    g = (
+    g = materialize_once(
         d.select("doc_id", _tokens(F.col("text")).alias("w"))
         .select("doc_id", _ngrams(F.col("w"), _DECON_K).alias("ng"))
-        .localCheckpoint(eager=False)
     )
     mod = F.col("doc_id") % _DECON_MOD
     bench = (
@@ -3197,13 +3171,12 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     ordered by the EXACT integer intersection size then b_id —
     deterministic, no float ties), bounding output at n·k rows while
     candidate generation stays the sound rarest-gram prefix filter."""
-    ngr = (
+    ngr = materialize_once(
         _docs_ngrams(spark, sf_dir)
         .withColumn(
             "hg", F.array_distinct(F.transform("ng", lambda g: F.xxhash64(g)))
         )
         .repartition("doc_id")
-        .localCheckpoint(eager=False)
     )
     cand = _prefix_candidates(ngr, _CT_TAU, symmetric=False)
     # Two-phase verify: candidate pairs carry two ~3 KB string-gram arrays
@@ -3359,10 +3332,9 @@ def dedup_edit_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: candidates from the banded prefix filter (never
     all-pairs); the O(|a|·|b|) edit-distance kernel runs only on verified
     gram-similar pairs, exactly where a production fuzzy-dedup spends it."""
-    ngr = (
+    ngr = materialize_once(
         _docs_ngrams(spark, sf_dir)
         .repartition("doc_id")
-        .localCheckpoint(eager=False)
     )
     cand = _prefix_candidates(ngr, _ED_TAU, symmetric=True)
     jac = _pair_jaccard()
@@ -3453,11 +3425,10 @@ def dedup_substring_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda i: F.array_join(F.slice(wa, i, _SW_W), " "),
         )
     )
-    e = (
+    e = materialize_once(
         pruned.select("doc_id", "source", _tokens(F.col("text")).alias("w"))
         .select("doc_id", "source", F.explode(wins).alias("win"))
         .repartition("win")
-        .localCheckpoint(eager=False)
     )
     dfc = e.groupBy("win").agg(F.count(F.lit(1)).alias("dfc"))
     return (
@@ -3588,12 +3559,11 @@ def emb_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     global sort; the classic distributed-matvec PCA (3 passes at 100 TB,
     or one pass with block-accumulated A^T A if 64x64 fits, which it
     does)."""
-    c = (
+    c = materialize_once(
         load_table(spark, sf_dir, "embeddings")
         .select(
             "vec_id", F.col("embedding").cast("array<double>").alias("emb")
         )
-        .localCheckpoint(eager=False)
     )
     x = c.select(
         "vec_id", F.posexplode("emb").alias("j0", "val")
@@ -3617,12 +3587,14 @@ def emb_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("u")
             )
         )
-        v = u.agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("j", "u"))),
-                lambda st: st["u"],
-            ).alias("v")
-        ).localCheckpoint(eager=False)
+        v = materialize_once(
+            u.agg(
+                F.transform(
+                    F.array_sort(F.collect_list(F.struct("j", "u"))),
+                    lambda st: st["u"],
+                ).alias("v")
+            )
+        )
         return u, v
 
     vdf = spark.range(1).select(
@@ -3698,12 +3670,11 @@ def emb_pca_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the direction is the PCA chain's 1-row broadcast; the
     per-row pass is map-only; the reduction is one aggregate."""
-    c = (
+    c = materialize_once(
         load_table(spark, sf_dir, "embeddings")
         .select(
             "vec_id", F.col("embedding").cast("array<double>").alias("emb")
         )
-        .localCheckpoint(eager=False)
     )
     loadings = emb_pca_power(spark, sf_dir)
     vhat = loadings.agg(
@@ -3934,9 +3905,7 @@ def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB the scored relation is a broadcast of the query sample against
     the corpus-sample partitions — one map-side pass, one top-k window."""
     emb = _emb(spark, sf_dir)
-    corpus = emb.filter(F.col("vec_id") % _RE_CMOD == 0).localCheckpoint(
-        eager=False
-    )
+    corpus = materialize_once(emb.filter(F.col("vec_id") % _RE_CMOD == 0))
     bits = _detk_bits(corpus.count())
     cc = corpus.withColumn("cell", _cell_bits(F.col("emb"), bits))
     q = (
@@ -3953,12 +3922,11 @@ def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     hd = F.bit_count(
         F.col("cell").cast("long").bitwiseXOR(F.col("qcell").cast("long"))
     )
-    scored = (
+    scored = materialize_once(
         cc.join(F.broadcast(q), F.col("vec_id") != F.col("q_id"))
         .select(
             "q_id", "vec_id", cos.alias("s"), hd.alias("hd")
         )
-        .localCheckpoint(eager=False)
     )
     w = Window.partitionBy("q_id").orderBy(F.desc("s"), "vec_id")
     gt = (
@@ -4077,7 +4045,7 @@ def sample_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # tokens materialized first: inlining _tokens into _ngrams3 re-splits
     # the text per array element (O(tokens²) per doc)
-    ngr = (
+    ngr = materialize_once(
         d.select(
             "doc_id", _tokens(F.col("text")).alias("w"), split.alias("split")
         )
@@ -4086,7 +4054,6 @@ def sample_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
             "hg", F.array_distinct(F.transform("ng", lambda g: F.xxhash64(g)))
         )
         .repartition("doc_id")
-        .localCheckpoint(eager=False)
     )
 
     cand = _prefix_candidates(ngr, _LK_TAU, symmetric=True)
@@ -5274,9 +5241,7 @@ def ann_ivf_recall_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     sweep adds top-k windows, never re-scores; at 100 TB each radius is
     one filter + window over the same materialization."""
     emb = _emb(spark, sf_dir)
-    corpus = emb.filter(F.col("vec_id") % _RE_CMOD == 0).localCheckpoint(
-        eager=False
-    )
+    corpus = materialize_once(emb.filter(F.col("vec_id") % _RE_CMOD == 0))
     bits = _detk_bits(corpus.count())
     cc = corpus.withColumn("cell", _cell_bits(F.col("emb"), bits))
     q = (
@@ -5293,17 +5258,15 @@ def ann_ivf_recall_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     hd = F.bit_count(
         F.col("cell").cast("long").bitwiseXOR(F.col("qcell").cast("long"))
     )
-    scored = (
+    scored = materialize_once(
         cc.join(F.broadcast(q), F.col("vec_id") != F.col("q_id"))
         .select("q_id", "vec_id", cos.alias("s"), hd.alias("hd"))
-        .localCheckpoint(eager=False)
     )
     w = Window.partitionBy("q_id").orderBy(F.desc("s"), "vec_id")
-    gt = (
+    gt = materialize_once(
         scored.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= _RE_K)
         .select("q_id", "vec_id")
-        .localCheckpoint(eager=False)
     )
     n_queries = q.agg(F.count(F.lit(1)).alias("n_queries"))
     rows = []
@@ -5460,7 +5423,7 @@ def emb_matryoshka_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n32").alias("qn32"),
         F.col("n64").alias("qn64"),
     )
-    scored = (
+    scored = materialize_once(
         corpus.join(F.broadcast(q), F.col("vec_id") != F.col("q_id"))
         .select(
             "q_id",
@@ -5472,21 +5435,21 @@ def emb_matryoshka_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             (_dot(F.col("emb"), F.col("qe"))
              / (F.col("n64") * F.col("qn64"))).alias("s64"),
         )
-        .localCheckpoint(eager=False)
     )
     w64 = Window.partitionBy("q_id").orderBy(F.desc("s64"), "vec_id")
-    gt = (
+    gt = materialize_once(
         scored.withColumn("rn", F.row_number().over(w64))
         .filter(F.col("rn") <= _MRL_K)
         .select("q_id", "vec_id")
-        .localCheckpoint(eager=False)
     )
-    gt1 = gt.join(
-        scored.withColumn("rn", F.row_number().over(w64))
-        .filter(F.col("rn") == 1)
-        .select("q_id", F.col("vec_id").alias("g1")),
-        "q_id",
-    ).select("q_id", "vec_id", "g1").localCheckpoint(eager=False)
+    gt1 = materialize_once(
+        gt.join(
+            scored.withColumn("rn", F.row_number().over(w64))
+            .filter(F.col("rn") == 1)
+            .select("q_id", F.col("vec_id").alias("g1")),
+            "q_id",
+        ).select("q_id", "vec_id", "g1")
+    )
     n_queries = (
         scored.select("q_id").distinct().agg(
             F.count(F.lit(1)).alias("n_queries")
@@ -5608,7 +5571,7 @@ def ann_pq_distortion_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (vec_id, s, e) relation — the same rewrite ann_pq_topk got in r11
     # (~20 tiny stages -> ~6; the oracle is unchanged and the per-subspace
     # arithmetic is identical because every aggregate now just carries the
-    # s key).  The relation is localCheckpointed: both assignment passes
+    # s key).  The relation is materialized once: both assignment passes
     # consume it (guide §2.4).
     # Round 13 (r12 verdict task 2): both assignment passes run in
     # ``_nearest_centroid_kernel`` over driver-collected codebooks — one

@@ -109,12 +109,13 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(sqrt(|E|)) and is the same plan shape with one extra tiny join
     against the degree table."""
     # hash-cluster the edge list on p1 ONCE (core-count width, not the
-    # session's shuffle width) and materialize: the wedge self-join e1⋈e2
-    # is then co-partitioned — zero exchanges — and every other consumer
-    # reuses the layout.  materialize_once (r13) instead of .cache(): the
-    # checkpoint blocks are released by the ContextCleaner when the frame
-    # is garbage-collected, where .cache() leaked until the caller's
-    # clearCache() (r12 verdict item 4); partitioning survives either way.
+    # session's shuffle width) and materialize it for every consumer.  A
+    # checkpoint rather than a cached frame: its blocks are released by the
+    # ContextCleaner when the frame is garbage-collected, where a cached
+    # frame leaked until the caller's clearCache().  The checkpoint does not
+    # carry the p1 partitioning forward (its scan reports
+    # UnknownPartitioning), so a shuffled wedge self-join exchanges both
+    # sides; at sf0.01 AQE broadcasts them instead.
     edges = materialize_once(
         _edges(spark, sf_dir).repartition(compute_width(spark), "p1")
     )
@@ -216,7 +217,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph: edge cust-nation -> supp-nation iff any order shipped between
     them.  The expensive, data-sized stage is EDGE EXTRACTION — a
     lineitem⋈orders⋈customer⋈supplier pipeline (dims broadcast, one fact
-    shuffle) reduced to ≤ 25×24 distinct pairs and localCheckpointed so
+    shuffle) reduced to ≤ 25×24 distinct pairs and materialized once so
     the 3 unrolled iterations never rescan the fact table.  Iterations
     then run on the reduced graph (the standard big-graph split: heavy
     extract once, iterate on vertices/edges only — same discipline as
@@ -235,7 +236,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
     nation = load_table(spark, sf_dir, "nation")
 
-    edges = (
+    edges = materialize_once(
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(F.broadcast(c), o.o_custkey == c.c_custkey)
         .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
@@ -244,7 +245,6 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             c.c_nationkey.alias("src"), s.s_nationkey.alias("dst")
         )
         .distinct()
-        .localCheckpoint(eager=False)
     )
     nodes = nation.select(F.col("n_nationkey").alias("node"))
     outd = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
@@ -527,15 +527,18 @@ def graph_common_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
        spilling partial maps: shuffling the 93M longs measures 2.5 s)."""
     e = _edges_recent(spark, sf_dir)
     width = compute_width(spark)
-    und = (
+    und = materialize_once(
         e.select(F.col("p1").alias("s"), F.col("p2").alias("d"))
         .unionAll(e.select(F.col("p2").alias("s"), F.col("p1").alias("d")))
         .repartition(width, "s")
-        .cache()
     )
-    deg = und.groupBy("s").agg(F.count(F.lit(1)).alias("dg"))
-    # Exact wedge volume + edge count from the |V|-sized degree relation:
-    # ONE tiny scalar job over the cached edge list, never the fact table.
+    # A checkpoint does not carry the hash partitioning forward, so the
+    # |V|-sized degree relation is materialized too: its four consumers
+    # (probe, centers, both degree joins) would each re-shuffle it.
+    deg = materialize_once(und.groupBy("s").agg(F.count(F.lit(1)).alias("dg")))
+    # Exact wedge volume + edge count from the degree relation: ONE tiny
+    # scalar job that also materializes the edge list and the degrees,
+    # never the fact table.
     # NOTE this makes plan CONSTRUCTION eager (a Spark job runs inside this
     # builder) — deliberate, because both the agg partitioning and the
     # anti-join strategy are physical-plan decisions that need the numbers
@@ -720,7 +723,7 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: per round ONE degree aggregation (hash shuffle on the
     vertex key) + two semi-joins of the edge list against the |V|-sized
     survivor set (broadcast here; at labels-too-big scale both joins
-    re-use the edge list's vertex-key partitioning).  localCheckpoint per
+    re-use the edge list's vertex-key partitioning).  materialize_once per
     round keeps the unrolled lineage flat."""
     e = _edges(spark, sf_dir)
     und = e.select(F.col("p1").alias("s"), F.col("p2").alias("d")).unionAll(
@@ -732,12 +735,11 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         # semi-joins) — materialize the |V|-sized survivor set once, or each
         # consumer re-aggregates the 2|E|-row und relation (measured: the
         # redundant 24M-row aggs tripled sf1 latency)
-        keep = (
+        keep = materialize_once(
             und.groupBy("s")
             .agg(F.count(F.lit(1)).alias("dg"))
             .filter(F.col("dg") >= _KCORE_K)
             .select("s")
-            .localCheckpoint(eager=False)
         )
         und = (
             und.join(F.broadcast(keep), "s", "left_semi")
@@ -828,10 +830,9 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     every round reuses it (the pointer-doubling alternative for huge
     diameters lives in dedup_components)."""
     e = _edges(spark, sf_dir)
-    und = (
+    und = materialize_once(
         e.select(F.col("p1").alias("s"), F.col("p2").alias("d"))
         .union(e.select(F.col("p2").alias("s"), F.col("p1").alias("d")))
-        .localCheckpoint(eager=False)
     )
     lbl = und.select(F.col("s").alias("v")).distinct().select(
         "v", F.col("v").alias("lbl")
@@ -847,10 +848,9 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("s")
             .agg(F.min("nl").alias("nmin"))
         )
-        lbl = (
+        lbl = materialize_once(
             lbl.join(nmin.select(F.col("s").alias("v"), "nmin"), "v")
             .select("v", F.least("lbl", "nmin").alias("lbl"))
-            .localCheckpoint(eager=False)
         )
     return (
         lbl.groupBy("lbl")
@@ -924,18 +924,16 @@ def graph_bfs_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioning is reused every round), one distinct, and one anti-join
     against the reached set.  Work per round is proportional to the
     frontier's incident edges — the textbook level-synchronous BFS cost —
-    and the unrolled lineage is cut per round (localCheckpoint, lazy)."""
+    and the unrolled lineage is cut per round (materialize_once)."""
     e = _edges(spark, sf_dir)
-    und = (
+    und = materialize_once(
         e.select(F.col("p1").alias("s"), F.col("p2").alias("d"))
         .unionAll(e.select(F.col("p2").alias("s"), F.col("p1").alias("d")))
-        .localCheckpoint(eager=False)
     )
-    frontier = (
+    frontier = materialize_once(
         und.filter(F.col("s") % _BFS_SEED_MOD == 0)
         .select(F.col("s").alias("v"))
         .distinct()
-        .localCheckpoint(eager=False)
     )
     reached = frontier
     rows = []
@@ -949,12 +947,8 @@ def graph_bfs_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(F.col("d").alias("v"))
             .distinct()
         )
-        frontier = nbrs.join(reached, "v", "left_anti").localCheckpoint(
-            eager=False
-        )
-        reached = (
-            reached.unionAll(frontier).localCheckpoint(eager=False)
-        )
+        frontier = materialize_once(nbrs.join(reached, "v", "left_anti"))
+        reached = materialize_once(reached.unionAll(frontier))
         stats = frontier.agg(
             F.lit(k).alias("round"),
             F.count(F.lit(1)).alias("frontier_size"),
@@ -1024,10 +1018,9 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     and ONE global 6-sum aggregate — map-side combinable, no window, no
     sort."""
     e = _edges(spark, sf_dir)
-    und = (
+    und = materialize_once(
         e.select(F.col("p1").alias("s"), F.col("p2").alias("d"))
         .unionAll(e.select(F.col("p2").alias("s"), F.col("p1").alias("d")))
-        .localCheckpoint(eager=False)
     )
     deg = und.groupBy("s").agg(F.count(F.lit(1)).alias("dg"))
     ed = (

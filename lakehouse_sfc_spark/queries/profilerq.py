@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lakehouse_sfc_spark.queries.registry import register
-from lakehouse_sfc_spark.sources.loader import load_table
+from lakehouse_sfc_spark.sources.loader import load_table, materialize_once
 
 _NUM_COLS = ("l_quantity", "l_extendedprice", "l_discount", "l_tax")
 
@@ -584,7 +584,7 @@ def profile_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     offsets from one count pass), no global sort."""
     from pyspark.sql import Window
 
-    o = (
+    o = materialize_once(
         load_table(spark, sf_dir, "orders")
         .filter(F.col("o_orderkey").isNotNull())
         .select(
@@ -593,7 +593,6 @@ def profile_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.row_number().over(Window.orderBy("o_orderkey")) - 1
             ).alias("rk"),
         )
-        .localCheckpoint(eager=False)
     )
     n = o.count()
     d = (

@@ -911,7 +911,7 @@ def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     it is deliberately replaced by the monotone linear idf.
 
     Scale shape (round 12, guide §2.3/§2.4): the tokenized corpus is
-    materialized ONCE (repartition to width + localCheckpoint — the
+    materialized ONCE (repartition to width + materialize_once — the
     single-row-group scan otherwise tokenizes on one task, three times:
     dl, corpus and tf each re-derived the explode).  Per-doc length is
     ``size()`` on the token array — no explode and no full-corpus shuffle
@@ -2055,12 +2055,11 @@ def text_token_df_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     width = compute_width(spark)
     if pruned.rdd.getNumPartitions() < width:
         pruned = pruned.repartition(width)
-    occ = (
+    occ = materialize_once(
         pruned.select(
             "doc_id", "source", F.explode(_tokens(F.col("text"))).alias("tok")
         )
         .repartition("tok")
-        .localCheckpoint(eager=False)
     )
     dfc = occ.groupBy("tok").agg(F.count_distinct("doc_id").alias("dfc"))
     per_doc = (
@@ -2750,13 +2749,12 @@ def text_window_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").filter(
         F.col("text").isNotNull() & F.col("doc_id").isNotNull()
     )
-    t = (
+    t = materialize_once(
         d.select(
             "doc_id",
             F.posexplode(_tokens(F.col("text"))).alias("pos", "w"),
         )
         .filter(F.length("w") >= 3)
-        .localCheckpoint(eager=False)
     )
     a, b = t.alias("a"), t.alias("b")
     p = (

@@ -503,32 +503,35 @@ def compute_width(spark) -> int:
 
 
 def materialize_once(df: DataFrame, width: int | None = None) -> DataFrame:
-    """THE checkpoint policy for shared subtrees (r12 verdict task 7 —
-    one owner for width / eagerness / storage / the scale caveat, replacing
-    ad-hoc ``localCheckpoint(eager=False)`` sites).
+    """Materialize ``df`` once for all its consumers.  This is the only
+    checkpoint call in the package, so the policy below is set here alone.
 
     Use when a relation feeds 2+ consumers that would otherwise each
     re-derive its whole subtree (exchange reuse cannot dedup a broadcast
-    side against a shuffle side), or as the projection barrier that stops
+    side against a shuffle side), as the projection barrier that stops
     CollapseProject from inlining an expensive projection into each
-    consumer.  ``width`` spreads a compute-heavy projection leaving a
-    narrow scan (pass ``compute_width(spark)``); omit it when the input
-    partitioning is already right.
+    consumer, or to cut an iterative loop's lineage each round.  ``width``
+    spreads a compute-heavy projection leaving a narrow scan (pass
+    ``compute_width(spark)``); omit it when the input partitioning is
+    already right.  A column-keyed ``repartition`` stays on ``df``.
 
-    Policy: ``eager=False`` — the first action materializes it, so a
-    ``count()`` that is needed anyway doubles as the materializer; default
-    storage level (MEMORY_AND_DISK on executor-local storage).
+    Policy: lazy — the first action materializes it, so a ``count()`` or
+    collect that is needed anyway doubles as the materializer and no extra
+    job runs.  A caller whose source disappears before the result is read
+    (a temp directory removed in ``finally``) runs one action on the result
+    first.  Storage is the default level (MEMORY_AND_DISK on
+    executor-local storage).  The result carries no hash partitioning (its
+    scan reports UnknownPartitioning), so a consumer grouping or joining on
+    the key of a ``repartition`` in front of it still exchanges.
 
-    100 TB caveat (ADVICE r12): localCheckpoint TRUNCATES LINEAGE — the
-    checkpointed partitions live on executor-local storage with NO
-    recompute fallback, so on a multi-executor cluster a lost executor
-    fails the query instead of recomputing, and the materialization is
-    O(relation) executor memory+disk (guide §5).  That is the right local
-    trade for a bench-scale shared subtree; a production pipeline sharing
-    a 100 TB relation should write+read an explicit intermediate (or a
-    replicated storage level) instead.  Iterative algorithms that
-    checkpoint per round to cut unrolled lineage (graph/components) share
-    the same caveat."""
+    Scale caveat: the checkpoint TRUNCATES LINEAGE.  Until the first action
+    completes, a failed task is retried from lineage like any other; after
+    it, the partitions live on executor-local storage with NO recompute
+    fallback, so on a multi-executor cluster a lost executor fails the
+    query instead of recomputing, and the materialization costs
+    O(relation) executor memory and disk.  There is no reliable mode
+    (``checkpoint()`` to a checkpoint directory) because no caller needs
+    one yet; when one does, it replaces this body."""
     if width:
         df = df.repartition(width)
     return df.localCheckpoint(eager=False)

@@ -31,6 +31,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from lakehouse_sfc_spark.sources.loader import materialize_once
+
 _EVENTS_SCHEMA = T.StructType(
     [
         T.StructField("event_id", T.LongType()),
@@ -648,17 +650,16 @@ def stream_upsert_ingest(
                 shutil.rmtree(checkpoint, ignore_errors=True)
 
         final = spark.read.parquet(tbl)
-        return (
-            final.groupBy("event_type")
-            .agg(
+        out = materialize_once(
+            final.groupBy("event_type").agg(
                 F.count(F.lit(1)).alias("cnt"),
                 F.sum(F.col("value").cast("decimal(18,4)"))
                 .cast("double")
                 .alias("sum_value"),
             )
-            # materialize before the temp table dir disappears
-            .localCheckpoint()
         )
+        out.count()  # materialize before the temp table dir disappears
+        return out
     finally:
         spark.conf.set("spark.sql.session.timeZone", _prev_tz)
         shutil.rmtree(work, ignore_errors=True)
@@ -1179,7 +1180,8 @@ def run_stream_decontaminate(
     name = f"decon_{uuid.uuid4().hex[:8]}"
     mod_col = F.col("doc_id") % mod
 
-    bench = (
+    # build the static side exactly once
+    bench = materialize_once(
         load_table(spark, sf_dir, "documents")
         .filter(F.size(_tokens(F.col("text"))) >= k)
         .filter(mod_col == 0)
@@ -1187,7 +1189,6 @@ def run_stream_decontaminate(
             F.col("doc_id").alias("b_id"),
             F.explode(_ngrams(_tokens(F.col("text")), k)).alias("s"),
         )
-        .localCheckpoint(eager=False)  # build the static side exactly once
     )
     from lakehouse_sfc_spark.sources.loader import compute_width
 
@@ -1316,7 +1317,7 @@ def stream_cdc_tombstones(
                 shutil.rmtree(checkpoint, ignore_errors=True)
 
         final = spark.read.parquet(tbl)
-        return (
+        out = materialize_once(
             final.filter(F.col("op") == "upsert")
             .select(
                 "user_id",
@@ -1324,9 +1325,9 @@ def stream_cdc_tombstones(
                 F.col("value").alias("last_value"),
             )
             .orderBy("user_id")
-            # materialize before the temp table dir disappears
-            .localCheckpoint()
         )
+        out.count()  # materialize before the temp table dir disappears
+        return out
     finally:
         spark.conf.set("spark.sql.session.timeZone", _prev_tz)
         shutil.rmtree(work, ignore_errors=True)
@@ -1393,7 +1394,7 @@ def run_late_drop(
                 F.col("chunk") + 2,
             ).otherwise(F.col("chunk")),
         )
-        f = f.localCheckpoint()  # one deterministic assignment, reused
+        f = materialize_once(f)  # one deterministic assignment, reused
         n_input = f.count()
         # ONE partitioned write instead of _LATE_FILES sequential
         # filter+coalesce jobs (each re-scanned the checkpoint; measured
@@ -1454,25 +1455,23 @@ def run_late_drop(
         # strictly monotone per update)
         sink = spark.table(name)
         wlast = Window.partitionBy("w").orderBy(F.desc("cnt"))
-        final = (
+        final = materialize_once(
             sink.withColumn("rn", F.row_number().over(wlast))
             .filter(F.col("rn") == 1)
-            .localCheckpoint()
         )
         kept = final.agg(F.sum("cnt")).collect()[0][0] or 0
         dropped = n_input - int(kept)
-        return (
-            final
-            .select(
+        out = materialize_once(
+            final.select(
                 # back to NTZ so the schema matches the batch/oracle side
                 F.col("w.start").cast("timestamp_ntz").alias("ws"),
                 "cnt",
                 "sum_value",
                 F.lit(int(dropped)).cast("bigint").alias("total_dropped"),
-            )
-            .orderBy("ws")
-            .localCheckpoint()  # materialize before src_dir disappears
+            ).orderBy("ws")
         )
+        out.count()  # materialize before src_dir disappears
+        return out
     finally:
         spark.conf.set("spark.sql.session.timeZone", _prev_tz)
         shutil.rmtree(work, ignore_errors=True)

@@ -66,6 +66,7 @@ from lakehouse_sfc_spark.layout.stats import (
 )
 from lakehouse_sfc_spark.layout.upsert import dedup_latest
 from lakehouse_sfc_spark.layout.writer import layout_write
+from lakehouse_sfc_spark.sources.loader import materialize_once
 from lakehouse_sfc_spark.table.pruning import Pred, prune_files
 
 _LOG_DIR = "_log"
@@ -330,9 +331,7 @@ class SnapshotTable:
             # materialize ONCE: _lineage_next collects max(_row_id) and
             # _stage then writes the same plan - without the checkpoint
             # every lineage-enabled commit computes its merge twice
-            df = cls._with_new_row_ids(df, lin, 0).localCheckpoint(
-                eager=False
-            )
+            df = materialize_once(cls._with_new_row_ids(df, lin, 0))
             extra = {
                 "lineage": {
                     "keys": lineage_keys,
@@ -354,9 +353,7 @@ class SnapshotTable:
         lin = parent.get("lineage")
         if lin:
             # checkpoint: _lineage_next + _stage both consume this plan
-            df = self._with_new_row_ids(df, lin, v).localCheckpoint(
-                eager=False
-            )
+            df = materialize_once(self._with_new_row_ids(df, lin, v))
             extra = {
                 "lineage": {**lin, "next_row_id": self._lineage_next(df, lin)}
             }
@@ -426,11 +423,7 @@ class SnapshotTable:
         v = parent["version"] + 1
         if preds:
             affected = self._affected_files(parent, preds)
-            keep = {
-                uri: s
-                for uri, s in parent["files"].items()
-                if uri not in set(affected)
-            }
+            keep = self._untouched(parent, affected)
         else:
             affected = sorted(parent["files"])
             keep = {}
@@ -461,6 +454,13 @@ class SnapshotTable:
         affected, _ = prune_files(pseudo, preds)
         return affected
 
+    @staticmethod
+    def _untouched(parent: dict, affected: list[str]) -> dict:
+        """The parent's manifest entries for the files not in ``affected``
+        — carried into the new version by reference."""
+        hit = set(affected)
+        return {f: info for f, info in parent["files"].items() if f not in hit}
+
     def upsert(
         self,
         batch: DataFrame,
@@ -488,11 +488,7 @@ class SnapshotTable:
             if preds
             else list(parent["files"])
         )
-        untouched = {
-            f: info
-            for f, info in parent["files"].items()
-            if f not in set(affected)
-        }
+        untouched = self._untouched(parent, affected)
         lin = parent.get("lineage")
         existing = None
         if lin:
@@ -515,9 +511,11 @@ class SnapshotTable:
             merged_in = batch
         extra: dict = {"files_rewritten": len(affected)}
         if lin:
-            merged = self._lineage_merge(
-                merged_in, existing, record_keys, precombine, lin
-            ).localCheckpoint(eager=False)  # _lineage_next + _stage reuse
+            merged = materialize_once(  # _lineage_next + _stage reuse
+                self._lineage_merge(
+                    merged_in, existing, record_keys, precombine, lin
+                )
+            )
             extra["lineage"] = {
                 **lin, "next_row_id": self._lineage_next(merged, lin),
             }
@@ -633,11 +631,7 @@ class SnapshotTable:
             if preds
             else list(parent["files"])
         )
-        untouched = {
-            f: info
-            for f, info in parent["files"].items()
-            if f not in set(affected)
-        }
+        untouched = self._untouched(parent, affected)
         tgt = (
             self.spark.read.option("mergeSchema", "true").parquet(*affected)
             if affected
@@ -718,11 +712,7 @@ class SnapshotTable:
             if prunable
             else list(parent["files"])
         )
-        untouched = {
-            f: info
-            for f, info in parent["files"].items()
-            if f not in set(affected)
-        }
+        untouched = self._untouched(parent, affected)
         new: dict = {}
         if affected:
             kept = (

@@ -8,7 +8,12 @@ query modules each found the repo root, keyed the directory and checked
 an environment knob forked five builders into a cache-bypass path.  The
 snapshot chains kept a second protocol — probing for their last manifest
 and rebuilding in place — because their manifests held absolute
-``file://`` URIs.  This test statically keeps the protocol in one place."""
+``file://`` URIs.  This test statically keeps the protocol in one place.
+
+The same holds for in-session materialization: ``materialize_once`` in the
+same module is the only checkpoint call, so its policy (lazy, local, the
+scale caveat) is decided once, and no engine module caches or persists a
+frame that would stay pinned until the session ends."""
 
 from __future__ import annotations
 
@@ -88,4 +93,25 @@ def test_no_file_uri_keys_in_tables_or_queries():
     assert not bad, (
         f"{bad} build file:// keys; manifests and sidecars key files "
         "relative to the table directory (layout.stats.relative_keys)"
+    )
+
+
+def test_only_loader_checkpoints():
+    bad = _offenders(
+        (p for p in PKG.rglob("*.py") if p != OWNER), ("localCheckpoint",)
+    )
+    assert not bad, (
+        f"{bad} checkpoint frames themselves; go through "
+        "sources.loader.materialize_once instead"
+    )
+
+
+def test_engine_modules_neither_cache_nor_persist():
+    dirs = ("queries", "operators", "layout", "table", "streaming")
+    paths = [p for d in dirs for p in (PKG / d).rglob("*.py")]
+    bad = _offenders(paths, (".cache(", ".persist("))
+    assert not bad, (
+        f"{bad} cache or persist a frame; use "
+        "sources.loader.materialize_once, whose blocks are released when "
+        "the frame is garbage-collected"
     )

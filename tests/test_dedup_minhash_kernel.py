@@ -17,10 +17,32 @@ from lakehouse_sfc_spark.queries.datapipe import (
     _MH_COEF,
     _MH_K,
     _MH_P,
+    _h32,
     _mh_arrow_kernel,
-    _mh_signatures,
     _mh_signatures_arrow,
 )
+
+
+def _mh_signatures(ngr):
+    """The JVM MinHash(64) fold the Arrow kernel replaced: (doc_id, mh)
+    with each n-gram md5-hashed once and the 64 affine permutations folded
+    in one ``F.aggregate`` pass.  Kept here as the kernel's reference."""
+    coef = F.array(
+        *[
+            F.struct(
+                F.lit(a).cast("long").alias("a"), F.lit(b).cast("long").alias("b")
+            )
+            for a, b in _MH_COEF
+        ]
+    )
+    mh_expr = F.aggregate(
+        F.transform(F.col("ng"), lambda g: _h32(g) % F.lit(_MH_P)),
+        F.array_repeat(F.lit(_MH_P).cast("long"), _MH_K),
+        lambda acc, h: F.zip_with(
+            acc, coef, lambda m, c: F.least(m, (h * c["a"] + c["b"]) % F.lit(_MH_P))
+        ),
+    )
+    return ngr.select("doc_id", mh_expr.alias("mh"))
 
 
 def _ref_sig(hashes: list[int]) -> list[int]:
@@ -63,10 +85,7 @@ def test_arrow_signatures_bit_identical_to_jvm(spark):
         ],
         "doc_id long, ng array<string>",
     )
-    jvm = {
-        r["doc_id"]: r["mh"]
-        for r in _mh_signatures(docs, barrier=False).collect()
-    }
+    jvm = {r["doc_id"]: r["mh"] for r in _mh_signatures(docs).collect()}
     arrow = {r["doc_id"]: r["mh"] for r in _mh_signatures_arrow(docs).collect()}
     assert jvm == arrow
     assert all(len(v) == _MH_K for v in arrow.values())
