@@ -4,9 +4,14 @@ against the per-file min/max sidecar and hand Spark only the surviving files.
 This is the native replacement for the data skipping the reference measures
 through Delta/Hudi/Iceberg (files_scanned / bytes_scanned,
 run_queries.py:165-248).  No Catalyst rule needed: pruning happens before
-``spark.read.parquet(*files)``, then Catalyst still applies row-group
-pruning and predicate pushdown inside the surviving files, so the two layers
-compose.
+the surviving files are read, then Catalyst still applies row-group
+pruning and predicate pushdown inside them, so the two layers compose.
+
+Survivors are read as ``spark.read.schema(schema).option("basePath",
+root).parquet(*survivors)``.  The schema is resolved once per table state
+(every file the sidecar lists, by size and mtime), as Delta and Iceberg
+keep it in table metadata, so building a pruned scan launches no Spark job
+and reads no footer; ``basePath`` keeps hive partition columns in it.
 
 All predicates here are null-rejecting (eq/range/in never match NULL), so a
 file whose min/max are both NULL for a predicate column (all-null chunk)
@@ -21,6 +26,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from lakehouse_sfc_spark.layout.stats import file_size, read_sidecar
 
@@ -160,35 +166,81 @@ def preds_to_column(predicates: list[Pred]):
     return out
 
 
+def _fingerprint(spark: SparkSession, files) -> tuple | None:
+    """Cache key of a file set: the applicationId plus each file's (path,
+    size, mtime_ns), so a rewritten file never serves a stale entry.  None
+    when a file cannot be stat'ed (nothing is cached then)."""
+    try:
+        parts = []
+        for f in sorted(files):
+            st = os.stat(f)
+            parts.append((f, st.st_size, st.st_mtime_ns))
+    except OSError:
+        return None
+    return (spark.sparkContext.applicationId, tuple(parts))
+
+
+def _memo(cache: dict, key: tuple | None, build):
+    if key is not None and key in cache:
+        return cache[key]
+    out = build()
+    if key is not None:
+        if len(cache) >= _PRUNED_CACHE_MAX:
+            cache.clear()
+        cache[key] = out
+    return out
+
+
+# Table schema per table state (every file the sidecar lists), the way
+# Delta and Iceberg keep the schema in table metadata: schema inference
+# reads a footer in a Spark job, and this is the only place a table with a
+# sidecar pays it.  ``basePath`` makes hive partition columns
+# (``cell=3/part-….parquet``) part of the schema.
+_SCHEMA_CACHE: dict[tuple, StructType] = {}
+
 # Analyzed-relation cache for pruned scans (same discipline as
-# loader._TABLE_CACHE): spark.read.parquet(*survivors) costs ~100 ms of
-# driver-side footer/schema resolution per BUILD, and layout queries build
-# a fresh scan per run.  Keyed on the applicationId + the exact survivor
-# set + each survivor's (size, mtime_ns), so a rewritten layout can never
-# serve a stale relation.  The per-query predicate is applied ON TOP of
-# the cached base relation, so different predicates with the same survivor
+# loader._TABLE_CACHE), keyed on the exact survivor set.  With the schema
+# given, a build launches no Spark job, but Catalyst still resolves the
+# relation and lists the files on the driver, and layout queries build a
+# fresh scan per run.  The per-query predicate is applied ON TOP of the
+# cached base relation, so different predicates with the same survivor
 # set share it.
 _PRUNED_CACHE: dict[tuple, DataFrame] = {}
 _PRUNED_CACHE_MAX = 256
 
 
-def _survivors_relation(spark: SparkSession, survivors: list[str]) -> DataFrame:
-    key_parts = []
-    try:
-        for f in sorted(survivors):
-            st = os.stat(f)
-            key_parts.append((f, st.st_size, st.st_mtime_ns))
-        key = (spark.sparkContext.applicationId, tuple(key_parts))
-    except OSError:
-        key = None
-    if key is not None and key in _PRUNED_CACHE:
-        return _PRUNED_CACHE[key]
-    df = spark.read.parquet(*survivors)
-    if key is not None:
-        if len(_PRUNED_CACHE) >= _PRUNED_CACHE_MAX:
-            _PRUNED_CACHE.clear()
-        _PRUNED_CACHE[key] = df
-    return df
+def _table_schema(spark: SparkSession, root: str, files: list[str]) -> StructType:
+    return _memo(
+        _SCHEMA_CACHE,
+        _fingerprint(spark, files),
+        lambda: spark.read.option("basePath", root).parquet(*files).schema,
+    )
+
+
+def _survivors_relation(
+    spark: SparkSession, root: str, schema: StructType, survivors: list[str]
+) -> DataFrame:
+    return _memo(
+        _PRUNED_CACHE,
+        _fingerprint(spark, survivors),
+        lambda: spark.read.schema(schema)
+        .option("basePath", root)
+        .parquet(*survivors),
+    )
+
+
+def sidecar_relation(
+    spark: SparkSession, path: str, sidecar: dict, files: list[str]
+) -> DataFrame:
+    """``files`` (some or all of those ``sidecar`` lists) read with the
+    table's schema, partition columns included; no Spark job runs unless
+    this table state's schema is not resolved yet."""
+    root = os.path.abspath(path)
+    schema = _table_schema(spark, root, list(sidecar["files"]))
+    if not files:
+        # empty relation with the table's schema
+        return spark.read.schema(schema).option("basePath", root).parquet(root).limit(0)
+    return _survivors_relation(spark, root, schema, files)
 
 
 def read_pruned(
@@ -203,10 +255,10 @@ def read_pruned(
         metrics = {"files_total": n, "files_scanned": n}
     else:
         survivors, metrics = prune_files(sidecar, predicates)
-        if not survivors:
-            # empty relation with the right schema
+        if not sidecar["files"]:
+            # no listed file to take a schema from: the directory decides
             df = spark.read.parquet(path).limit(0)
         else:
-            df = _survivors_relation(spark, survivors)
+            df = sidecar_relation(spark, path, sidecar, survivors)
     cond = preds_to_column(predicates)
     return (df.filter(cond) if cond is not None else df), metrics

@@ -127,6 +127,109 @@ def test_empty_pruning_result(spark, layout_tables):
     assert tbl.last_scan_metrics["files_scanned"] == 0
 
 
+def _jobs_in(spark, build):
+    """``build()``'s result and the number of Spark jobs it ran, counted by
+    ``statusTracker`` under a job group of its own."""
+    import uuid
+
+    sc = spark.sparkContext
+    gid = f"build-{uuid.uuid4().hex}"
+    sc.setJobGroup(gid, gid)
+    try:
+        out = build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # job starts reach the status store through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(gid))
+
+
+def test_pruned_scan_build_runs_no_job(spark, layout_tables):
+    """The table's schema is resolved once per table state, so building a
+    scan over a survivor set never seen before, or over none, runs no
+    Spark job (a per-survivor-set read inferred the schema in one)."""
+    from lakehouse_sfc_spark.table import pruning
+    from lakehouse_sfc_spark.table.pruning import preds_to_column, prune_files
+
+    tbl = layout_tables["zorder"]
+    tbl.scan(PREDS)  # warm-up: resolves this table state's schema
+    schema = tbl.read().schema
+    sidecar = tbl.sidecar
+    unpruned = spark.read.parquet(tbl.path)
+
+    far_future = [Pred("l_shipdate", ">=", datetime.datetime(2050, 1, 1))]
+    df, jobs = _jobs_in(spark, lambda: tbl.scan(far_future))
+    assert jobs == 0
+    assert df.schema == schema
+    assert tbl.last_scan_metrics["files_scanned"] == 0 and df.count() == 0
+
+    fresh = 0
+    for year in range(1992, 1999):
+        for lo in (1.0, 11.0, 26.0, 41.0):
+            preds = [
+                Pred("l_shipdate", "between", (datetime.datetime(year, 1, 1),
+                                               datetime.datetime(year, 9, 30))),
+                Pred("l_quantity", "between", (lo, lo + 12.0)),
+            ]
+            survivors, _ = prune_files(sidecar, preds)
+            key = pruning._fingerprint(spark, survivors)
+            if not survivors or key in pruning._PRUNED_CACHE:
+                continue
+            fresh += 1
+            df, jobs = _jobs_in(spark, lambda: tbl.scan(preds))
+            assert jobs == 0, (year, lo)
+            assert df.schema == schema
+            assert df.count() == unpruned.filter(preds_to_column(preds)).count()
+            assert tbl.scan(preds).count() == df.count()
+            base = pruning._PRUNED_CACHE[key]
+            assert pruning.sidecar_relation(spark, tbl.path, sidecar, survivors) is base
+    assert fresh >= 5
+
+
+@pytest.fixture(scope="module")
+def partitioned_table(spark, tmp_path_factory):
+    """A zorder layout hive-partitioned on ``cell`` (the CLI's
+    ``--partition-by``): its files sit under ``cell=N/``."""
+    li = load_table(spark, SF, "lineitem").withColumn(
+        "cell", (F.col("l_orderkey") % 3).cast("int")
+    )
+    path = str(tmp_path_factory.mktemp("partitioned") / "zorder")
+    return SfcTable.write(
+        li, path, layout="zorder", layout_cols=LAYOUT_COLS,
+        partition_by=["cell"], num_files=4,
+    )
+
+
+def test_pruned_scan_keeps_partition_columns(spark, partitioned_table):
+    from lakehouse_sfc_spark.table.pruning import preds_to_column
+
+    tbl = partitioned_table
+    cols = tbl.read().columns
+    assert cols[-1] == "cell"
+    far_future = [Pred("l_shipdate", ">=", datetime.datetime(2050, 1, 1))]
+    assert tbl.scan(far_future).columns == cols
+    assert tbl.scan(PREDS).columns == cols
+    assert tbl.last_scan_metrics["files_scanned"] > 0
+    on_cell = PREDS + [Pred("cell", "==", 1)]
+    want = spark.read.parquet(tbl.path).filter(preds_to_column(on_cell)).count()
+    assert tbl.scan(on_cell).count() == want > 0
+
+
+def _rows(df):
+    return sorted(tuple(str(x) for x in r) for r in df.collect())
+
+
+def test_partitioned_read_equals_directory_read(spark, partitioned_table):
+    from lakehouse_sfc_spark.table import pruning
+
+    got = partitioned_table.read()
+    want = spark.read.parquet(partitioned_table.path)
+    # served from the sidecar manifest, not the directory read
+    assert any(got is df for df in pruning._PRUNED_CACHE.values())
+    assert got.schema == want.schema
+    assert _rows(got) == _rows(want)
+
+
 def test_eq_and_in_pruning(spark, layout_tables):
     tbl = layout_tables["zorder"]
     df = tbl.scan([Pred("l_quantity", "==", 25.0)])
