@@ -466,7 +466,7 @@ def _mh_signatures_arrow(ngr):
     return hg.mapInArrow(_mh_arrow_kernel, "doc_id long, mh array<long>")
 
 
-# --- vectorized double-fold kernels (r12 verdict task 2) ---------------------
+# --- vectorized double-fold kernels ------------------------------------------
 #
 # _dot/_l2 are interpreted HOF folds (CodegenFallback) — the same per-element
 # interpreter tax the minhash fold paid, but over doubles.  The NumPy twins
@@ -565,6 +565,24 @@ def _cosv_pair_kernel(batches):
         )
 
 
+def _sq_dists(E, C):
+    """(n, d) rows x (K, d) codebook -> (n, K) squared L2 distances, each
+    accumulated (x-y)*(x-y) left-to-right from 0.0 — bit-identical to the
+    JVM ``_l2`` fold.  Fails loudly on a width mismatch (zip_with would
+    null-pad it into a silent NULL distance)."""
+    import numpy as np
+
+    if E.shape[1] != C.shape[1]:
+        raise ValueError(
+            f"vector width {E.shape[1]} != codebook {C.shape[1]}"
+        )
+    D = np.zeros((len(E), len(C)), dtype=np.float64)
+    for j in range(C.shape[1]):
+        diff = E[:, j, None] - C[None, :, j]
+        D = D + diff * diff
+    return D
+
+
 def _nearest_centroid_kernel(cent_by_key, emit_dist=False):
     """Kernel factory for the k-means/PQ ASSIGNMENT pass: every input row's
     vector is scored against a driver-collected codebook and the nearest
@@ -574,15 +592,15 @@ def _nearest_centroid_kernel(cent_by_key, emit_dist=False):
 
     ``cent_by_key``: {subspace key -> (cids sorted ascending, (K, d) centroid
     matrix)}; key None means un-subspaced (the input has no ``s`` column).
-    Distances accumulate (x-y)*(x-y) left-to-right per pair — bit-identical
-    to the JVM ``_l2`` fold — and np.argmin's first-minimum rule on
-    ascending cids reproduces the struct tie-break.  Distances are sums of
-    squares, so -0.0 never occurs and double ordering is total (no NaN:
-    _emb excludes NULL/zero-norm/NaN vectors).
+    Distances come from ``_sq_dists`` (bit-identical to the JVM ``_l2``
+    fold), and np.argmin's first-minimum rule on ascending cids reproduces
+    the struct tie-break.  Distances are sums of squares, so -0.0 never
+    occurs and double ordering is total (no NaN: _emb excludes
+    NULL/zero-norm/NaN vectors).
 
-    This is the documented production shape (collect the tiny codebook once,
-    inline the argmin) — it replaces a K-way broadcast-join row explosion
-    plus a groupBy(vec_id) exchange with one map pass (guide §2.4/§4.2)."""
+    Collecting the tiny codebook once and taking the argmin in one map pass
+    avoids a K-way broadcast-join row explosion plus a groupBy(vec_id)
+    exchange (guide §2.4/§4.2)."""
     import numpy as np
     import pyarrow as pa
 
@@ -606,15 +624,7 @@ def _nearest_centroid_kernel(cent_by_key, emit_dist=False):
             )
             for key, rows in groups:
                 cids, C = cent_by_key[key]
-                sub = E[rows]
-                if sub.shape[1] != C.shape[1]:
-                    raise ValueError(
-                        f"vector width {sub.shape[1]} != codebook {C.shape[1]}"
-                    )
-                D = np.zeros((len(rows), len(cids)), dtype=np.float64)
-                for j in range(C.shape[1]):
-                    diff = sub[:, j, None] - C[None, :, j]
-                    D = D + diff * diff
+                D = _sq_dists(E[rows], C)
                 b = D.argmin(axis=1)
                 best_cid[rows] = cids[b]
                 best_d[rows] = D[np.arange(len(rows)), b]
@@ -650,14 +660,45 @@ def _collect_codebook(rows, key_attr, cid_attr, vec_attr):
     return out
 
 
-def _py_l2(a, b):
-    """Driver-side twin of the _l2 fold (Python floats ARE IEEE binary64;
-    same ops, same order ⇒ same bits)."""
-    acc = 0.0
-    for x, y in zip(a, b):
-        d = x - y
-        acc = acc + d * d
-    return acc
+def _lloyd_codebook(rel, key, vec, k):
+    """One k-means codebook round over ``rel`` (vec_id, [key], vec): seed
+    from the ``vec_id < k`` rows, assign every row to its nearest seed in
+    ``_nearest_centroid_kernel``, and take each centroid component as an
+    exact-decimal mean (DECIMAL(18,9) sum / COUNT, one double division), so
+    the codebook is bit-identical to the oracles' Lloyd CTEs.  ``key``
+    (or None) keeps sub-codebooks apart (the PQ subspace ``s``).  Returns
+    the collected codebook in ``_collect_codebook`` form, keyed by cid."""
+    keys = [key] if key else []
+    cols = ["vec_id", *keys, vec]
+    seed_book = _collect_codebook(
+        rel.filter(F.col("vec_id") < k).select(*cols).collect(),
+        key,
+        "vec_id",
+        vec,
+    )
+    key_schema = f"{key} int, " if key else ""
+    a1 = rel.select(*cols).mapInArrow(
+        _nearest_centroid_kernel(seed_book),
+        f"vec_id long, {key_schema}{vec} array<double>, cid long",
+    )
+    cent = (
+        a1.select(*keys, "cid", F.posexplode(vec).alias("pos", "x"))
+        .groupBy(*keys, "cid", "pos")
+        .agg(
+            (
+                F.sum(F.col("x").cast("decimal(18,9)")).cast("double")
+                / F.count(F.lit(1))
+            ).alias("m")
+        )
+        .groupBy(*keys, "cid")
+        .agg(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("pos", "m"))),
+                lambda st: st["m"],
+            ).alias("ce")
+        )
+    )
+    return _collect_codebook(cent.collect(), key, "cid", "ce")
 
 
 def _band_explode(mh):
@@ -1492,21 +1533,26 @@ def ann_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _cell(emb: Column) -> Column:
-    """Deterministic sign quantizer: bit j set iff emb[j] > 0 (first 8 dims).
-    256 IVF cells; float > 0 compares are exact so both engines agree."""
+def _cell_bits(emb: Column, bits: int, dtype: str = "long") -> Column:
+    """Deterministic sign quantizer: bit j set iff emb[j] > 0 over the first
+    ``bits`` dims; float > 0 compares are exact so both engines agree.
+    ``_IVF_DIMS`` bits cast to int give the 256 IVF cells (``_SQL_CELL``)."""
     return reduce(
         add,
         [
             F.when(F.get(emb, j) > 0, F.lit(1 << j)).otherwise(F.lit(0))
-            for j in range(_IVF_DIMS)
+            for j in range(bits)
         ],
-    ).cast("int")
+    ).cast(dtype)
 
 
 _SQL_CELL = (
     "list_sum(list_transform(range(0, 8),"
     " j -> CASE WHEN {e}[j+1] > 0 THEN (1 << j) ELSE 0 END))::INTEGER"
+)
+_SQL_CELL_B = (
+    "list_sum(list_transform(range(0, {b}),"
+    " j -> CASE WHEN {e}[j+1] > 0 THEN (1::BIGINT << j) ELSE 0 END))::BIGINT"
 )
 
 
@@ -1530,7 +1576,9 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     scoring), exact top-k within the probed set.  At scale the table is
     written partitioned by cell so the probe is partition pruning, not a
     filter."""
-    c = _emb(spark, sf_dir).withColumn("cell", _cell(F.col("emb")))
+    c = _emb(spark, sf_dir).withColumn(
+        "cell", _cell_bits(F.col("emb"), _IVF_DIMS, "int")
+    )
     q = c.filter(F.col("vec_id") == _ANN_QUERY_ID).select(
         F.col("emb").alias("qemb"),
         F.col("nrm").alias("qnrm"),
@@ -1579,7 +1627,9 @@ def ann_ivf_partitioned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan's PartitionFilters carry the cell predicate."""
 
     def build(p: str) -> None:
-        src = _emb(spark, sf_dir).withColumn("cell", _cell(F.col("emb")))
+        src = _emb(spark, sf_dir).withColumn(
+            "cell", _cell_bits(F.col("emb"), _IVF_DIMS, "int")
+        )
         src.repartition("cell").write.partitionBy("cell").parquet(p)
 
     c = spark.read.parquet(
@@ -1587,7 +1637,7 @@ def ann_ivf_partitioned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     q = (
         _emb(spark, sf_dir)
-        .withColumn("qcell", _cell(F.col("emb")))
+        .withColumn("qcell", _cell_bits(F.col("emb"), _IVF_DIMS, "int"))
         .filter(F.col("vec_id") == _ANN_QUERY_ID)
         .select("emb", "nrm", "qcell")
     )
@@ -1691,67 +1741,31 @@ def ann_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Cross-engine determinism: centroid components are exact-decimal means
     (DECIMAL(18,9) sums / COUNT, one double division), assignments break
-    distance ties by centroid id (``min_by`` over a (distance, cid) struct ≡
-    the oracle's ROW_NUMBER ordering), and distances fold left-to-right.
+    distance ties toward the lowest centroid id (the oracle's ROW_NUMBER
+    ordering), and distances fold left-to-right.
 
-    Scale notes (100 TB): the assignment join broadcasts K centroid rows and
-    partially aggregates (min_by) map-side, so each Lloyd pass is one scan +
-    one tiny-key shuffle of (vec_id, cell); in production the K centroids
-    would be collected to the driver once and the argmin inlined as a codegen
-    expression (zero shuffle), with more Lloyd rounds on a bounded sample —
-    this declarative twin is the oracle-matched correctness contract.
-
-    Round 12: the valid-vector relation is width-repartitioned and
-    materialized once — it feeds SIX consumers (K sizing, seeds, both
-    Lloyd assignment passes, the query row, the final scan) which each
-    re-derived the scan + norm filter, and the interpreted L2 folds ran
-    at the narrow scan width (guide §2.4/§2).  Noop median at sf0.01:
-    1.94 → 1.25 s, value-identical.
-
-    Round 13 (r12 verdict task 2): both Lloyd assignment passes now run in
-    ``_nearest_centroid_kernel`` — the K-row codebook is collected to the
-    driver (the docstring above always called this the production shape)
-    and each pass is ONE vectorized map over the checkpoint instead of a
-    broadcast-join K-way row explosion + interpreted ``_l2`` fold per pair
-    + a groupBy(vec_id) exchange (guide §2.4/§4.2).  The nprobe cell pick
-    runs on the driver over the collected codebook with the same
-    left-to-right fold (``_py_l2``) and (d, cid) tie-break.  Every double
-    op is order-exact, so the oracle match stays bit-identical
-    (tests/test_vec_kernels.py pins the kernels against the JVM folds)."""
+    Plan shape: the valid-vector relation is width-repartitioned and
+    materialized once — it feeds the K sizing, the seeds, both assignment
+    passes, the query row and the final scan, and would otherwise re-derive
+    the scan + norm filter for each.  The codebook round is
+    ``_lloyd_codebook``: the K-row codebook is collected to the driver and
+    each assignment pass is ONE vectorized map (``_nearest_centroid_kernel``)
+    instead of a K-way broadcast-join row explosion plus a groupBy(vec_id)
+    exchange (guide §2.4/§4.2).  The nprobe cell pick runs on the driver
+    over the collected codebook (``_sq_dists``, then the (d, cid)
+    tie-break).  Every double op is order-exact, so the oracle match is
+    bit-identical (tests/test_vec_kernels.py pins the kernels against the
+    JVM folds)."""
     import math
+
+    import numpy as np
 
     from lakehouse_sfc_spark.sources.loader import compute_width
 
     c = materialize_once(_emb(spark, sf_dir), compute_width(spark))
     # Same K as the JVM/oracle expression: ceil over one double sqrt.
     kk = min(256, max(8, math.ceil(math.sqrt(c.count()))))
-    seed_book = _collect_codebook(
-        c.filter(F.col("vec_id") < kk).select("vec_id", "emb").collect(),
-        None,
-        "vec_id",
-        "emb",
-    )
-    a1 = c.select("vec_id", "emb").mapInArrow(
-        _nearest_centroid_kernel(seed_book),
-        "vec_id long, emb array<double>, cid long",
-    )
-    per_dim = (
-        a1.select("cid", F.posexplode("emb").alias("pos", "x"))
-        .groupBy("cid", "pos")
-        .agg(
-            (
-                F.sum(F.col("x").cast("decimal(18,9)")).cast("double")
-                / F.count(F.lit(1))
-            ).alias("m")
-        )
-    )
-    cent = per_dim.groupBy("cid").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "m"))),
-            lambda s: s["m"],
-        ).alias("cemb")
-    )
-    cent_book = _collect_codebook(cent.collect(), None, "cid", "cemb")
+    cent_book = _lloyd_codebook(c, None, "emb", kk)
     qrows = c.filter(F.col("vec_id") == _ANN_QUERY_ID).select(
         "emb", "nrm"
     ).collect()
@@ -1760,12 +1774,11 @@ def ann_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         # oracle's empty q CTE
         return spark.createDataFrame([], "vec_id bigint, score double")
     qemb, qnrm = qrows[0]["emb"], qrows[0]["nrm"]
-    # nprobe nearest cells: driver-side exact fold + (d, cid) tie-break —
-    # identical to the former row_number(ORDER BY d, cid) <= nprobe window.
+    # nprobe nearest cells: exact distances + (d, cid) tie-break, the
+    # oracle's ROW_NUMBER(ORDER BY d, cid) <= nprobe window.
     cids, cmat = cent_book[None]
-    ranked = sorted(
-        (_py_l2(qemb, cmat[i]), int(cids[i])) for i in range(len(cids))
-    )
+    qd = _sq_dists(np.array([qemb], dtype=np.float64), cmat)[0]
+    ranked = sorted(zip(qd.tolist(), cids.tolist()))
     probe_cells = [cid for _, cid in ranked[:_KM_NPROBE]]
     qemb_lit = F.array(*[F.lit(v) for v in qemb])
     cos = _dot(F.col("emb"), qemb_lit) / (F.col("nrm") * F.lit(qnrm))
@@ -1790,18 +1803,13 @@ def ann_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _KC_K = 6  # centers to select (round 0 seeds at vec_id 0)
 
-_SQL_D2 = (
-    "list_reduce(list_transform(range(1, len({a})+1),"
-    " i -> ({a}[i] - {b}[i]) * ({a}[i] - {b}[i])), (p, q) -> p + q)"
-)
-
 
 def _sql_kcenter_round(r: int) -> str:
     """One greedy round as CTEs: pick the point FARTHEST from the chosen
     set (argmax min-distance, tie-break lowest vec_id), then tighten every
     point's min-distance against the new center."""
     prev = f"r{r - 1}"
-    d2 = _SQL_D2.format(a=f"{prev}.emb", b=f"c{r}.emb")
+    d2 = _SQL_L2.format(a=f"{prev}.emb", b=f"c{r}.emb")
     return f"""
     s{r} AS MATERIALIZED (
       SELECT first(vec_id ORDER BY md DESC, vec_id) AS cid,
@@ -1827,7 +1835,7 @@ def _sql_kcenter_round(r: int) -> str:
     ),
     c0 AS MATERIALIZED (SELECT emb FROM c WHERE vec_id = 0),
     r0 AS MATERIALIZED (
-      SELECT c.vec_id, c.emb, {_SQL_D2.format(a="c.emb", b="c0.emb")} AS md
+      SELECT c.vec_id, c.emb, {_SQL_L2.format(a="c.emb", b="c0.emb")} AS md
       FROM c, c0
     ),
     {",".join(_sql_kcenter_round(r) for r in range(1, _KC_K))}
@@ -1867,17 +1875,10 @@ def sample_kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    def d2(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-
     c0 = c.filter(F.col("vec_id") == 0).select(F.col("emb").alias("cemb"))
     r = materialize_once(
         c.crossJoin(F.broadcast(c0)).select(
-            "vec_id", "emb", d2(F.col("emb"), F.col("cemb")).alias("md")
+            "vec_id", "emb", _l2(F.col("emb"), F.col("cemb")).alias("md")
         )
     )
     rows = [
@@ -1916,7 +1917,7 @@ def sample_kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "vec_id",
                 "emb",
                 F.least(
-                    F.col("md"), d2(F.col("emb"), F.col("cemb"))
+                    F.col("md"), _l2(F.col("emb"), F.col("cemb"))
                 ).alias("md"),
             )
         )
@@ -2137,7 +2138,9 @@ def ann_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-k is a window over the scored pairs — partitioned by query, no
     global sort.  At 100 TB both sides partition by cell and the probe is
     the same partition pruning as ``ann_ivf_partitioned_topk``."""
-    c = _emb(spark, sf_dir).withColumn("cell", _cell(F.col("emb")))
+    c = _emb(spark, sf_dir).withColumn(
+        "cell", _cell_bits(F.col("emb"), _IVF_DIMS, "int")
+    )
     q = c.filter((F.col("vec_id") % _KNN_SAMPLE_MOD) == 0).select(
         F.col("vec_id").alias("q_id"),
         F.col("emb").alias("qemb"),
@@ -2208,22 +2211,6 @@ _DETK_BITS_SQL = (
     )
     + f" ELSE {_DETK_MAXB} END"
 )
-
-_SQL_CELL_B = (
-    "list_sum(list_transform(range(0, {b}),"
-    " j -> CASE WHEN {e}[j+1] > 0 THEN (1::BIGINT << j) ELSE 0 END))::BIGINT"
-)
-
-
-def _cell_bits(emb: Column, bits: int) -> Column:
-    """Sign quantizer over the first ``bits`` dims (generalized _cell)."""
-    return reduce(
-        add,
-        [
-            F.when(F.get(emb, j) > 0, F.lit(1 << j)).otherwise(F.lit(0))
-            for j in range(bits)
-        ],
-    ).cast("long")
 
 
 @register(
@@ -3059,7 +3046,9 @@ def dedup_embedding_keep_centroid(
     window over |cells| partitions — every stage key-equality, nothing
     quadratic.  At 100 TB, scale the cell bits with n exactly as
     dedup_embedding_topk does."""
-    c = _emb(spark, sf_dir).withColumn("cell", _cell(F.col("emb")))
+    c = _emb(spark, sf_dir).withColumn(
+        "cell", _cell_bits(F.col("emb"), _IVF_DIMS, "int")
+    )
     t = c.select(
         "vec_id",
         "cell",
@@ -3603,15 +3592,7 @@ def emb_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     u = None
     for _ in range(_PCA_ITERS):
         u, vdf = step(vdf)
-    norm = vdf.select(
-        F.sqrt(
-            F.aggregate(
-                F.transform("v", lambda y: y * y),
-                F.lit(0.0),
-                lambda a, b: a + b,
-            )
-        ).alias("nrm")
-    )
+    norm = vdf.select(F.sqrt(_dot(F.col("v"), F.col("v"))).alias("nrm"))
     return (
         u.crossJoin(F.broadcast(norm))
         .select(
@@ -4418,34 +4399,24 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     measured shortlist recall on this near-random synthetic corpus is
     1.0 at sf0.01 and 0.8 at sf0.1 vs the exact top-k (clustered real
     embeddings fare better — ADC distortion here is the corpus's lack of
-    structure, asserted as a floor in tests/test_ivf.py).
+    structure, asserted as a floor in
+    tests/test_queries_oracle.py::test_pq_shortlist_recall_floor).
 
-    Scale shape: codebooks and LUTs are tiny broadcasts; encode is a
-    map-side min_by per subspace; ADC ranks a narrow (vec_id, {m} codes)
-    relation with TakeOrderedAndProject, and only the shortlist rows ever
-    rejoin the full vectors.  At 100 TB the codebooks would be trained once
-    on a sample and the LUT inlined as a literal expression — this
-    declarative twin is the oracle-matched correctness contract.
+    Plan shape: the valid-vector relation is checkpointed once, and the {m}
+    subspaces run as ONE exploded relation (vec_id, s, subvector) through
+    ONE keyed ``_lloyd_codebook`` round rather than {m} independent
+    per-subspace pipelines re-joined on vec_id.  Codebooks are collected to
+    the driver, the {m}×{k} LUT is computed there (``_sq_dists``), and the
+    ADC scoring is ONE vectorized map pass (``_pq_adc``) that encodes and
+    looks up all {m} subspaces per vector; only the shortlist rows rejoin
+    the full vectors for the exact re-rank.  Every double op keeps the JVM
+    fold's left-to-right order (decimal centroid means, lowest-cid
+    tie-break, fixed-order d0+d1+d2+d3 ADC sum), so the oracle match is
+    bit-exact."""
+    import numpy as np
 
-    Plan shape (r10 verdict task 4): the {m} subspaces run as ONE exploded
-    relation (vec_id, s, subvector) through ONE assign/centroid/reassign
-    chain keyed by (vec_id, s) — ~5 shuffles total — rather than {m}
-    independent per-subspace pipelines re-joined on vec_id (~4x the stages
-    and the sweep's slowest entry at 12.6 s).  The arithmetic is unchanged
-    expression-for-expression (same decimal centroid means, same min_by
-    tie-break, same fixed-order d0+d1+d2+d3 ADC sum), so the oracle match
-    is bit-exact as before."""
     from lakehouse_sfc_spark.sources.loader import compute_width
 
-    # Round 13 (r12 verdict task 2): the valid-vector relation is
-    # checkpointed once (it previously fed sub/seeds/qs/qfull as separate
-    # scans), the two per-subspace assignment passes run in
-    # ``_nearest_centroid_kernel`` over driver-collected codebooks, and the
-    # ADC scoring is ONE vectorized map pass (`_pq_adc` below) that encodes
-    # and table-looks-up all {m} subspaces per vector — replacing the
-    # codes explode + broadcast LUT join over 4n rows + pivot groupBy
-    # exchange (guide §2.4/§4.2).  Every double op keeps the JVM fold's
-    # left-to-right order, so scores are bit-identical.
     c = materialize_once(_emb(spark, sf_dir), compute_width(spark))
     n = c.count()
     # (vec_id, s, e): every vector's M subvectors as one relation.
@@ -4460,54 +4431,25 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("s", "e"),
     )
-    seed_book = _collect_codebook(
-        sub.filter(F.col("vec_id") < _PQ_K).collect(), "s", "vec_id", "e"
-    )
-    # per (vector, subspace): nearest sub-centroid of the SAME subspace,
-    # ties to the lowest cid (== min_by(cid, struct(d, cid)))
-    a1 = sub.mapInArrow(
-        _nearest_centroid_kernel(seed_book),
-        "vec_id long, s int, e array<double>, cid long",
-    )
-    cent = (
-        a1.select("s", "cid", F.posexplode("e").alias("pos", "x"))
-        .groupBy("s", "cid", "pos")
-        .agg(
-            (
-                F.sum(F.col("x").cast("decimal(18,9)")).cast("double")
-                / F.count(F.lit(1))
-            ).alias("m")
-        )
-        .groupBy("s", "cid")
-        .agg(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(F.struct(F.col("pos"), F.col("m")))
-                ),
-                lambda st: st["m"],
-            ).alias("ce")
-        )
-    )
-    cent_book = _collect_codebook(cent.collect(), "s", "cid", "ce")
+    cent_book = _lloyd_codebook(sub, "s", "e", _PQ_K)
     qrows = c.filter(F.col("vec_id") == _ANN_QUERY_ID).select("emb").collect()
     if not qrows:
         return spark.createDataFrame([], "vec_id bigint, l2_exact double")
     qe = list(qrows[0]["emb"])
-    # Driver-side ADC lookup table: exact sub-centroid -> query-subvector
-    # distances, the same fold the old broadcast-LUT join computed.
+    # Driver-side ADC lookup table: exact query-subvector -> sub-centroid
+    # distances, indexed like the codebook's ascending cids.
     lut = {
-        s: {
-            int(cids[i]): _py_l2(cmat[i], qe[_PQ_SUB * s: _PQ_SUB * (s + 1)])
-            for i in range(len(cids))
-        }
-        for s, (cids, cmat) in cent_book.items()
+        s: _sq_dists(
+            np.array([qe[_PQ_SUB * s: _PQ_SUB * (s + 1)]], dtype=np.float64),
+            cmat,
+        )[0]
+        for s, (_, cmat) in cent_book.items()
     }
 
     def _pq_adc(batches):
         """(vec_id, emb) -> (vec_id, adc): encode all subspaces and sum the
         LUT distances in the FIXED d0+d1+d2+d3 order (never a
         row-order-dependent SUM)."""
-        import numpy as np
         import pyarrow as pa
 
         for rb in batches:
@@ -4516,17 +4458,10 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             E = _rows_matrix(rb.column("emb"), width=_PQ_SUB * _PQ_M)
             terms = []
             for s in range(_PQ_M):
-                cids, C = cent_book[s]
-                sl = E[:, _PQ_SUB * s: _PQ_SUB * (s + 1)]
-                D = np.zeros((len(E), len(cids)), dtype=np.float64)
-                for j in range(C.shape[1]):
-                    diff = sl[:, j, None] - C[None, :, j]
-                    D = D + diff * diff
-                best = D.argmin(axis=1)
-                dv = np.array(
-                    [lut[s][int(cid)] for cid in cids], dtype=np.float64
+                D = _sq_dists(
+                    E[:, _PQ_SUB * s: _PQ_SUB * (s + 1)], cent_book[s][1]
                 )
-                terms.append(dv[best])
+                terms.append(lut[s][D.argmin(axis=1)])
             adc = terms[0]
             for t in terms[1:]:
                 adc = adc + t
@@ -5562,23 +5497,13 @@ def ann_pq_distortion_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact-decimal Lloyd pass), so the number measured is the number the
     index actually ships.
 
-    Scale shape: per subspace one broadcast codebook join + min_by
-    assignment (map-side) and one global aggregate; the corpus is
-    scanned once per subspace over a 16-dim slice — at 100 TB all four
-    subspaces run in ONE pass over the full array (a column per
-    subspace), which this declarative form already expresses."""
-    # Round 12: the 4 per-subspace pipelines are fused into ONE exploded
-    # (vec_id, s, e) relation — the same rewrite ann_pq_topk got in r11
-    # (~20 tiny stages -> ~6; the oracle is unchanged and the per-subspace
-    # arithmetic is identical because every aggregate now just carries the
-    # s key).  The relation is materialized once: both assignment passes
-    # consume it (guide §2.4).
-    # Round 13 (r12 verdict task 2): both assignment passes run in
-    # ``_nearest_centroid_kernel`` over driver-collected codebooks — one
-    # vectorized map pass each instead of a K-way broadcast-join explosion
-    # + interpreted ``_l2`` fold + groupBy(vec_id, s) exchange; the final
-    # pass emits the min distance (``dist``) directly, the former
-    # ``w.d AS err``.  Order-exact doubles, oracle bit-identical.
+    Plan shape: the _PQ_M subspaces run as ONE exploded (vec_id, s, e)
+    relation, materialized once because both assignment passes consume it
+    (guide §2.4); every aggregate carries the s key, so the per-subspace
+    arithmetic matches the oracle's per-subspace CTEs.  The codebook is one
+    keyed ``_lloyd_codebook`` round, and the final assignment pass emits
+    each vector's min distance (``dist``) as its error.  Order-exact
+    doubles, oracle bit-identical."""
     c = _emb(spark, sf_dir)
     sub = c.select(
         "vec_id",
@@ -5592,33 +5517,7 @@ def ann_pq_distortion_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("s", "e"),
     )
     sub = materialize_once(sub)
-    seed_book = _collect_codebook(
-        sub.filter(F.col("vec_id") < _PQ_K).collect(), "s", "vec_id", "e"
-    )
-    a1 = sub.mapInArrow(
-        _nearest_centroid_kernel(seed_book),
-        "vec_id long, s int, e array<double>, cid long",
-    )
-    cent = (
-        a1.select("s", "cid", F.posexplode("e").alias("pos", "x"))
-        .groupBy("s", "cid", "pos")
-        .agg(
-            (
-                F.sum(F.col("x").cast("decimal(18,9)")).cast("double")
-                / F.count(F.lit(1))
-            ).alias("m")
-        )
-        .groupBy("s", "cid")
-        .agg(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(F.struct(F.col("pos"), F.col("m")))
-                ),
-                lambda st: st["m"],
-            ).alias("ce")
-        )
-    )
-    cent_book = _collect_codebook(cent.collect(), "s", "cid", "ce")
+    cent_book = _lloyd_codebook(sub, "s", "e", _PQ_K)
     err = sub.select("vec_id", "s", "e").mapInArrow(
         _nearest_centroid_kernel(cent_book, emit_dist=True),
         "vec_id long, s int, e array<double>, cid long, dist double",

@@ -11,6 +11,9 @@ reassociation, and tie-broken argmin assignment.
 
 from __future__ import annotations
 
+import ast
+from pathlib import Path
+
 import numpy as np
 import pyarrow as pa
 import pytest
@@ -21,8 +24,8 @@ from lakehouse_sfc_spark.queries.datapipe import (
     _dot,
     _l2,
     _nearest_centroid_kernel,
-    _py_l2,
     _seq_pair_rowsum,
+    _sq_dists,
 )
 
 
@@ -93,7 +96,16 @@ def test_folds_bit_identical_to_jvm(spark):
         bc = pa.array([b], type=pa.list_(pa.float64()))
         assert repr(float(_seq_pair_rowsum(ac, bc, "dot")[0])) == repr(jvm[i][0])
         assert repr(float(_seq_pair_rowsum(ac, bc, "l2")[0])) == repr(jvm[i][1])
-        assert repr(_py_l2(a, b)) == repr(jvm[i][1])
+        # one query row against a one-row codebook, both ways round: the
+        # driver ranks cells as (q-c)^2, the JVM fold computes (a-b)^2
+        qa, qb = np.array([a]), np.array([b])
+        assert repr(float(_sq_dists(qa, qb)[0, 0])) == repr(jvm[i][1])
+        assert repr(float(_sq_dists(qb, qa)[0, 0])) == repr(jvm[i][1])
+
+
+def test_sq_dists_width_mismatch_raises():
+    with pytest.raises(ValueError):
+        _sq_dists(np.zeros((2, 3)), np.zeros((4, 2)))
 
 
 def test_cosv_kernel_bit_identical_to_jvm(spark):
@@ -226,3 +238,94 @@ def test_assign_kernel_subspaced_matches_jvm(spark):
     assert {k: (c, repr(d)) for k, (c, d) in got.items()} == {
         k: (c, repr(d)) for k, (c, d) in jvm.items()
     }
+
+
+# --- one vector-scoring core --------------------------------------------------
+#
+# Squared L2 used to be written out in six places (a second JVM fold inside
+# sample_kcenter, a driver-side Python loop, three NumPy loops and a dead
+# operators/ivf.py with its own k-means), and the k-means codebook round was
+# pasted into three query entries.  The guards below keep one form each: the
+# JVM folds are _dot/_l2, the rows x codebook loop is _sq_dists, and the
+# seed/assign/decimal-mean/collect round is _lloyd_codebook.
+
+PKG = Path(__file__).resolve().parent.parent / "lakehouse_sfc_spark"
+
+
+def _is_f_call(node, attr):
+    return (
+        isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == attr
+        and isinstance(node.func.value, ast.Name)
+        and node.func.value.id == "F"
+    )
+
+
+def _calls_by_function(match):
+    """{(module path, innermost enclosing def)} of every call ``match``
+    accepts, over the whole package."""
+    found = set()
+
+    def walk(node, fn, rel):
+        for child in ast.iter_child_nodes(node):
+            inner = fn
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                inner = child.name
+            if match(child):
+                found.add((rel, inner))
+            walk(child, inner, rel)
+
+    for p in sorted(PKG.rglob("*.py")):
+        rel = str(p.relative_to(PKG))
+        walk(ast.parse(p.read_text(encoding="utf-8")), None, rel)
+    return found
+
+
+def test_jvm_pair_fold_only_in_dot_and_l2():
+    folds = _calls_by_function(
+        lambda n: _is_f_call(n, "aggregate")
+        and bool(n.args)
+        and _is_f_call(n.args[0], "zip_with")
+    )
+    assert folds == {
+        ("queries/datapipe.py", "_dot"),
+        ("queries/datapipe.py", "_l2"),
+    }, f"pair folds outside _dot/_l2: {sorted(folds)}"
+
+
+def _is_decimal_mean(n):
+    if not (_is_f_call(n, "sum") and n.args):
+        return False
+    arg = n.args[0]
+    return (
+        isinstance(arg, ast.Call)
+        and isinstance(arg.func, ast.Attribute)
+        and arg.func.attr == "cast"
+        and any(
+            isinstance(a, ast.Constant) and a.value == "decimal(18,9)"
+            for a in arg.args
+        )
+    )
+
+
+def test_codebook_round_only_in_lloyd_helper():
+    collects = _calls_by_function(
+        lambda n: isinstance(n, ast.Call)
+        and isinstance(n.func, ast.Name)
+        and n.func.id == "_collect_codebook"
+    )
+    means = _calls_by_function(_is_decimal_mean)
+    owner = {("queries/datapipe.py", "_lloyd_codebook")}
+    assert collects == owner, f"codebook collected in {sorted(collects)}"
+    assert means == owner, f"decimal centroid mean in {sorted(means)}"
+
+
+def test_no_second_l2_implementation():
+    assert not (PKG / "operators" / "ivf.py").exists()
+    bad = sorted(
+        str(p.relative_to(PKG))
+        for p in PKG.rglob("*.py")
+        if "_py_l2" in p.read_text(encoding="utf-8")
+    )
+    assert not bad, f"{bad} still define or call _py_l2"
