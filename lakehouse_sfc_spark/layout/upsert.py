@@ -101,7 +101,7 @@ def scoped_upsert(
     the full-table ``keyed_upsert`` when it doesn't.
     """
     from lakehouse_sfc_spark.layout.stats import read_sidecar, write_sidecar
-    from lakehouse_sfc_spark.table.pruning import Pred, prune_files
+    from lakehouse_sfc_spark.table.pruning import Pred, prune_files, sidecar_relation
 
     spark = batch.sparkSession
     sidecar = read_sidecar(base_path)
@@ -136,13 +136,12 @@ def scoped_upsert(
     affected_set = set(affected)
     untouched = [f for f in sidecar["files"] if f not in affected_set]
 
-    base_schema_df = spark.read.parquet(base_path)
-    aligned = align_schema(batch, base_schema_df)
-    if affected:
-        merged_input = spark.read.parquet(*affected).unionByName(aligned)
-    else:
-        merged_input = aligned
-    merged = dedup_latest(merged_input, record_keys, precombine)
+    # the affected files (maybe none) read with the table's schema, which
+    # is resolved once per table state: no inference job per upsert
+    base = sidecar_relation(spark, base_path, sidecar, affected)
+    merged = dedup_latest(
+        base.unionByName(align_schema(batch, base)), record_keys, precombine
+    )
 
     tmp = base_path.rstrip("/") + ".__scoped_tmp"
     stats_cols = write_kwargs.pop(

@@ -583,15 +583,16 @@ def _sq_dists(E, C):
     return D
 
 
-def _nearest_centroid_kernel(cent_by_key, emit_dist=False):
+def _nearest_centroid_kernel(cent_by_key, vec, key, emit_dist=False):
     """Kernel factory for the k-means/PQ ASSIGNMENT pass: every input row's
-    vector is scored against a driver-collected codebook and the nearest
-    centroid id (ties -> lowest cid, exactly ``min_by(cid, struct(d, cid))``)
-    is appended as ``cid`` (+ ``dist`` when emit_dist).  All input columns
-    pass through unchanged.
+    vector (column ``vec``) is scored against a driver-collected codebook
+    and the nearest centroid id (ties -> lowest cid, exactly
+    ``min_by(cid, struct(d, cid))``) is appended as ``cid`` (+ ``dist`` when
+    emit_dist).  All input columns pass through unchanged.
 
     ``cent_by_key``: {subspace key -> (cids sorted ascending, (K, d) centroid
-    matrix)}; key None means un-subspaced (the input has no ``s`` column).
+    matrix)}, looked up by each row's ``key`` column; ``key`` None means
+    un-subspaced (one codebook under the key None).
     Distances come from ``_sq_dists`` (bit-identical to the JVM ``_l2``
     fold), and np.argmin's first-minimum rule on ascending cids reproduces
     the struct tie-break.  Distances are sums of squares, so -0.0 never
@@ -609,21 +610,16 @@ def _nearest_centroid_kernel(cent_by_key, emit_dist=False):
             n = len(rb)
             if n == 0:
                 continue
-            E = _rows_matrix(rb.column("e" if "e" in rb.schema.names else "emb"))
-            keys = (
-                rb.column("s").to_numpy(zero_copy_only=False)
-                if "s" in rb.schema.names
-                else None
-            )
+            E = _rows_matrix(rb.column(vec))
             best_cid = np.empty(n, dtype=np.int64)
             best_d = np.empty(n, dtype=np.float64)
-            groups = (
-                [(None, np.arange(n))]
-                if keys is None
-                else [(k, np.nonzero(keys == k)[0]) for k in np.unique(keys)]
-            )
-            for key, rows in groups:
-                cids, C = cent_by_key[key]
+            if key is None:
+                groups = [(None, np.arange(n))]
+            else:
+                keys = rb.column(key).to_numpy(zero_copy_only=False)
+                groups = [(k, np.nonzero(keys == k)[0]) for k in np.unique(keys)]
+            for k, rows in groups:
+                cids, C = cent_by_key[k]
                 D = _sq_dists(E[rows], C)
                 b = D.argmin(axis=1)
                 best_cid[rows] = cids[b]
@@ -678,7 +674,7 @@ def _lloyd_codebook(rel, key, vec, k):
     )
     key_schema = f"{key} int, " if key else ""
     a1 = rel.select(*cols).mapInArrow(
-        _nearest_centroid_kernel(seed_book),
+        _nearest_centroid_kernel(seed_book, vec, key),
         f"vec_id long, {key_schema}{vec} array<double>, cid long",
     )
     cent = (
@@ -1785,7 +1781,7 @@ def ann_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         c.select("vec_id", "emb", "nrm")
         .mapInArrow(
-            _nearest_centroid_kernel(cent_book),
+            _nearest_centroid_kernel(cent_book, "emb", None),
             "vec_id long, emb array<double>, nrm double, cid long",
         )
         .filter(
@@ -5519,7 +5515,7 @@ def ann_pq_distortion_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     sub = materialize_once(sub)
     cent_book = _lloyd_codebook(sub, "s", "e", _PQ_K)
     err = sub.select("vec_id", "s", "e").mapInArrow(
-        _nearest_centroid_kernel(cent_book, emit_dist=True),
+        _nearest_centroid_kernel(cent_book, "e", "s", emit_dist=True),
         "vec_id long, s int, e array<double>, cid long, dist double",
     ).withColumnRenamed("dist", "err")
     return (

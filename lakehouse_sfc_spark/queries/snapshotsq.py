@@ -25,16 +25,23 @@ from __future__ import annotations
 
 import datetime
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lakehouse_sfc_spark.queries.registry import dsum, register, sql_dsum
-from lakehouse_sfc_spark.sources.loader import build_once, load_table, scratch_dir
+from lakehouse_sfc_spark.sources.loader import (
+    build_once,
+    load_table,
+    materialize_once,
+    scratch_dir,
+)
 from lakehouse_sfc_spark.table import Pred
 from lakehouse_sfc_spark.table.snapshots import SnapshotTable
 
-_VERSION = "v3"  # bump when the commit-chain semantics change
+_VERSION = "v4"  # bump when the commit-chain semantics change
 _CUTOFF = datetime.datetime(1997, 1, 1)
 _COLS = ["o_orderkey", "o_custkey", "o_totalprice", "o_orderdate"]
 
@@ -458,21 +465,25 @@ def snap_cdf_chained(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _restore_table(spark: SparkSession, sf_dir: str) -> SnapshotTable:
     """CREATE → UPSERT → DELETE → RESTORE(1) chain for snap_restore, cached
     like the main chain (own root — restore mutates history, so it must not
-    share the table the other snapshot queries replay)."""
+    share the table the other snapshot queries replay), with snap_tags'
+    three tags set in the same build."""
 
     def build(path: str) -> None:
         orders = _orders(spark, sf_dir)
         t = _create_linear(orders, path)
         _upsert_then_delete(t, orders)
         t.restore(1)
+        t.set_tag("initial", 0)
+        t.set_tag("post-upsert", 1)
+        t.set_tag("restored", 3)
 
     return _chain(spark, sf_dir, "orders_restore", build)
 
 
 def _wap_table(spark: SparkSession, sf_dir: str) -> SnapshotTable:
-    """CREATE → stage_append(good) → publish_branch chain for snap_wap
-    (own root; the published chain is immutable after the build, and the
-    query stages/re-stages a throwaway AUDIT branch on top per run)."""
+    """CREATE → stage_append(good) → publish_branch chain for snap_wap,
+    with a BAD batch (negative prices) left staged on the ``audit`` branch
+    (own root; built once, read-only afterwards)."""
 
     def build(path: str) -> None:
         orders = _orders(spark, sf_dir)
@@ -482,6 +493,12 @@ def _wap_table(spark: SparkSession, sf_dir: str) -> SnapshotTable:
         )
         t.stage_append("etl-good", good, num_files=2)
         t.publish_branch("etl-good")
+        bad = (
+            orders.filter(F.col("o_orderkey") % 13 == 0)
+            .withColumn("o_orderkey", F.col("o_orderkey") + 300_000_000)
+            .withColumn("o_totalprice", F.lit(-1.0))
+        )
+        t.stage_append("audit", bad, num_files=2)
 
     return _chain(spark, sf_dir, "orders_wap", build)
 
@@ -520,24 +537,14 @@ def _wap_table(spark: SparkSession, sf_dir: str) -> SnapshotTable:
 )
 def snap_wap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Write-Audit-Publish (Iceberg WAP / audit branches): a good batch
-    was staged, audited, and PUBLISHED as v1; each run then stages a BAD
-    batch (negative prices) on an audit branch and reads it back — the
+    was staged, audited, and PUBLISHED as v1, and a BAD batch (negative
+    prices) sits staged on an audit branch; each run reads it back — the
     audit view shows the violations while main (v0/v1) never contains
-    them, which is the entire WAP guarantee.  The branch is re-staged per
-    run (discard + stage); published history is immutable.
+    them, which is the entire WAP guarantee.
     n_violations is the audit verdict column: >0 on the staged view, 0 on
     every published version (table/snapshots.py::stage_append/
     read_branch/publish_branch/discard_branch)."""
     t = _wap_table(spark, sf_dir)
-    orders = _orders(spark, sf_dir)
-    bad = (
-        orders.filter(F.col("o_orderkey") % 13 == 0)
-        .withColumn("o_orderkey", F.col("o_orderkey") + 300_000_000)
-        .withColumn("o_totalprice", F.lit(-1.0))
-    )
-    if os.path.exists(t._branch_path("audit")):
-        t.discard_branch("audit")
-    t.stage_append("audit", bad, num_files=2)
 
     def _agg(df: DataFrame, phase: str) -> DataFrame:
         return df.agg(
@@ -691,9 +698,6 @@ def snap_tags(spark: SparkSession, sf_dir: str) -> DataFrame:
     commit sees the restored (v1) data, which the oracle asserts by
     reusing state1 for both."""
     t = _restore_table(spark, sf_dir)
-    t.set_tag("initial", 0)
-    t.set_tag("post-upsert", 1)
-    t.set_tag("restored", 3)
     out = None
     for name in sorted(t.tags()):
         v = t.tags()[name]
@@ -1034,35 +1038,41 @@ def snap_orphan_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     100-TB shape: one object-store LIST of the table prefix diffed
     against the manifest union — O(files) metadata work, no data read;
     Iceberg runs the same plan as a distributed anti-join of the listing
-    against the manifest file set."""
-    t = _orphan_table(spark, sf_dir)
-    # plant fresh orphans EVERY run (idempotent: removed again below)
-    import shutil
+    against the manifest file set.
 
-    src = next(iter(t.manifest()["files"]))
-    for i in range(3):
-        shutil.copyfile(src, os.path.join(t.path, f"orphan-{i:02d}.parquet"))
-    # older_than_s=0: single-writer demo context (the grace window
-    # exists to protect concurrent in-flight writers; here there are none
-    # and the freshly-planted orphans must be visible immediately)
-    dry = t.remove_orphans(dry_run=True, older_than_s=0.0)
-    real = t.remove_orphans(older_than_s=0.0)
-    after = t.remove_orphans(dry_run=True, older_than_s=0.0)
-    return (
-        t.read()
-        .agg(
-            F.lit(dry["n_orphans"]).cast("bigint").alias("n_orphans_found"),
-            F.lit(real["n_orphans"]).cast("bigint").alias(
-                "n_orphans_removed"
-            ),
-            F.lit(real["n_live"]).cast("bigint").alias("n_live_files"),
-            F.lit(after["n_orphans"]).cast("bigint").alias(
-                "n_orphans_after"
-            ),
-            F.count(F.lit(1)).alias("cnt"),
-            dsum("o_totalprice", "sum_price"),
+    The orphans are planted in a per-run copy of the cached chain, so the
+    published chain stays read-only."""
+    work = tempfile.mkdtemp(prefix="snap-orphans-")
+    try:
+        src = _orphan_table(spark, sf_dir).path
+        t = SnapshotTable(spark, shutil.copytree(src, os.path.join(work, "t")))
+        live = next(iter(t.manifest()["files"]))
+        for i in range(3):
+            shutil.copyfile(live, os.path.join(t.path, f"orphan-{i:02d}.parquet"))
+        # older_than_s=0: single-writer demo context (the grace window
+        # exists to protect concurrent in-flight writers; here there are
+        # none and the freshly-planted orphans must be visible immediately)
+        dry = t.remove_orphans(dry_run=True, older_than_s=0.0)
+        real = t.remove_orphans(older_than_s=0.0)
+        after = t.remove_orphans(dry_run=True, older_than_s=0.0)
+        out = materialize_once(
+            t.read().agg(
+                F.lit(dry["n_orphans"]).cast("bigint").alias("n_orphans_found"),
+                F.lit(real["n_orphans"]).cast("bigint").alias(
+                    "n_orphans_removed"
+                ),
+                F.lit(real["n_live"]).cast("bigint").alias("n_live_files"),
+                F.lit(after["n_orphans"]).cast("bigint").alias(
+                    "n_orphans_after"
+                ),
+                F.count(F.lit(1)).alias("cnt"),
+                dsum("o_totalprice", "sum_price"),
+            )
         )
-    )
+        out.count()  # materialize before the copy disappears
+        return out
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
 
 
 # --- cherry-pick --------------------------------------------------------------

@@ -368,9 +368,13 @@ def scratch_dir(kind: str, sf_dir: str, tables: tuple[str, ...]) -> str:
     """``<repo>/.scratch/<kind>/<dataset-basename>/<fingerprint>`` for the
     derived cache ``kind`` (a slash path carrying its version tag, e.g.
     ``"graph_edges/v1"``).  Fingerprint-keyed on ``tables`` of ``sf_dir``
-    so a regenerated (or same-named) dataset never serves a stale cache;
-    stale sibling fingerprints of the SAME basename are pruned on first
-    miss, so the footprint stays one copy per dataset, not one per mtime."""
+    so a regenerated (or same-named) dataset never serves a stale cache.
+    On first miss, stale sibling fingerprints of the SAME basename are
+    pruned, and so are the other versions of a kind that ends in a
+    ``v<N>`` tag (``snap_cache/v3`` beside ``snap_cache/v4``; siblings not
+    named ``v<M>`` stay), so the footprint stays one copy per dataset, not
+    one per mtime or version bump."""
+    import re
     import shutil
 
     fp = dataset_fingerprint(sf_dir, tables)
@@ -378,7 +382,14 @@ def scratch_dir(kind: str, sf_dir: str, tables: tuple[str, ...]) -> str:
         _SCRATCH, kind, os.path.basename(os.path.normpath(sf_dir))
     )
     path = os.path.join(parent, fp)
-    if not os.path.exists(path) and os.path.isdir(parent):
+    if os.path.exists(path):
+        return path
+    versions, tag = os.path.split(os.path.join(_SCRATCH, kind))
+    if re.fullmatch(r"v\d+", tag) and os.path.isdir(versions):
+        for old in os.listdir(versions):
+            if old != tag and re.fullmatch(r"v\d+", old):
+                shutil.rmtree(os.path.join(versions, old), ignore_errors=True)
+    if os.path.isdir(parent):
         for stale in os.listdir(parent):
             # Keep in-flight tmp siblings of the CURRENT fingerprint
             # (``<fp>.tmp.<pid>``, see _atomic_cache_write) — pruning them

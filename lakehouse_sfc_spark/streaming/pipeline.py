@@ -578,6 +578,42 @@ def run_stream_static_join(
     )
 
 
+def _upsert_stream(
+    spark: SparkSession, stream: DataFrame, tbl: str, key: str, timeout_s: int
+) -> DataFrame:
+    """Drain ``stream`` into the sidecar table ``tbl`` and read it back:
+    each micro-batch is deduplicated latest-wins on ``key`` by ``ts``; the
+    first bootstraps the table (``layout_write``), later ones MERGE through
+    ``scoped_upsert``."""
+    import shutil
+
+    from lakehouse_sfc_spark.layout.upsert import dedup_latest, scoped_upsert
+    from lakehouse_sfc_spark.layout.writer import layout_write
+
+    def _merge(batch_df, batch_id: int) -> None:
+        batch = dedup_latest(batch_df, [key], "ts")
+        if not os.path.isdir(tbl):
+            layout_write(batch, tbl, stats_cols=[key])
+        else:
+            scoped_upsert(tbl, batch, [key], "ts", stats_cols=[key])
+
+    checkpoint = tbl + ".ckpt"
+    with _capped_state_partitions(spark):
+        q = (
+            stream.writeStream.foreachBatch(_merge)
+            .option("checkpointLocation", checkpoint)
+            .trigger(availableNow=True)
+            .start()
+        )
+        try:
+            q.awaitTermination(timeout_s)
+        finally:
+            if q.isActive:
+                q.stop()
+            shutil.rmtree(checkpoint, ignore_errors=True)
+    return spark.read.parquet(tbl)
+
+
 def stream_upsert_ingest(
     spark: SparkSession,
     sf_dir: str,
@@ -602,8 +638,6 @@ def stream_upsert_ingest(
     over the ORIGINAL events — the duplicates collapse)."""
     import shutil
 
-    from lakehouse_sfc_spark.layout.upsert import dedup_latest, scoped_upsert
-    from lakehouse_sfc_spark.layout.writer import layout_write
     from lakehouse_sfc_spark.sources.loader import load_table
 
     _prev_tz = spark.conf.get("spark.sql.session.timeZone")
@@ -623,33 +657,7 @@ def stream_upsert_ingest(
             .option("maxFilesPerTrigger", 1)
             .parquet(src_dir)
         )
-
-        def _merge(batch_df, batch_id: int) -> None:
-            batch = dedup_latest(batch_df, ["event_id"], "ts")
-            if not os.path.isdir(tbl):
-                layout_write(batch, tbl, stats_cols=["event_id"])
-            else:
-                scoped_upsert(
-                    tbl, batch, ["event_id"], "ts",
-                    stats_cols=["event_id"],
-                )
-
-        checkpoint = _mkworkdir("lakehouse-sfc-ingest-ckpt-")
-        with _capped_state_partitions(spark):
-            q = (
-                stream.writeStream.foreachBatch(_merge)
-                .option("checkpointLocation", checkpoint)
-                .trigger(availableNow=True)
-                .start()
-            )
-            try:
-                q.awaitTermination(timeout_s)
-            finally:
-                if q.isActive:
-                    q.stop()
-                shutil.rmtree(checkpoint, ignore_errors=True)
-
-        final = spark.read.parquet(tbl)
+        final = _upsert_stream(spark, stream, tbl, "event_id", timeout_s)
         out = materialize_once(
             final.groupBy("event_type").agg(
                 F.count(F.lit(1)).alias("cnt"),
@@ -1249,8 +1257,6 @@ def stream_cdc_tombstones(
     arrival order."""
     import shutil
 
-    from lakehouse_sfc_spark.layout.upsert import dedup_latest, scoped_upsert
-    from lakehouse_sfc_spark.layout.writer import layout_write
     from lakehouse_sfc_spark.sources.loader import load_table
 
     _prev_tz = spark.conf.get("spark.sql.session.timeZone")
@@ -1291,32 +1297,7 @@ def stream_cdc_tombstones(
             .option("maxFilesPerTrigger", 1)
             .parquet(src_dir)
         )
-
-        def _apply(batch_df, batch_id: int) -> None:
-            batch = dedup_latest(batch_df, ["user_id"], "ts")
-            if not os.path.isdir(tbl):
-                layout_write(batch, tbl, stats_cols=["user_id"])
-            else:
-                scoped_upsert(
-                    tbl, batch, ["user_id"], "ts", stats_cols=["user_id"]
-                )
-
-        checkpoint = _mkworkdir("lakehouse-sfc-cdc-ckpt-")
-        with _capped_state_partitions(spark):
-            q = (
-                stream.writeStream.foreachBatch(_apply)
-                .option("checkpointLocation", checkpoint)
-                .trigger(availableNow=True)
-                .start()
-            )
-            try:
-                q.awaitTermination(timeout_s)
-            finally:
-                if q.isActive:
-                    q.stop()
-                shutil.rmtree(checkpoint, ignore_errors=True)
-
-        final = spark.read.parquet(tbl)
+        final = _upsert_stream(spark, stream, tbl, "user_id", timeout_s)
         out = materialize_once(
             final.filter(F.col("op") == "upsert")
             .select(

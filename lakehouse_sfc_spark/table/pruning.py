@@ -9,9 +9,10 @@ pruning and predicate pushdown inside them, so the two layers compose.
 
 Survivors are read as ``spark.read.schema(schema).option("basePath",
 root).parquet(*survivors)``.  The schema is resolved once per table state
-(every file the sidecar lists, by size and mtime), as Delta and Iceberg
-keep it in table metadata, so building a pruned scan launches no Spark job
-and reads no footer; ``basePath`` keeps hive partition columns in it.
+(every file the sidecar lists, by size and mtime) or, for a snapshot
+table, is the one its manifest records, as Delta and Iceberg keep it in
+table metadata, so building a pruned scan launches no Spark job and reads
+no footer; ``basePath`` keeps hive partition columns in it.
 
 All predicates here are null-rejecting (eq/range/in never match NULL), so a
 file whose min/max are both NULL for a predicate column (all-null chunk)
@@ -204,8 +205,11 @@ _SCHEMA_CACHE: dict[tuple, StructType] = {}
 # relation and lists the files on the driver, and layout queries build a
 # fresh scan per run.  The per-query predicate is applied ON TOP of the
 # cached base relation, so different predicates with the same survivor
-# set share it.
+# set share it.  An entry holds for the schema it was read with
+# (``_READ_WITH``): after a snapshot delete one file set can come back
+# under a wider schema.
 _PRUNED_CACHE: dict[tuple, DataFrame] = {}
+_READ_WITH: dict[tuple, StructType] = {}
 _PRUNED_CACHE_MAX = 256
 
 
@@ -218,15 +222,31 @@ def _table_schema(spark: SparkSession, root: str, files: list[str]) -> StructTyp
 
 
 def _survivors_relation(
-    spark: SparkSession, root: str, schema: StructType, survivors: list[str]
+    spark: SparkSession, root: str | None, schema: StructType, survivors: list[str]
 ) -> DataFrame:
-    return _memo(
-        _PRUNED_CACHE,
-        _fingerprint(spark, survivors),
-        lambda: spark.read.schema(schema)
-        .option("basePath", root)
-        .parquet(*survivors),
-    )
+    """Hive partition columns come from directories below ``root``; None
+    for a snapshot table, whose files (a shallow clone's source files too)
+    sit directly in their table directories."""
+
+    def build() -> DataFrame:
+        reader = spark.read.schema(schema)
+        if root is not None:
+            reader = reader.option("basePath", root)
+        return reader.parquet(*survivors)
+
+    key = _fingerprint(spark, survivors)
+    if key is not None and _READ_WITH.get(key) != schema:
+        _PRUNED_CACHE.pop(key, None)
+        if len(_READ_WITH) >= _PRUNED_CACHE_MAX:
+            _READ_WITH.clear()
+        _READ_WITH[key] = schema
+    return _memo(_PRUNED_CACHE, key, build)
+
+
+def read_listed(spark: SparkSession, schema: StructType, files: list[str]) -> DataFrame:
+    """Snapshot-table ``files`` read with ``schema``, without a Spark job; a
+    column a file lacks reads as nulls, and no files is an empty relation."""
+    return _survivors_relation(spark, None, schema, files)
 
 
 def sidecar_relation(
@@ -237,10 +257,24 @@ def sidecar_relation(
     this table state's schema is not resolved yet."""
     root = os.path.abspath(path)
     schema = _table_schema(spark, root, list(sidecar["files"]))
-    if not files:
-        # empty relation with the table's schema
-        return spark.read.schema(schema).option("basePath", root).parquet(root).limit(0)
     return _survivors_relation(spark, root, schema, files)
+
+
+def _filtered(df: DataFrame, predicates: list[Pred]) -> DataFrame:
+    cond = preds_to_column(predicates)
+    return df.filter(cond) if cond is not None else df
+
+
+def scan_listed(
+    spark: SparkSession, root: str | None, stats: dict, schema: StructType,
+    predicates: list[Pred],
+) -> tuple[DataFrame, dict]:
+    """Prune with per-file ``stats`` (a sidecar or a snapshot manifest's),
+    read survivors with ``schema`` as ``_survivors_relation`` does, apply
+    the full predicate.  Returns (df, metrics)."""
+    survivors, metrics = prune_files(stats, predicates)
+    df = _survivors_relation(spark, root, schema, survivors)
+    return _filtered(df, predicates), metrics
 
 
 def read_pruned(
@@ -249,16 +283,15 @@ def read_pruned(
     """Prune with the sidecar (if present), read survivors, apply the full
     predicate.  Returns (df, metrics)."""
     sidecar = read_sidecar(path)
+    if sidecar is not None and sidecar["files"]:
+        root = os.path.abspath(path)
+        schema = _table_schema(spark, root, list(sidecar["files"]))
+        return scan_listed(spark, root, sidecar, schema, predicates)
+    df = spark.read.parquet(path)
     if sidecar is None:
-        df = spark.read.parquet(path)
         n = len(df.inputFiles())
         metrics = {"files_total": n, "files_scanned": n}
     else:
-        survivors, metrics = prune_files(sidecar, predicates)
-        if not sidecar["files"]:
-            # no listed file to take a schema from: the directory decides
-            df = spark.read.parquet(path).limit(0)
-        else:
-            df = sidecar_relation(spark, path, sidecar, survivors)
-    cond = preds_to_column(predicates)
-    return (df.filter(cond) if cond is not None else df), metrics
+        # no listed file to take a schema from: the directory decides
+        df, metrics = df.limit(0), prune_files(sidecar, predicates)[1]
+    return _filtered(df, predicates), metrics

@@ -20,6 +20,12 @@ are ``../<source>/...``), so a table — or a table together with its clones
 absolute local paths.  Manifests keyed by older absolute ``file:`` URIs
 still read.  WAP branch files use the same key format.
 
+A manifest's ``schema`` is the only schema of its version: every read
+of its files goes through ``table.pruning.read_listed`` with it (no
+inference, no Spark job to build; a file lacking a column reads nulls).
+A commit publishes the parent's fields, then the written rows' new
+columns (``_published_schema``).
+
 Every mutation stages new files, then publishes a new manifest — the
 manifest write IS the commit point, files are never mutated or renamed
 after publish, so readers of any version are isolated from concurrent
@@ -50,6 +56,7 @@ Scale notes (100 TB)
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import shutil
@@ -67,10 +74,33 @@ from lakehouse_sfc_spark.layout.stats import (
 from lakehouse_sfc_spark.layout.upsert import dedup_latest
 from lakehouse_sfc_spark.layout.writer import layout_write
 from lakehouse_sfc_spark.sources.loader import materialize_once
-from lakehouse_sfc_spark.table.pruning import Pred, prune_files
+from lakehouse_sfc_spark.table.pruning import (
+    Pred,
+    preds_to_column,
+    prune_files,
+    read_listed,
+    scan_listed,
+)
 
 _LOG_DIR = "_log"
 _FILE_LISTS = ("files", "staged_files")  # keyed by data file
+
+
+def _published_schema(parent: dict, df: DataFrame) -> StructType:
+    """The schema a commit that writes ``df`` publishes: the parent's
+    fields, in its order and with its types, then ``df``'s new columns.  A
+    written column whose type differs from the table's raises."""
+    schema = StructType.fromJson(parent["schema"])
+    have = {f.name: f.dataType.simpleString() for f in schema.fields}
+    for f in df.schema.fields:
+        if f.name not in have:
+            schema.add(f)
+        elif f.dataType.simpleString() != have[f.name]:
+            raise ValueError(
+                f"column {f.name!r} is written as "
+                f"{f.dataType.simpleString()} but the table has {have[f.name]}"
+            )
+    return schema
 
 
 def _manifest_path(path: str, version: int) -> str:
@@ -344,8 +374,8 @@ class SnapshotTable:
 
     def append(self, df: DataFrame, num_files: int | None = None) -> dict:
         """Blind append (Hudi bulk_insert / Delta append).  New columns are
-        allowed — historical files keep their narrower schema and reads
-        merge (schema evolution)."""
+        allowed (schema evolution): the new version's schema gains them,
+        and historical files, which lack them, read them as nulls."""
         parent = self.manifest()
         self._enforce_constraints(parent, df)
         v = parent["version"] + 1
@@ -357,12 +387,13 @@ class SnapshotTable:
             extra = {
                 "lineage": {**lin, "next_row_id": self._lineage_next(df, lin)}
             }
+        schema = _published_schema(parent, df)
         new = self._stage(
             df, v, parent["stats_cols"], num_files=num_files,
             **self._spec_kwargs(parent),
         )
         return self._publish(
-            v, "APPEND", {**parent["files"], **new}, df.schema,
+            v, "APPEND", {**parent["files"], **new}, schema,
             parent["stats_cols"], extra=self._carry(parent, extra),
         )
 
@@ -429,30 +460,56 @@ class SnapshotTable:
             keep = {}
         if not affected:
             return parent
-        df = (
-            self.spark.read.option("mergeSchema", "true")
-            .parquet(*affected)
-        )
         new = self._stage(
-            df, v, parent["stats_cols"], layout, layout_cols, num_files
+            self._read_files(parent, affected), v, parent["stats_cols"],
+            layout, layout_cols, num_files,
         )
         return self._publish(
             v,
             "OPTIMIZE",
             {**keep, **new},
-            # the parent's schema, NOT df.schema: a predicate-scoped rewrite
-            # reads only overlapping files, and publishing their (possibly
-            # pre-evolution) narrower schema would drop evolved columns from
-            # the manifest even though carried files still hold them
             StructType.fromJson(parent["schema"]),
             parent["stats_cols"],
             extra=self._carry(parent),
         )
 
+    def _read_files(self, m: dict, files) -> DataFrame:
+        """``files`` read with the schema the manifest (or branch) ``m``
+        records; a column a file lacks reads as nulls."""
+        return read_listed(
+            self.spark, StructType.fromJson(m["schema"]), sorted(files)
+        )
+
+    @staticmethod
+    def _stats(m: dict) -> dict:
+        """``m``'s per-file stats in the sidecar shape ``prune_files`` reads."""
+        return {"columns": m["stats_cols"], "files": m["files"]}
+
     def _affected_files(self, parent: dict, preds: list[Pred]) -> list[str]:
-        pseudo = {"columns": parent["stats_cols"], "files": parent["files"]}
-        affected, _ = prune_files(pseudo, preds)
+        """Files whose stats may hold a row matching ``preds``; predicates
+        on columns without stats never prune."""
+        affected, _ = prune_files(self._stats(parent), preds)
         return affected
+
+    def _key_scope(
+        self, parent: dict, rows: DataFrame, record_keys: list[str]
+    ) -> tuple[list[str], dict]:
+        """The parent's files split by ``rows``' record-key bounds: those
+        whose key stats overlap them (to rewrite) and the untouched rest
+        (carried by reference)."""
+        keys = [k for k in record_keys if k in parent["stats_cols"]]
+        preds = []
+        if keys:
+            bounds = rows.agg(
+                *[F.min(k).alias(f"lo_{k}") for k in keys],
+                *[F.max(k).alias(f"hi_{k}") for k in keys],
+            ).collect()[0]
+            preds = [
+                Pred(k, "between", (bounds[f"lo_{k}"], bounds[f"hi_{k}"]))
+                for k in keys
+            ]
+        affected = self._affected_files(parent, preds)
+        return affected, self._untouched(parent, affected)
 
     @staticmethod
     def _untouched(parent: dict, affected: list[str]) -> dict:
@@ -474,23 +531,9 @@ class SnapshotTable:
         parent = self.manifest()
         self._enforce_constraints(parent, batch)
         v = parent["version"] + 1
-        bounds = batch.agg(
-            *[F.min(k).alias(f"lo_{k}") for k in record_keys],
-            *[F.max(k).alias(f"hi_{k}") for k in record_keys],
-        ).collect()[0]
-        preds = [
-            Pred(k, "between", (bounds[f"lo_{k}"], bounds[f"hi_{k}"]))
-            for k in record_keys
-            if k in parent["stats_cols"]
-        ]
-        affected = (
-            self._affected_files(parent, preds)
-            if preds
-            else list(parent["files"])
-        )
-        untouched = self._untouched(parent, affected)
+        affected, untouched = self._key_scope(parent, batch, record_keys)
         lin = parent.get("lineage")
-        existing = None
+        existing = self._read_files(parent, affected)
         if lin:
             # batch rows carry no ids yet; _src breaks precombine TIES in the
             # batch's favor (Hudi latest-wins) WITHOUT letting the lineage
@@ -500,15 +543,8 @@ class SnapshotTable:
                 .withColumn("_last_updated_version", F.lit(v))
                 .withColumn("_src", F.lit(1))
             )
-        if affected:
-            existing = self.spark.read.option("mergeSchema", "true").parquet(
-                *affected
-            )
-            if lin:
-                existing = existing.withColumn("_src", F.lit(0))
-            merged_in = existing.unionByName(batch, allowMissingColumns=True)
-        else:
-            merged_in = batch
+            existing = existing.withColumn("_src", F.lit(0))
+        merged_in = existing.unionByName(batch, allowMissingColumns=True)
         extra: dict = {"files_rewritten": len(affected)}
         if lin:
             merged = materialize_once(  # _lineage_next + _stage reuse
@@ -521,6 +557,7 @@ class SnapshotTable:
             }
         else:
             merged = dedup_latest(merged_in, record_keys, precombine)
+        schema = _published_schema(parent, merged)
         new = self._stage(
             merged, v, parent["stats_cols"], num_files=num_files,
             **self._spec_kwargs(parent),
@@ -529,7 +566,7 @@ class SnapshotTable:
             v,
             "UPSERT",
             {**untouched, **new},
-            merged.schema,
+            schema,
             parent["stats_cols"],
             extra=self._carry(parent, extra),
         )
@@ -537,7 +574,7 @@ class SnapshotTable:
     def _lineage_merge(
         self,
         merged_in: DataFrame,
-        existing: DataFrame | None,
+        existing: DataFrame,
         record_keys: list[str],
         precombine: str,
         lin: dict,
@@ -558,17 +595,14 @@ class SnapshotTable:
             .filter(F.col("__rn") == 1)
             .drop("__rn", "_src")
         )
-        if existing is not None:
-            oldids = existing.select(
-                *record_keys, F.col("_row_id").alias("__old_rid")
-            )
-            winner = (
-                winner.join(oldids, record_keys, "left")
-                .withColumn(
-                    "_row_id", F.coalesce("_row_id", "__old_rid")
-                )
-                .drop("__old_rid")
-            )
+        oldids = existing.select(
+            *record_keys, F.col("_row_id").alias("__old_rid")
+        )
+        winner = (
+            winner.join(oldids, record_keys, "left")
+            .withColumn("_row_id", F.coalesce("_row_id", "__old_rid"))
+            .drop("__old_rid")
+        )
         wn = Window.partitionBy(F.col("_row_id").isNull()).orderBy(
             *lin["keys"]
         )
@@ -617,26 +651,8 @@ class SnapshotTable:
                 "aware) or extend merge_into with _lineage_merge"
             )
         v = parent["version"] + 1
-        bounds = source.agg(
-            *[F.min(k).alias(f"lo_{k}") for k in record_keys],
-            *[F.max(k).alias(f"hi_{k}") for k in record_keys],
-        ).collect()[0]
-        preds = [
-            Pred(k, "between", (bounds[f"lo_{k}"], bounds[f"hi_{k}"]))
-            for k in record_keys
-            if k in parent["stats_cols"]
-        ]
-        affected = (
-            self._affected_files(parent, preds)
-            if preds
-            else list(parent["files"])
-        )
-        untouched = self._untouched(parent, affected)
-        tgt = (
-            self.spark.read.option("mergeSchema", "true").parquet(*affected)
-            if affected
-            else self.spark.createDataFrame([], self.read().schema)
-        )
+        affected, untouched = self._key_scope(parent, source, record_keys)
+        tgt = self._read_files(parent, affected)
         src_keys = source.select(*record_keys).distinct()
         kept_tgt = tgt.join(F.broadcast(src_keys), record_keys, "left_anti")
         tgt_keys = tgt.select(*record_keys).distinct()
@@ -685,6 +701,7 @@ class SnapshotTable:
         # only to rows actually WRITTEN (Delta semantics) — a sentinel
         # payload on a delete row must not trip them.
         self._enforce_constraints(parent, written_src)
+        schema = _published_schema(parent, out)
         new = self._stage(
             out, v, parent["stats_cols"], num_files=num_files
         )
@@ -692,7 +709,7 @@ class SnapshotTable:
             v,
             "MERGE",
             {**untouched, **new},
-            out.schema,
+            schema,
             parent["stats_cols"],
             extra=self._carry(parent, {"files_rewritten": len(affected)}),
         )
@@ -702,34 +719,24 @@ class SnapshotTable:
         (by stats) are untouched; overlapping files are rewritten with the
         anti-predicate (Delta `DELETE WHERE` / Iceberg copy-on-write
         delete)."""
-        from lakehouse_sfc_spark.table.pruning import preds_to_column
-
         parent = self.manifest()
         v = parent["version"] + 1
-        prunable = [p for p in preds if p.col in parent["stats_cols"]]
-        affected = (
-            self._affected_files(parent, prunable)
-            if prunable
-            else list(parent["files"])
-        )
+        affected = self._affected_files(parent, preds)
         untouched = self._untouched(parent, affected)
         new: dict = {}
         if affected:
-            kept = (
-                self.spark.read.option("mergeSchema", "true")
-                .parquet(*affected)
-                .filter(~preds_to_column(preds))
+            kept = self._read_files(parent, affected).filter(
+                ~preds_to_column(preds)
             )
             new = self._stage(
                 kept, v, parent["stats_cols"], num_files=num_files,
                 **self._spec_kwargs(parent),
             )
-        schema = StructType.fromJson(parent["schema"])
         return self._publish(
             v,
             "DELETE",
             {**untouched, **new},
-            schema,
+            StructType.fromJson(parent["schema"]),
             parent["stats_cols"],
             extra=self._carry(parent, {"files_rewritten": len(affected)}),
         )
@@ -737,34 +744,18 @@ class SnapshotTable:
     # ------------------------------------------------------------------ read
 
     def read(self, version: int | None = None) -> DataFrame:
-        """Snapshot read, latest or ``versionAsOf`` (time travel).  Merges
-        schemas across commits so post-evolution reads see every column
-        (older files null-fill the new ones)."""
+        """Snapshot read, latest or ``versionAsOf`` (time travel), with the
+        schema that version's manifest records: files written before a
+        column was added read it as nulls.  Builds without a Spark job."""
         m = self.manifest(version)
-        files = sorted(m["files"])
-        if not files:
-            schema = StructType.fromJson(m["schema"])
-            return self.spark.createDataFrame([], schema)
-        return self.spark.read.option("mergeSchema", "true").parquet(*files)
+        return self._read_files(m, m["files"])
 
     def scan(self, preds: list[Pred], version: int | None = None) -> DataFrame:
         """Stats-pruned snapshot read: file skipping works on ANY version
         because each manifest carries its own per-file stats."""
         m = self.manifest(version)
-        pseudo = {"columns": m["stats_cols"], "files": m["files"]}
-        keep, _ = prune_files(
-            pseudo, [p for p in preds if p.col in m["stats_cols"]]
-        )
-        from lakehouse_sfc_spark.table.pruning import preds_to_column
-
-        if not keep:
-            schema = StructType.fromJson(m["schema"])
-            return self.spark.createDataFrame([], schema)
-        return (
-            self.spark.read.option("mergeSchema", "true")
-            .parquet(*sorted(keep))
-            .filter(preds_to_column(preds))
-        )
+        schema = StructType.fromJson(m["schema"])
+        return scan_listed(self.spark, None, self._stats(m), schema, preds)[0]
 
     def changes(
         self,
@@ -790,31 +781,20 @@ class SnapshotTable:
         are dropped by an md5-over-all-columns equality check computed
         DISTRIBUTED, inside the join."""
         a = self.manifest(v_from)["files"]
-        b = self.manifest(v_to)["files"]
-        removed = sorted(set(a) - set(b))
-        added = sorted(set(b) - set(a))
-        post = self.read(v_to)  # schema anchor (may be empty-file read)
-        schema_cols = post.columns
-
-        def _side(files: list[str]) -> DataFrame:
-            if not files:
-                return self.spark.createDataFrame([], post.schema)
-            df = self.spark.read.option("mergeSchema", "true").parquet(*files)
-            for c in schema_cols:
-                if c not in df.columns:
-                    df = df.withColumn(
-                        c, F.lit(None).cast(post.schema[c].dataType)
-                    )
-            return df.select(*schema_cols)
-
+        m = self.manifest(v_to)
+        b = m["files"]
+        # both sides read with v_to's schema: the columns of the change rows
+        pre_a = self._read_files(m, set(a) - set(b))
+        post_a = self._read_files(m, set(b) - set(a))
+        schema_cols = pre_a.columns
         fp = F.md5(
             F.concat_ws(
                 "\x1f", *[F.coalesce(F.col(c).cast("string"), F.lit("\x00"))
                           for c in schema_cols]
             )
         )
-        pre_a = _side(removed).withColumn("__fp", fp).alias("pre")
-        post_a = _side(added).withColumn("__fp", fp).alias("post")
+        pre_a = pre_a.withColumn("__fp", fp).alias("pre")
+        post_a = post_a.withColumn("__fp", fp).alias("post")
         on = None
         for k in record_keys:
             e = F.col(f"pre.{k}").eqNullSafe(F.col(f"post.{k}"))
@@ -887,10 +867,10 @@ class SnapshotTable:
             raise FileNotFoundError(f"no version {v} to tag at {self.path}")
         refs = self.tags()
         refs[name] = v
-        tmp = self._refs_path() + ".tmp"
+        tmp = f"{self._refs_path()}.{os.getpid()}.tmp"
         with open(tmp, "w") as fh:
             json.dump(refs, fh)
-        os.rename(tmp, self._refs_path())
+        os.replace(tmp, self._refs_path())
         return refs
 
     def read_tag(self, name: str) -> DataFrame:
@@ -918,6 +898,7 @@ class SnapshotTable:
         if os.path.exists(self._branch_path(name)):
             raise ValueError(f"branch {name!r} already staged")
         parent = self.manifest()
+        schema = _published_schema(parent, df)
         new = self._stage(
             df,
             -1,
@@ -932,7 +913,7 @@ class SnapshotTable:
             "ts": time.time(),
             "staged_files": new,
             "files": {**parent["files"], **new},
-            "schema": json.loads(df.schema.json()),
+            "schema": json.loads(schema.json()),
             "stats_cols": parent["stats_cols"],
         }
         _write_log(self._branch_path(name), b, self.path)
@@ -943,12 +924,7 @@ class SnapshotTable:
         main's files plus the staged ones — for DQ checks, row counts,
         reconciliation queries.  Reading never publishes."""
         b = _read_log(self._branch_path(name), self.path)
-        files = sorted(b["files"])
-        if not files:
-            return self.spark.createDataFrame(
-                [], StructType.fromJson(b["schema"])
-            )
-        return self.spark.read.option("mergeSchema", "true").parquet(*files)
+        return self._read_files(b, b["files"])
 
     def publish_branch(self, name: str) -> dict:
         """WAP step 3 (publish): fast-forward main to the audited branch —
@@ -967,12 +943,9 @@ class SnapshotTable:
         # other write path — the WAP audit is for checks BEYOND the
         # table's declared invariants, not a bypass of them (Iceberg
         # likewise validates on cherry-pick, not on stage).
-        staged = sorted(b["staged_files"])
-        if staged:
-            incoming = self.spark.read.option("mergeSchema", "true").parquet(
-                *staged
-            )
-            self._enforce_constraints(parent, incoming)
+        self._enforce_constraints(
+            parent, self._read_files(b, b["staged_files"])
+        )
         m = self._publish(
             parent["version"] + 1,
             "WAP_PUBLISH",
@@ -1055,22 +1028,12 @@ class SnapshotTable:
         vs = self.versions()
         keep_vs = vs[-retain_last:]
         drop_vs = vs[:-retain_last]
-        live: set[str] = set()
+        # a branch staged on an old base still needs that base's files for
+        # read_branch/publish_branch: vacuuming past the base must not
+        # strand an in-flight audit
+        live = self._branch_files()
         for v in keep_vs:
             live |= set(self.manifest(v)["files"])
-        # Staged WAP branches reference files through branch-*.json, not a
-        # version manifest: a branch staged on an old base still needs that
-        # base's files for read_branch/publish_branch.  Fold every staged
-        # branch's full file set (base + staged) into the live set so
-        # vacuuming past the base cannot strand an in-flight audit.
-        import glob as _glob
-
-        for bp in _glob.glob(
-            os.path.join(self.path, _LOG_DIR, "branch-*.json")
-        ):
-            b = _read_log(bp, self.path)
-            live |= set(b.get("files", []))
-            live |= set(b.get("staged_files", []))
         dead: set[str] = set()
         for v in drop_vs:
             dead |= set(self.manifest(v)["files"])
@@ -1087,6 +1050,14 @@ class SnapshotTable:
             "versions_expired": drop_vs,
             "versions_kept": keep_vs,
         }
+
+    def _branch_files(self) -> set[str]:
+        """Every file a staged WAP branch references, base and staged."""
+        live: set[str] = set()
+        for bp in glob.glob(os.path.join(self.path, _LOG_DIR, "branch-*.json")):
+            b = _read_log(bp, self.path)
+            live |= set(b.get("files", [])) | set(b.get("staged_files", []))
+        return live
 
     def cherry_pick(
         self,
@@ -1140,19 +1111,11 @@ class SnapshotTable:
         file younger than the cutoff is in-flight, not orphaned — deleting
         it would destroy an active commit's output.  Pass ``0.0`` only
         when single-writer access is guaranteed (tests do)."""
-        import glob as _glob
-
-        live: set[str] = set()
+        live = self._branch_files()
         for v in self.versions():
             live |= set(self.manifest(v)["files"])
-        for bp in _glob.glob(
-            os.path.join(self.path, _LOG_DIR, "branch-*.json")
-        ):
-            b = _read_log(bp, self.path)
-            live |= set(b.get("files", []))
-            live |= set(b.get("staged_files", []))
         on_disk = set(
-            _glob.glob(os.path.join(os.path.abspath(self.path), "*.parquet"))
+            glob.glob(os.path.join(os.path.abspath(self.path), "*.parquet"))
         )
         cutoff = time.time() - older_than_s
 

@@ -11,10 +11,12 @@ import os
 
 import pytest
 
+from lakehouse_sfc_spark.sources import loader
 from lakehouse_sfc_spark.sources.loader import (
     _atomic_cache_write,
     _tmp_builder_dead,
     build_once,
+    scratch_dir,
 )
 
 
@@ -126,3 +128,32 @@ def test_build_once_adds_missing_success_marker(tmp_path):
     assert os.path.exists(os.path.join(path, "_SUCCESS"))
     assert open(os.path.join(path, "part-0")).read() == "bare"
     assert not _tmp_siblings(tmp_path / "nested")
+
+
+def test_scratch_dir_drops_other_versions_of_its_kind(tmp_path, monkeypatch):
+    """A version bump leaves no tree of the old version behind; siblings
+    that are not ``v<M>`` tags, and other kinds, stay."""
+    root = tmp_path / ".scratch"
+    monkeypatch.setattr(loader, "_SCRATCH", str(root))
+    for d in (
+        "snap_cache/v2/sf0.01/aaa",
+        "snap_cache/v3/sf0.001/bbb/orders_snap",
+        "snap_cache/merge_chain",
+        "layout_cache/v1/sf0.01/ccc",
+        "layout_cache/month_partitioned/sf0.01/ddd",
+        "layout_cache/drift_states/v2/sf0.01/eee",
+    ):
+        (root / d).mkdir(parents=True)
+    sf = str(tmp_path / "sf0.01")
+
+    path = scratch_dir("snap_cache/v4", sf, ("orders",))
+    assert path.startswith(str(root / "snap_cache" / "v4" / "sf0.01"))
+    assert sorted(os.listdir(root / "snap_cache")) == ["merge_chain"]
+
+    scratch_dir("layout_cache/month_partitioned", sf, ("lineitem",))
+    assert (root / "layout_cache" / "v1").is_dir()
+    scratch_dir("layout_cache/v2", sf, ("lineitem",))
+    assert sorted(os.listdir(root / "layout_cache")) == [
+        "drift_states", "month_partitioned",
+    ]
+    assert (root / "layout_cache/drift_states/v2/sf0.01/eee").is_dir()

@@ -991,3 +991,100 @@ def test_publish_never_replaces_a_committed_version(table):
         assert fh.read() == before
     assert not [f for f in os.listdir(log) if f.endswith(".tmp")]
     assert table.versions() == [0]
+
+
+# --- the manifest schema is the snapshot schema -----------------------------
+
+
+def _jobs_in(spark, build):
+    """``build()``'s result and the number of Spark jobs it ran, counted by
+    ``statusTracker`` under a job group of its own."""
+    import uuid
+
+    sc = spark.sparkContext
+    gid = f"build-{uuid.uuid4().hex}"
+    sc.setJobGroup(gid, gid)
+    try:
+        out = build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(gid))
+
+
+def _evolve(table, orders):
+    """v1: append 5 rows under new keys with a new column ``o_flag``."""
+    table.append(
+        orders.limit(5)
+        .withColumn("o_orderkey", F.col("o_orderkey") + 2_000_000)
+        .withColumn("o_flag", F.lit("x"))
+    )
+
+
+def test_scan_without_predicates_reads_everything(table, orders):
+    assert table.scan([]).count() == orders.count()
+
+
+def test_evolved_column_survives_narrow_rewrites(table, orders):
+    """An evolving append, then a narrow upsert that touches no evolved
+    file, then a delete of every row: each later manifest and read keeps
+    ``o_flag``; v0 stays narrow."""
+    _evolve(table, orders)
+    table.upsert(
+        orders.filter(F.col("o_orderkey") <= 50)
+        .withColumn("o_totalprice", F.col("o_totalprice") + 1.0),
+        ["o_orderkey"], "o_totalprice",
+    )
+    table.delete_where([Pred("o_orderkey", ">=", 0)])
+    assert table.versions() == [0, 1, 2, 3]
+    for v in table.versions():
+        names = [f["name"] for f in table.manifest(v)["schema"]["fields"]]
+        assert ("o_flag" in names) == (v > 0), (v, names)
+        assert table.read(v).columns == names, v
+    assert table.read(2).filter(F.col("o_flag") == "x").count() == 5
+    assert table.read(3).count() == 0
+
+
+def test_type_change_refused_before_staging(table, orders):
+    files = set(os.listdir(table.path))
+    with pytest.raises(ValueError, match="o_totalprice"):
+        table.append(
+            orders.limit(5).withColumn(
+                "o_totalprice", F.col("o_totalprice").cast("string")
+            )
+        )
+    assert table.versions() == [0]
+    assert set(os.listdir(table.path)) == files
+
+
+def test_snapshot_reads_build_without_a_job(table, orders, spark):
+    table.upsert(
+        orders.filter(F.col("o_orderkey") <= 100)
+        .withColumn("o_totalprice", F.col("o_totalprice") + 5.0),
+        ["o_orderkey"], "o_totalprice",
+    )
+    preds = [Pred("o_orderkey", "<=", 500)]
+    for build in (
+        lambda: table.read(),
+        lambda: table.read(0),
+        lambda: table.scan(preds),
+        lambda: table.changes(0, 1, ["o_orderkey"]),
+    ):
+        df, jobs = _jobs_in(spark, build)
+        assert jobs == 0, df.columns
+    want = orders.filter(F.col("o_orderkey") <= 500).count()
+    assert table.scan(preds).count() == want
+
+
+def test_one_file_set_under_two_schemas(table, orders):
+    """Deleting the evolved rows leaves v0's exact file set under v1's
+    wider schema: each version reads its own manifest's columns."""
+    _evolve(table, orders)
+    table.delete_where([Pred("o_orderkey", ">=", 2_000_000)])
+    assert set(table.manifest(2)["files"]) == set(table.manifest(0)["files"])
+    narrow, wide = table.read(0), table.read(2)
+    assert "o_flag" not in narrow.columns
+    assert wide.columns == narrow.columns + ["o_flag"]
+    assert wide.filter(F.col("o_flag").isNotNull()).count() == 0
+    assert wide.count() == narrow.count() == orders.count()
+    assert "o_flag" not in table.read(0).columns  # and back again

@@ -196,7 +196,7 @@ def test_assign_kernel_bit_identical_to_jvm_min_by(spark):
     got = {
         r["vec_id"]: (r["cid"], r["dist"])
         for r in df.mapInArrow(
-            _nearest_centroid_kernel(book, emit_dist=True),
+            _nearest_centroid_kernel(book, "emb", None, emit_dist=True),
             "vec_id long, emb array<double>, cid long, dist double",
         ).collect()
     }
@@ -231,13 +231,49 @@ def test_assign_kernel_subspaced_matches_jvm(spark):
     got = {
         (r["vec_id"], r["s"]): (r["cid"], r["dist"])
         for r in df.mapInArrow(
-            _nearest_centroid_kernel(book, emit_dist=True),
+            _nearest_centroid_kernel(book, "e", "s", emit_dist=True),
             "vec_id long, s int, e array<double>, cid long, dist double",
         ).collect()
     }
     assert {k: (c, repr(d)) for k, (c, d) in got.items()} == {
         k: (c, repr(d)) for k, (c, d) in jvm.items()
     }
+
+
+def test_assign_kernel_scores_the_named_columns(spark):
+    """A batch carrying ``e`` and ``emb`` of the same width plus an
+    unrelated ``s`` is scored on the named vector, under the named key."""
+    vec_rows = [
+        (0, [0.0, 0.0], [10.0, 10.0], 5),
+        (1, [10.0, 10.0], [0.0, 0.0], 6),
+    ]
+    book = {
+        None: (
+            np.array([1, 2], dtype=np.int64),
+            np.array([[0.0, 0.0], [10.0, 10.0]], dtype=np.float64),
+        )
+    }
+    df = spark.createDataFrame(
+        vec_rows, "vec_id long, e array<double>, emb array<double>, s int"
+    )
+    got = {
+        r["vec_id"]: r["cid"]
+        for r in df.mapInArrow(
+            _nearest_centroid_kernel(book, "emb", None),
+            "vec_id long, e array<double>, emb array<double>, s int, cid long",
+        ).collect()
+    }
+    assert got == {0: 2, 1: 1}
+    keyed = {7: book[None]}
+    got = {
+        r["vec_id"]: r["cid"]
+        for r in df.withColumn("g", F.lit(7)).mapInArrow(
+            _nearest_centroid_kernel(keyed, "e", "g"),
+            "vec_id long, e array<double>, emb array<double>, s int, g int, "
+            "cid long",
+        ).collect()
+    }
+    assert got == {0: 1, 1: 2}
 
 
 # --- one vector-scoring core --------------------------------------------------
